@@ -126,11 +126,11 @@ object Profile {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      // listener delivery is async: drain the bus so every event of the
+      // timed run is recorded before recording stops, then snapshot the
+      // synchronized lists under their lock
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
       recording = false
-      // listener delivery is async: an event that read `recording` just
-      // before the flip may still append while we iterate — give the bus a
-      // moment to drain and snapshot the synchronized lists under their lock
-      Thread.sleep(500)
       val rows = {
         import scala.jdk.CollectionConverters._
         jobs.values.asScala.toSeq.sortBy(_.id)

@@ -352,7 +352,9 @@ object TxLog {
   private[graft] val inlinePartitionMapThreshold = 256
 
   /** Read an explicit subset of manifest files, re-attaching partition
-    * columns (as strings) from their manifest partition values. Small
+    * columns (as strings) from their manifest partition values. The files
+    * are read with [[graft.Tables.readParquet]], keyed on the table, so
+    * re-reading an unchanged file set infers no schema. Small
     * snapshots inline the file→value map into the plan (codegen'd, no join);
     * large ones broadcast-join the manifest — constant-size plans at any
     * file count, the same shape Delta's own scan uses (partition values ride
@@ -360,7 +362,8 @@ object TxLog {
   def readSubset(spark: SparkSession, table: Path, files: Seq[AddFile],
                  partitionCols: Seq[String],
                  inlineThreshold: Int = inlinePartitionMapThreshold): DataFrame = {
-    val base = spark.read.parquet(files.map(f => table.resolve(f.path).toString): _*)
+    val base = graft.Tables.readParquet(spark, table.toString,
+      files.map(f => table.resolve(f.path).toString))
     if (partitionCols.isEmpty) base
     else if (files.size <= inlineThreshold)
       partitionCols.foldLeft(base) { (df, c) =>

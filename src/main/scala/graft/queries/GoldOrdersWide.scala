@@ -16,9 +16,10 @@ import graft.runtime._
   *  - four ROW_NUMBER numberings (gold_orders.sql:22-68 device/product/user/
   *    real_user numbering; numbering CTEs are deliberately UNfiltered in
   *    incremental runs so the global order numbers stay stable — same as the
-  *    reference). r18: fused into one multi-window CTE equivalent to the
-  *    reference's LEFT JOIN USING chain of four scans (see the `numbers`
-  *    comment); the oracle still computes the original four-CTE join form;
+  *    reference), joined back in the reference's LEFT JOIN USING chain in
+  *    the `numbers` CTE. Fusing the four into one multi-window CTE was
+  *    measured slower at this scale and is not done (OPTIMIZATION_r18.md
+  *    §1d);
   *  - a JSON-guard CTE marking flagged entities
   *    (gold_orders.sql:70-82 merchant_order_notes / pickup_fault, map access
   *    re-expressed over the events props JSON);

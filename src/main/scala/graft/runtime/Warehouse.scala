@@ -200,7 +200,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Dynamic-partition insert-overwrite: only partitions present in `df` are
     * replaced (reference: incremental_strategy='insert_overwrite' + the
-    * spark.sql.sources.partitionOverwriteMode=dynamic conf). */
+    * spark.sql.sources.partitionOverwriteMode=dynamic conf, given here as
+    * the write's own `partitionOverwriteMode` option). */
   def insertOverwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String],
                                 onSchemaChange: OnSchemaChange,
                                 hashSpread: Option[(String, Int)] = None): Unit = {
@@ -213,13 +214,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
     val aligned = alignSchema(name, df, onSchemaChange)
     val out = distributeForWrite(aligned, partitionBy, hashSpread)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(dataDir(name))
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write option, not the session conf: concurrent writes share the session
+    out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionBy: _*).parquet(dataDir(name))
   }
 
   /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE

@@ -15,10 +15,11 @@ object Streaming {
   /** Schema of the raw events parquet with the `ts` physical type the file
     * actually carries (TIMESTAMP(NANOS) reads as nanos BIGINT under
     * spark.sql.legacy.parquet.nanosAsLong; TIMESTAMP(MICROS) reads natively)
-    * — the streaming file source needs an explicit schema, so probe the
-    * footer once with a batch read. */
+    * — the streaming file source needs an explicit schema, so take it from
+    * the batch source's footer schema. */
   def rawEventsSchema(spark: SparkSession, dir: String): StructType = {
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val path = s"$dir/events.parquet"
+    val tsType = graft.Tables.readParquet(spark, path, Seq(path)).schema("ts").dataType
     StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),

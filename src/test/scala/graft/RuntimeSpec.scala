@@ -63,6 +63,41 @@ class RuntimeSpec extends SparkSpec {
     assert(out == Map("p1" -> 3L, "p2" -> 99L, "p3" -> 100L))
   }
 
+  test("insert_overwrite leaves the session's partitionOverwriteMode alone") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val ctx = freshCtx()
+    val wh = ctx.warehouse
+    wh.createTable("io_conf", Seq(("p1", 1), ("p2", 2)).toDF("part_col", "v"), Seq("part_col"))
+    val before = spark.conf.getOption(key)
+    // SQL jobs carry the session's SQL conf as job properties, so a write
+    // that flips the session conf shows it on its own jobs
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      wh.insertOverwritePartitions("io_conf", Seq(("p2", 20)).toDF("part_col", "v"),
+        Seq("part_col"), OnSchemaChange.Ignore)
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.conf.getOption(key) == before)
+    assert(!seen.contains("dynamic"), s"write jobs saw $key=$seen")
+    // still dynamic: only the incoming partition was replaced
+    assert(wh.read("io_conf").select($"part_col", $"v").as[(String, Int)].collect().toMap ==
+      Map("p1" -> 1, "p2" -> 20))
+    // a plain static overwrite elsewhere still replaces the whole directory
+    val dir = runtime.TempDirs.create("graft_static_ow")
+    Seq(("p1", 1), ("p2", 2)).toDF("part_col", "v")
+      .write.mode("overwrite").partitionBy("part_col").parquet(dir)
+    Seq(("p3", 3)).toDF("part_col", "v")
+      .write.mode("overwrite").partitionBy("part_col").parquet(dir)
+    assert(spark.read.parquet(dir).select($"part_col", $"v").as[(String, Int)].collect().toSeq ==
+      Seq(("p3", 3)))
+  }
+
   test("on_schema_change: append_new_columns and ignore") {
     val ctx = freshCtx()
     // ignore: new column in increment is dropped

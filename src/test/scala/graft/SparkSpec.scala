@@ -28,6 +28,22 @@ trait SparkSpec extends AnyFunSuite {
     assert(r.isNullAt(2), "CAST('abc' AS INT) must be NULL (non-ANSI dialect)")
   }
 
+  /** Spark jobs started while `body` runs, counted by a listener; the bus
+    * is drained on both sides so no job leaks in or out of the count. */
+  def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.graft.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
   def freshCtx(vars: Map[String, String] = Map.empty): Ctx = {
     val wh = new Warehouse(spark, graft.runtime.TempDirs.create("graft_wh"))
     Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"), vars)

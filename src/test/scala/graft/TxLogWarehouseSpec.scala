@@ -69,6 +69,20 @@ class TxLogWarehouseSpec extends SparkSpec {
     assert(v0.agg(max($"om")).head().getString(0) < "1999-01")
   }
 
+  test("a second read of an unchanged log table starts no Spark job before its action") {
+    val (_, lg) = ctxPair()
+    // few files on purpose: above Spark's parallel-listing threshold (32
+    // paths) the file listing itself runs as a job
+    val m = Model("t_reread",
+      c => c.source("default", "orders").select($"o_orderkey", $"o_orderstatus"),
+      Materialization.IncrementalInsertOverwrite(Seq("o_orderstatus")), fileFormat = "delta")
+    new DagRunner(Seq(m)).materialize(lg, m)
+    val first = lg.warehouse.read("t_reread")
+    var second: DataFrame = null
+    assert(jobsStartedBy { second = lg.warehouse.read("t_reread") } == 0)
+    assert(sortedRows(second) == sortedRows(first))
+  }
+
   test("append accumulates identically") {
     val (pq, lg) = ctxPair()
     def model(filterExpr: String) = Model("t_ap",
