@@ -229,25 +229,17 @@ object TextExpressions {
       Map("funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "\"INT\""))
   }
 
-  /** Register `word_shingles(text, n)` and `simhash64(text)`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      es => WordShingles(es.head, intLit("word_shingles", "n", es(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", es => SimHash64(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_id", es => LangId(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fingerprint64", es => Fingerprint64(es.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      es => MinHashSig(es.head,
+  /** Register `word_shingles(text, n)`, `simhash64`, `lang_id`,
+    * `fingerprint64` and `minhash_sig` (once per session). */
+  def register(spark: SparkSession): Unit =
+    SessionFunctions.registerOnce(spark,
+      "word_shingles" -> (es => WordShingles(es.head, intLit("word_shingles", "n", es(1)))),
+      "simhash64" -> (es => SimHash64(es.head)),
+      "lang_id" -> (es => LangId(es.head)),
+      "fingerprint64" -> (es => Fingerprint64(es.head)),
+      "minhash_sig" -> (es => MinHashSig(es.head,
         intLit("minhash_sig", "shingle_size", es(1)),
-        intLit("minhash_sig", "num_hashes", es(2))),
-      "built-in")
-  }
+        intLit("minhash_sig", "num_hashes", es(2)))))
 
   /** Column API (register per session first). */
   def wordShingles(c: Column, n: Int): Column =

@@ -38,12 +38,10 @@ object TimeFunctions {
   /** Register millis_to_ts / millis_to_ts_msk for spark.sql(...) texts, as
     * codegen-friendly expression builders (not UDFs). */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
     def one(f: Expression => Expression): Seq[Expression] => Expression = es => f(es.head)
-    reg.createOrReplaceTempFunction(
-      "millis_to_ts", one(e => MillisToTimestamp(Cast(e, LongType))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "millis_to_ts_msk",
-      one(e => MillisToTimestamp(Add(Cast(e, LongType), Literal(MskOffsetMillis)))), "built-in")
+    SessionFunctions.registerOnce(spark,
+      "millis_to_ts" -> one(e => MillisToTimestamp(Cast(e, LongType))),
+      "millis_to_ts_msk" ->
+        one(e => MillisToTimestamp(Add(Cast(e, LongType), Literal(MskOffsetMillis)))))
   }
 }

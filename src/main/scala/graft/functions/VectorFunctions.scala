@@ -77,8 +77,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 object VectorFunctions {
   /** Register `vec_dot` so it is callable via `call_function` / SQL. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", es => VecDot(es.head, es(1)), "built-in")
+    SessionFunctions.registerOnce(spark, "vec_dot" -> (es => VecDot(es.head, es(1))))
 
   /** Column API over the registered expression (call [[register]] first,
     * which every graft.ops.Similarity entry point does). */

@@ -17,6 +17,11 @@ import graft.functions.TextFunctions
   *    verify — again equi-join candidates only.
   *  - n-gram Jaccard: inverted-index join on shared shingles (equi-join on the
   *    shingle string), exact verification.
+  *
+  * Checkpoint constraint: every `localCheckpoint` here cuts the lineage and
+  * keeps the blocks only in executor storage, not in reliable storage. If an
+  * executor holding them is lost (e.g. removed under dynamic allocation),
+  * Spark cannot recompute them and the query fails.
   */
 object Dedup {
 
@@ -60,7 +65,8 @@ object Dedup {
     // no exchange reuse applies). A lazy localCheckpoint computes it once
     // per invocation and block-caches it for the other references — plan-
     // instance data only, nothing registers with the CacheManager, every
-    // run recomputes from parquet.
+    // run recomputes from parquet. The checkpoint cuts lineage: losing an
+    // executor (e.g. under dynamic allocation) fails the query.
     val sh = shingleSet(docs, idCol, textCol, shingleSize)
       .select(col("id"), xxhash64(col("sh")).as("shh"))
       .localCheckpoint(eager = false)
@@ -157,7 +163,8 @@ object Dedup {
     // candidate pair set is referenced three times below (both candIds
     // arms and the verification join) and each reference re-executed the
     // whole banding self-join + distinct; one lazy checkpoint runs it once
-    // per invocation. Honesty contract identical to CteMaterializer's.
+    // per invocation. Honesty contract identical to CteMaterializer's. The
+    // checkpoint cuts lineage: losing an executor fails the query.
     val candidates = safeBuckets.toDF("id_a", "band_id", "bucket")
       .join(safeBuckets.toDF("id_b", "band_id", "bucket"), Seq("band_id", "bucket"))
       .filter(col("id_a") < col("id_b"))
@@ -174,6 +181,7 @@ object Dedup {
       .unionByName(candidates.select(col("id_b").as("id"))).distinct()
     // referenced three times (sizes + both verification arms): checkpoint so
     // the shingling scan and the candidate semi-join run once per invocation
+    // (lineage is cut: losing an executor fails the query)
     val shHashed = sh.select(col("id"), xxhash64(col("sh")).as("shh"))
       .join(candIds, Seq("id"), "left_semi")
       .localCheckpoint(eager = false)
@@ -206,7 +214,9 @@ object Dedup {
     * clusters, not social graphs), so the diameter is small; each round is
     * one equi-join + partial-aggregated groupBy on the node id — no driver
     * data, no quadratic term. `localCheckpoint` truncates the growing plan
-    * lineage each round (the classic iterative-DataFrame trap). For
+    * lineage each round (the classic iterative-DataFrame trap); with the
+    * lineage cut, losing an executor (e.g. under dynamic allocation) fails
+    * the query. For
     * adversarially long chains the O(log n) alternative is implemented as
     * [[dupGroupsTwoPhase]] (property-verified equivalent; min-label measured
     * faster on real near-dup graphs because their components are shallow).
@@ -217,6 +227,7 @@ object Dedup {
     *   group_id = MIN(id) over its component
     */
   def dupGroups(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    // each localCheckpoint below cuts lineage (see the object scaladoc)
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().localCheckpoint()
@@ -261,7 +272,8 @@ object Dedup {
     * OpsProperties asserts the two algorithms agree on random graphs.
     */
   def dupGroupsTwoPhase(pairs: DataFrame, maxIter: Int = 40): DataFrame = {
-    // canonical (hi, lo) undirected edges, self-loops dropped
+    // canonical (hi, lo) undirected edges, self-loops dropped; each
+    // localCheckpoint cuts lineage (see the object scaladoc)
     var edges = pairs
       .select(greatest(col("id_a"), col("id_b")).as("hi"),
         least(col("id_a"), col("id_b")).as("lo"))

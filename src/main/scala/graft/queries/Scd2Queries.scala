@@ -33,8 +33,9 @@ object Scd2Queries {
     // (full sort of orders by custkey, both snapshot runs). o_orderstatus is
     // the TPC-H CHAR(1) domain, so aggregate its ascii code (int buffer →
     // HashAggregate) and decode with char() after. ascii/char round-trips
-    // any single-char value and NULL; the winning row is picked by `key`
-    // alone, so the result is identical (oracle: arg_max over the string).
+    // NULL and a single character with code point 1–255 only (an empty
+    // string or a higher code point does not); the winning row is picked by
+    // `key` alone, so the result is identical (oracle: arg_max over the string).
     base.groupBy(col("o_custkey").as("_id"))
       .agg(
         max_by(ascii(col("o_orderstatus")), key).as("status_code"),

@@ -198,11 +198,15 @@ object WindowQueries {
     // the aggregate and decode after — the winning row is picked by ts_ns
     // alone and the encode is a bijection (NULL round-trips), so the result
     // is identical (oracle still computes arg_min/arg_max over the string).
+    // A non-NULL type outside the five fails the query, naming the value,
+    // instead of silently becoming NULL.
     val code = when(col("event_type") === "click", 0)
       .when(col("event_type") === "error", 1)
       .when(col("event_type") === "purchase", 2)
       .when(col("event_type") === "signup", 3)
       .when(col("event_type") === "view", 4)
+      .when(col("event_type").isNotNull, raise_error(
+        concat(lit("q16: event_type outside the encoded domain: "), col("event_type"))))
     def decode(c: org.apache.spark.sql.Column) =
       when(c === 0, "click").when(c === 1, "error").when(c === 2, "purchase")
         .when(c === 3, "signup").when(c === 4, "view")

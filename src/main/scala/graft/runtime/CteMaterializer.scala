@@ -241,7 +241,9 @@ object CteMaterializer {
       val stmt = s"$prefix SELECT * FROM (${bodies(k)}) __graft_cte_body"
       // lazy checkpoint: nothing runs now; the first action over the final
       // statement computes the subtree ONCE and block-caches it for the
-      // remaining references. No CacheManager entry — see scaladoc.
+      // remaining references. No CacheManager entry — see scaladoc. The
+      // checkpoint cuts lineage and keeps its blocks only on executors:
+      // losing one (e.g. under dynamic allocation) fails the query.
       val df = spark.sql(stmt).localCheckpoint(eager = false)
       val v = viewNameOf(modelName, d.name)
       df.createOrReplaceTempView(v)

@@ -27,14 +27,23 @@ import org.apache.spark.sql.SparkSession
   * the runtime additionally calls [[Dialect.pin]] at execution entry points
   * as a safety net for sessions the engine did not build (ANSI is a runtime
   * SQLConf, so a live set is effective).
+  *
+  * [[Dialect.apply]] also installs [[LocalFs]] as Hadoop's `fs.file.impl`,
+  * so local warehouse writes set file modes in-process instead of forking a
+  * `chmod` per file and directory. That has to happen at build time: Hadoop
+  * caches one `FileSystem` per scheme for the life of the JVM, so it is not
+  * part of [[Dialect.pin]], and a session built without [[Dialect.apply]]
+  * keeps Hadoop's forking default.
   */
 object Dialect {
   val settings: Map[String, String] = Map(
     "spark.sql.ansi.enabled" -> "false")
 
-  /** Apply the dialect to a session builder (mains, specs). */
+  /** Apply the dialect and the local filesystem to a session builder
+    * (mains, specs). */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
 
   /** Pin the dialect on a live session (runtime entry points). */
   def pin(spark: SparkSession): Unit =

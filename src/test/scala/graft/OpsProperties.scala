@@ -11,9 +11,9 @@ object OpsProperties extends Properties("graft.ops") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
+  private lazy val spark: SparkSession = graft.runtime.Dialect(SparkSession.builder()
     .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.shuffle.partitions", "4"))
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
