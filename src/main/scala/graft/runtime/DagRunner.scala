@@ -1,7 +1,9 @@
 package graft.runtime
 
 import java.sql.Timestamp
+import java.util.concurrent.{Executors, LinkedBlockingQueue}
 import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.TimeFunctions
 
 /** Model-DAG runner — the engine-level equivalent of `dbt run`'s manifest
@@ -75,8 +77,25 @@ final class DagRunner(models: Seq[Model]) {
     selected ++ (reachesSelected intersect reachableFromSelected)
   }
 
-  /** Run the (selected) DAG. Failures skip their downstream but not
-    * independent branches. Returns per-model status.
+  /** Run the (selected) DAG. Returns per-model status in [[topoOrder]].
+    *
+    * Concurrency contract:
+    *  - Each selected model starts as soon as its last selected dependency
+    *    has finished, so independent branches overlap; a chain runs one
+    *    model at a time, as a serial walk would.
+    *  - Models run on a fixed pool created per run and sized to the driver's
+    *    cores (at most one thread per selected model): what overlaps is
+    *    driver-side work (planning, the gaps between adaptive stages,
+    *    commits) while the other branch waits on its jobs.
+    *    The pool's threads start inside the run, so they inherit the
+    *    caller's Spark local properties (job group, scheduler pool, tags).
+    *  - Model builds (templating plus analysis) take one lock per
+    *    `SparkSession`: they register session-global temp views and
+    *    functions. A built frame no longer depends on those views, so the
+    *    materializations (stages, writes, commits) overlap.
+    *  - A model that throws an `Exception` is `Failed` and skips its
+    *    downstream but not independent branches. An `Error` starts no
+    *    further model, waits for the running ones, and propagates.
     *
     * @param fullRefresh rebuild incremental models from scratch (dbt
     *   `--full-refresh`). Per-model weekly reloads also trigger when
@@ -88,29 +107,62 @@ final class DagRunner(models: Seq[Model]) {
     TimeFunctions.register(ctx.spark)
     val base = select(selectors)
     val subset = if (fillIntermediate) fillGaps(base) else base
-    val failed = mutable.Set.empty[String]
-    topoOrder(subset).map { m =>
-      if (m.deps.exists(failed.contains)) {
-        failed += m.name
-        m.name -> RunStatus.Skipped
-      } else {
-        val t0 = System.nanoTime()
-        try {
-          val reload = fullRefresh ||
-            m.meta.get("full_reload_on").exists(ctx.vars.get("run_dow").contains(_))
-          materialize(ctx, m, reload)
-          m.name -> RunStatus.Success((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Exception =>
-            failed += m.name
-            m.name -> RunStatus.Failed(e.getMessage)
-        } finally {
-          // hot-CTE checkpoints are per-materialization scratch: the write
-          // above has already consumed them (or failed); release the temp
-          // views so the block-cached RDDs become collectable
-          CteMaterializer.release(ctx.spark, m.name)
+    val order = topoOrder(subset)
+    val waitingOn = mutable.Map(order.map(m => m.name -> m.deps.count(subset.contains)): _*)
+    val status = mutable.Map.empty[String, RunStatus]
+    val finished = new LinkedBlockingQueue[(String, Either[Throwable, RunStatus])]
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(order.size, Runtime.getRuntime.availableProcessors)))
+    var running = 0
+    var fatal: Option[Throwable] = None
+
+    def settle(name: String, s: RunStatus): Unit = {
+      status(name) = s
+      for (c <- children.getOrElse(name, Nil) if subset.contains(c)) {
+        waitingOn(c) -= 1
+        if (waitingOn(c) == 0) start(byName(c))
+      }
+    }
+    def start(m: Model): Unit =
+      if (m.deps.exists(d => subset.contains(d) && !status(d).isInstanceOf[RunStatus.Success]))
+        settle(m.name, RunStatus.Skipped)
+      else if (fatal.isEmpty) {
+        running += 1
+        pool.execute(() => finished.put(m.name -> attempt(ctx, m, fullRefresh)))
+      }
+
+    try {
+      order.filter(m => waitingOn(m.name) == 0).foreach(start)
+      while (running > 0) {
+        val (name, outcome) = finished.take()
+        running -= 1
+        outcome match {
+          case Right(s) => settle(name, s)
+          case Left(e) => fatal = fatal.orElse(Some(e))
         }
       }
+    } finally pool.shutdown()
+    fatal.foreach(throw _)
+    order.map(m => m.name -> status(m.name))
+  }
+
+  /** One model's materialization on a pool thread: `Left` only for a
+    * non-`Exception` throwable, which [[run]] rethrows. */
+  private def attempt(ctx: Ctx, m: Model, fullRefresh: Boolean): Either[Throwable, RunStatus] = {
+    val t0 = System.nanoTime()
+    try {
+      val reload = fullRefresh ||
+        m.meta.get("full_reload_on").exists(ctx.vars.get("run_dow").contains(_))
+      materialize(ctx, m, reload)
+      Right(RunStatus.Success((System.nanoTime() - t0) / 1e9))
+    } catch {
+      case e: Exception => Right(RunStatus.Failed(e.getMessage))
+      case e: Throwable => Left(e)
+    } finally {
+      // hot-CTE checkpoints are per-materialization scratch: the write
+      // above has already consumed them (or failed); release the temp
+      // views so the block-cached RDDs become collectable
+      CteMaterializer.release(ctx.spark, m.name)
     }
   }
 
@@ -128,56 +180,68 @@ final class DagRunner(models: Seq[Model]) {
     // when the warehouse opts in (snapshots keep the parquet path — their
     // full-table rewrite already commits atomically via replaceTable)
     val asLog = ctx.warehouse.logFormatEnabled && m.fileFormat == "delta"
+    // builds register session-global temp views: one at a time per session
+    // (also when a View's builder re-derives at a later read)
+    def build(c: Ctx): DataFrame = DagRunner.buildLock(c.spark).synchronized(m.build(c))
     m.materialization match {
     case Materialization.Table(partitionBy, orderBy) =>
-      if (asLog) ctx.warehouse.createTableLog(m.name, m.build(ctx), partitionBy, None, orderBy)
-      else ctx.warehouse.createTable(m.name, m.build(ctx), partitionBy, None, orderBy)
+      if (asLog) ctx.warehouse.createTableLog(m.name, build(ctx), partitionBy, None, orderBy)
+      else ctx.warehouse.createTable(m.name, build(ctx), partitionBy, None, orderBy)
     case Materialization.View =>
       // builder-backed: the view plan re-derives after upstream table
       // mutations (a captured DataFrame pins stale file listings)
-      ctx.warehouse.registerView(m.name, () => m.build(ctx))
+      ctx.warehouse.registerView(m.name, () => build(ctx))
     case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange, spread) =>
       if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
         if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy, spread)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)),
+          build(ctx.copy(isIncremental = false)), partitionBy, spread)
+        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)),
           partitionBy, spread)
       } else if (asLog)
         ctx.warehouse.insertOverwritePartitionsLog(m.name,
-          m.build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
+          build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
       else
         ctx.warehouse.insertOverwritePartitions(m.name,
-          m.build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
+          build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
     case Materialization.IncrementalMerge(uniqueKey, partitionBy, onSchemaChange, incOnly) =>
       if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
         if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)), partitionBy)
+          build(ctx.copy(isIncremental = false)), partitionBy)
+        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)), partitionBy)
       } else if (asLog)
         ctx.warehouse.mergeUpsertLog(m.name,
-          m.build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
+          build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
       else
         ctx.warehouse.mergeUpsert(m.name,
-          m.build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
+          build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
     case Materialization.IncrementalAppend(partitionBy) =>
       if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
         if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)), partitionBy)
+          build(ctx.copy(isIncremental = false)), partitionBy)
+        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)), partitionBy)
       } else if (asLog)
-        ctx.warehouse.appendLog(m.name, m.build(ctx.copy(isIncremental = true)), partitionBy)
+        ctx.warehouse.appendLog(m.name, build(ctx.copy(isIncremental = true)), partitionBy)
       else
-        ctx.warehouse.append(m.name, m.build(ctx.copy(isIncremental = true)), partitionBy)
+        ctx.warehouse.append(m.name, build(ctx.copy(isIncremental = true)), partitionBy)
     case Materialization.Snapshot(uniqueKey, strategy, invalidateHardDeletes) =>
       // snapshots write through Scd2's format-agnostic createTable/
       // replaceTable; route them onto the log when the model is delta
       // (all 54 reference snapshots are) so SCD2 advances commit atomically
       // with history, like Delta's snapshot MERGE
       if (asLog) ctx.warehouse.routeAsLog(m.name)
-      Scd2.snapshot(ctx, m.name, m.build(ctx), uniqueKey, strategy,
+      Scd2.snapshot(ctx, m.name, build(ctx), uniqueKey, strategy,
         invalidateHardDeletes, runTs(ctx))
     }
   }
+}
+
+object DagRunner {
+  private val buildLocks = new java.util.WeakHashMap[SparkSession, AnyRef]
+
+  /** The per-session lock [[DagRunner.materialize]] holds while a model
+    * builds. */
+  private def buildLock(spark: SparkSession): AnyRef =
+    buildLocks.synchronized(buildLocks.computeIfAbsent(spark, _ => new AnyRef))
 }
 
 sealed trait RunStatus

@@ -33,7 +33,9 @@ import org.apache.spark.sql.SparkSession
   * `chmod` per file and directory. That has to happen at build time: Hadoop
   * caches one `FileSystem` per scheme for the life of the JVM, so it is not
   * part of [[Dialect.pin]], and a session built without [[Dialect.apply]]
-  * keeps Hadoop's forking default.
+  * keeps Hadoop's forking default. `FileContext` writes (Structured
+  * Streaming checkpoints) get [[LocalFs.ForFileContext]] as
+  * `fs.AbstractFileSystem.file.impl` the same way.
   */
 object Dialect {
   val settings: Map[String, String] = Map(
@@ -44,6 +46,8 @@ object Dialect {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFs.ForFileContext].getName)
 
   /** Pin the dialect on a live session (runtime entry points). */
   def pin(spark: SparkSession): Unit =

@@ -37,15 +37,21 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * (InMemoryFileIndex snapshots at plan-build time), so after ANY table
     * mutation the cached plan may chase deleted part files — re-derive from
     * the builder instead (true lazy-view semantics). Builder-less entries
-    * (tests registering a literal frame) keep the frame as-is. */
+    * (tests registering a literal frame) keep the frame as-is. The plan and
+    * the mutation epoch read BEFORE its builder ran are published together:
+    * a write that ends while the builder runs leaves the entry behind the
+    * epoch, so the next read re-derives. */
   private final class ViewEntry(val build: Option[() => DataFrame],
-                                @volatile var df: DataFrame,
-                                @volatile var epoch: Long)
+                                @volatile var derived: (DataFrame, Long))
   private val views = scala.collection.concurrent.TrieMap.empty[String, ViewEntry]
   // AtomicLong, not a @volatile var: DagRunner materializes models in
   // parallel, and two concurrent writes collapsing into one increment would
   // let a racing read observe an already-matching epoch and serve a view
-  // plan still pinning the pre-mutation file listing.
+  // plan still pinning the pre-mutation file listing. Every write moves the
+  // epoch when it ENDS (in a finally, so also when it fails part-way): a
+  // view derived while a write runs has listed the files before its commit
+  // and re-derives, and a view derived before an independent model's write
+  // started is not re-derived for it until that write has ended.
   private val mutationEpochCtr = new java.util.concurrent.atomic.AtomicLong(0L)
   private def mutationEpoch: Long = mutationEpochCtr.get()
   private def noteMutation(): Unit = mutationEpochCtr.incrementAndGet()
@@ -67,24 +73,28 @@ final class Warehouse(val spark: SparkSession, val root: String,
     views.contains(name) || Files.exists(Paths.get(dataDir(name)))
 
   def registerView(name: String, df: DataFrame): Unit =
-    views.put(name, new ViewEntry(None, df, mutationEpoch))
+    views.put(name, new ViewEntry(None, (df, mutationEpoch)))
 
   /** Register a view with its builder so the plan re-derives after table
     * mutations instead of serving a stale captured file listing. */
   def registerView(name: String, build: () => DataFrame): Unit =
-    views.put(name, new ViewEntry(Some(build), build(), mutationEpoch))
+    views.put(name, new ViewEntry(Some(build), derive(build)))
+
+  private def derive(build: () => DataFrame): (DataFrame, Long) = {
+    val epoch = mutationEpoch
+    (build(), epoch)
+  }
 
   /** Remove a table or view entirely (e.g. corpus-execute fixpoint passes
     * rebuild every node from scratch so schema growth never has to merge
     * into last pass's files). */
-  def drop(name: String): Unit = {
+  def drop(name: String): Unit = try {
     views.remove(name)
     // a dropped name must also forget its log routing — a later plain
     // createTable for the same name (e.g. a materialization change across
     // corpus fixpoint passes) would otherwise silently write a
     // transaction-log table instead of parquet
     logRouted.remove(name)
-    noteMutation()
     val p = Paths.get(tablePath(name))
     if (Files.exists(p)) TempDirs.deleteTree(p)
     // Spark's shared FileStatusCache has no TTL: a reader planning against
@@ -92,7 +102,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // files (FAILED_READ_FILE on corpus mid-pass upstream refreshes)
     try spark.catalog.refreshByPath(p.toString)
     catch { case scala.util.control.NonFatal(_) => }
-  }
+  } finally noteMutation()
 
   /** Read a managed table or view. Tables with a `_schema.json` sidecar are
     * read with that canonical schema applied directly — no per-file footer
@@ -104,10 +114,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * directories (externally created) fall back to mergeSchema. */
   def read(name: String): DataFrame = views.get(name) match {
     case Some(v) =>
-      if (v.epoch != mutationEpoch) v.build.foreach { b =>
-        v.df = b(); v.epoch = mutationEpoch
-      }
-      v.df
+      if (v.derived._2 != mutationEpoch) v.build.foreach(b => v.derived = derive(b))
+      v.derived._1
     case None if isLogBacked(name) => readLogCanonical(name)
     case None =>
       canonicalSchema(name) match {
@@ -170,11 +178,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   def createTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
                   hashSpread: Option[(String, Int)] = None,
-                  orderBy: Seq[String] = Nil): Unit = {
+                  orderBy: Seq[String] = Nil): Unit = try {
     if (logRouted.contains(name)) {
       createTableLog(name, df, partitionBy, hashSpread, orderBy); return
     }
-    noteMutation()
     // persisted docs survive a full rebuild (reference persists comments
     // across runs); SaveMode.Overwrite wipes the directory incl. the sidecar.
     // Restore happens in a finally (a failed write must not lose the docs),
@@ -196,7 +203,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
         Files.writeString(docsPath, serializeDocs(survivors))
       }
     }
-  }
+  } finally noteMutation()
 
   /** Dynamic-partition insert-overwrite: only partitions present in `df` are
     * replaced (reference: incremental_strategy='insert_overwrite' + the
@@ -204,8 +211,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * the write's own `partitionOverwriteMode` option). */
   def insertOverwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String],
                                 onSchemaChange: OnSchemaChange,
-                                hashSpread: Option[(String, Int)] = None): Unit = {
-    noteMutation()
+                                hashSpread: Option[(String, Int)] = None): Unit = try {
     if (partitionBy.isEmpty) {
       // dbt-spark semantics: insert_overwrite without partition_by replaces
       // the whole table (reference: dsa_orders.sql declares exactly this)
@@ -217,7 +223,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // per-write option, not the session conf: concurrent writes share the session
     out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*).parquet(dataDir(name))
-  }
+  } finally noteMutation()
 
   /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
     * INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
@@ -252,8 +258,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def mergeUpsert(name: String, df: DataFrame, uniqueKey: Seq[String],
                   partitionBy: Seq[String],
                   onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-                  incrementPartitionsOnly: Boolean = false): Unit = {
-    noteMutation()
+                  incrementPartitionsOnly: Boolean = false): Unit = try {
     // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
     // INSERT): nothing can match, so it degrades to append (reference
     // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
@@ -305,7 +310,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
         val p = Paths.get(dataDir(name), partitionDir(partitionBy, r))
         if (Files.exists(p)) deleteRecursively(p)
       }
-  }
+  } finally noteMutation()
 
   /** `col=value/...` relative path of one partition, hive-escaped.
     *
@@ -425,12 +430,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Row append (reference: incremental_strategy='append'). */
-  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    noteMutation()
+  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
     val aligned = alignSchema(name, df, OnSchemaChange.Ignore)
     val w = aligned.write.mode(SaveMode.Append)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
-  }
+  } finally noteMutation()
 
   /** Docs persistence (reference: persist_docs + alter_column_comment,
     * dbt_project.yml:43-45, macros/spark_adapter_patch/alter_column_comment.sql):
@@ -561,15 +565,14 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * standard co-location tool at 100TB (SURVEY.md §4). Bucketing requires a
     * catalog table; the data still lives under the warehouse root. */
   def createBucketedTable(name: String, df: DataFrame, bucketCols: Seq[String],
-                          numBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    noteMutation()
+                          numBuckets: Int, sortCols: Seq[String] = Nil): Unit = try {
     val w = df.write.mode(SaveMode.Overwrite).format("parquet")
       .option("path", dataDir(name))
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     spark.sql(s"DROP TABLE IF EXISTS $name")
     ws.saveAsTable(name)
-  }
+  } finally noteMutation()
 
   /** Read a bucketed catalog table (bucketing metadata only survives through
     * the catalog, not a bare parquet read). */
@@ -578,8 +581,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   /** Atomic-ish full replace used by SCD2 rewrites: stage to a tmp dir, then
     * swap. (Prod-grade would use Delta/Iceberg commit protocols; parquet +
     * rename is the local-FS equivalent — SURVEY.md §7 "SCD2 without Delta".) */
-  def replaceTable(name: String, df: DataFrame): Unit = {
-    noteMutation()
+  def replaceTable(name: String, df: DataFrame): Unit = try {
     if (logRouted.contains(name)) {
       // TxLog.overwrite IS an atomic full replace (tombstone-all + add-new
       // in one commit) — the log format's native equivalent of the staged
@@ -596,7 +598,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // the publish step is the pluggable commit point (see
     // [[TableCommitProtocol]] — a Delta/Iceberg log-append drops in here)
     commitProtocol.commitReplace(Paths.get(tmp), Paths.get(tablePath(name)))
-  }
+  } finally noteMutation()
 
   // ---- transaction-log table format (reference: file_format='delta') ----
   //
@@ -644,30 +646,27 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   def createTableLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
                      hashSpread: Option[(String, Int)] = None,
-                     orderBy: Seq[String] = Nil): Unit = {
-    noteMutation()
+                     orderBy: Seq[String] = Nil): Unit = try {
     val out =
       if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
       else distributeForWrite(df, partitionBy, hashSpread)
     graft.plans.TxLog.overwrite(logPath(name), out, partitionBy)
     writeSchema(name, df.schema)
-  }
+  } finally noteMutation()
 
   def insertOverwritePartitionsLog(name: String, df: DataFrame, partitionBy: Seq[String],
                                    onSchemaChange: OnSchemaChange,
-                                   hashSpread: Option[(String, Int)] = None): Unit = {
-    noteMutation()
+                                   hashSpread: Option[(String, Int)] = None): Unit = try {
     if (partitionBy.isEmpty) { createTableLog(name, alignSchema(name, df, onSchemaChange)); return }
     val aligned = alignSchema(name, df, onSchemaChange)
     graft.plans.TxLog.overwritePartitions(logPath(name),
       distributeForWrite(aligned, partitionBy, hashSpread), partitionBy)
-  }
+  } finally noteMutation()
 
-  def appendLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    noteMutation()
+  def appendLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
     graft.plans.TxLog.append(logPath(name),
       alignSchema(name, df, OnSchemaChange.Ignore), partitionBy)
-  }
+  } finally noteMutation()
 
   /** Delta-shaped merge: probe which FILES hold matched keys (key columns
     * only — column-pruned), tombstone exactly those, re-add their surviving
@@ -679,8 +678,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def mergeUpsertLog(name: String, df: DataFrame, uniqueKey: Seq[String],
                      partitionBy: Seq[String],
                      onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-                     incrementPartitionsOnly: Boolean = false): Unit = {
-    noteMutation()
+                     incrementPartitionsOnly: Boolean = false): Unit = try {
     import graft.plans.TxLog
     if (uniqueKey.isEmpty) {
       if (tableExists(name)) appendLog(name, df, partitionBy)
@@ -725,7 +723,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       try { TxLog.replaceFiles(p, snap.version, removes.map(_.path), out, partitionBy); return }
       catch { case _: TxLog.TxConflict if attempts < 5 => () }
     }
-  }
+  } finally noteMutation()
 
   private def canonicalCast(name: String, df: DataFrame): DataFrame =
     canonicalSchema(name) match {

@@ -1102,4 +1102,25 @@ class RuntimeSpec extends SparkSpec {
       df.selectExpr("minhash_sig(t, 3, n)").collect()
     }
   }
+
+  test("a write landing while a view re-derives makes the next read re-derive again") {
+    val wh = freshCtx().warehouse
+    wh.createTable("upstream", Seq(1, 2).toDF("v"))
+    var calls = 0
+    wh.registerView("v_up", () => {
+      calls += 1
+      // the 2nd derivation writes an unrelated table while it runs
+      if (calls == 2) wh.createTable("unrelated", Seq(9).toDF("u"))
+      wh.read("upstream")
+    })
+    assert(calls == 1)
+    wh.createTable("upstream", Seq(1, 2, 3).toDF("v"))
+    assert(wh.read("v_up").count() == 3)
+    assert(calls == 2)
+    // that write moved the epoch after the builder started: not yet seen
+    assert(wh.read("v_up").count() == 3)
+    assert(calls == 3)
+    assert(wh.read("v_up").count() == 3)
+    assert(calls == 3)
+  }
 }
