@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: one JSON line with per-query seconds at SPARK_GRAFT_SF_DIR.
   *
@@ -21,28 +21,7 @@ object Bench {
     // never clobber a verify run's sf0.01 stage — no skip plumbing needed
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.runtime.Dialect(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r17 (guide §1.2 "per-task work"): the Janino class cache defaults to
-      // 100 entries; one pipeline query alone holds >100 live codegen units,
-      // so under the default EVERY TASK recompiles its stage (~200-500 ms of
-      // pure executor CPU per task, measured via per-stage executorRunTime —
-      // constant across data sizes). Not a local[32] artifact: executors
-      // default to the same 100, and a 100 TB run recompiles per task the
-      // same way. Order-controlled A/B on the 4 pipeline queries:
-      // 36.8 s -> 24.7 s (q74 12.1 -> 7.2). Memory cost is bounded (< a few
-      // hundred MB of generated classes across the 80-query sweep).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // test files are ~1-10MB; default 128MB packs a whole table into one
-      // scan partition and serializes the read across 32 cores
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.runtime.Dialect.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
     // optional comma-separated name filter (also accepts main args) for

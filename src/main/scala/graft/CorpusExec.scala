@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Paths
 
 /** Corpus-wide EXECUTE phase runner: materialize every reference model +
@@ -10,17 +9,13 @@ import java.nio.file.Paths
 object CorpusExec {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.runtime.Dialect(SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.runtime.Dialect.local(cpus.toInt)
       .config("spark.sql.shuffle.partitions", "4") // 0-row plans: scheduling floor dominates
       // negotiation drops+rewrites the same table paths hundreds of times;
       // Spark's shared FileStatusCache has no TTL by default and
       // refreshByPath does not purge it — a stale listing makes readers
       // chase deleted part files (FAILED_READ_FILE)
       .config("spark.sql.metadataCacheTTLSeconds", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: replicate the sf0.1 tables ~20× into /tmp (12M lineitem
@@ -14,11 +14,7 @@ object ScaleProbe {
     val factor = args.headOption.map(_.toInt).getOrElse(20)
     // "keep": reuse an existing /tmp/graft_scale replication (same factor)
     val keep = args.contains("keep")
-    val spark = graft.runtime.Dialect(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.runtime.Dialect.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val big = "/tmp/graft_scale"

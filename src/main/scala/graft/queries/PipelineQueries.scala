@@ -19,7 +19,18 @@ import graft.runtime._
   */
 object PipelineQueries {
 
-  /** gold_orders model body (extracted so PlanDumpR18 can dump the exact
+  /** stg_orders view body (extracted so PlanCheck can build the view the
+    * gold_orders body reads). */
+  private[graft] def q30StgBody(c: Ctx): DataFrame =
+    c.source("default", "orders")
+      .join(c.source("default", "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(c.source("default", "nation")),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("c_mktsegment"), col("n_name"),
+        date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
+
+  /** gold_orders model body (extracted so PlanCheck can dump the exact
     * plan the DagRunner executes for both runs). */
   private[graft] def q30GoldBody(c: Ctx): DataFrame = {
     // lookback filter applied at the SOURCE (o_orderdate), not only on the
@@ -61,15 +72,7 @@ object PipelineQueries {
     val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
       vars = Map("start_date_ymd" -> "2001-06-01"))
 
-    val stg = Model("stg_orders",
-      c => c.source("default", "orders")
-        .join(c.source("default", "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(c.source("default", "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("c_mktsegment"), col("n_name"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("order_month")),
-      Materialization.View)
+    val stg = Model("stg_orders", q30StgBody, Materialization.View)
 
     val gold = Model("gold_orders", q30GoldBody,
       Materialization.IncrementalInsertOverwrite(Seq("order_month")),
@@ -115,7 +118,7 @@ object PipelineQueries {
   private def q62MonthCol =
     date_format(trunc(to_date(col("o_orderdate")), "MM"), "yyyy-MM-dd")
 
-  /** fact_cells model body (extracted so PlanDumpR18 can dump the exact
+  /** fact_cells model body (extracted so PlanCheck can dump the exact
     * plan the DagRunner executes for both runs). */
   private[graft] def q62CellsBody(c: Ctx): DataFrame = {
     val o = c.source("default", "orders")

@@ -19,7 +19,7 @@ import graft.runtime._
   */
 object Scd2Queries {
 
-  /** Exposed for PlanDumpR18 (q73's staging-aggregate plan). */
+  /** Exposed for PlanCheck (q73's staging-aggregate plan). */
   private[graft] def stateAsOfForPlan(orders: DataFrame): DataFrame =
     stateAsOf(orders, None)
 

@@ -197,7 +197,6 @@ object CteMaterializer {
   /** Rewrite `sql`, materializing hot CTEs as lazy local checkpoints.
     * Returns the SQL to execute (unchanged when nothing qualifies). */
   def materializeHot(spark: SparkSession, modelName: String, sql: String): String = {
-    if (sys.env.get("GRAFT_CTE_MAT").contains("0")) return sql
     val parsed = parse(sql) match { case Some(p) => p; case None => return sql }
     val masked = mask(sql)
     // non-determinism propagates TRANSITIVELY through upstream defs: a
@@ -224,9 +223,6 @@ object CteMaterializer {
         ExpensiveRe.findFirstIn(body).isDefined && !nonDet(k)
     }.toSet
     if (hot.isEmpty) return sql
-    if (sys.env.contains("GRAFT_CTE_DEBUG"))
-      System.err.println(s"[cte-mat] $modelName hot: " +
-        hot.toSeq.sorted.map(k => s"${parsed.defs(k).name}(refs=${refCount(masked, parsed, k)})").mkString(", "))
 
     release(spark, modelName) // drop leftovers from a failed prior run
     val bodies = scala.collection.mutable.ArrayBuffer(

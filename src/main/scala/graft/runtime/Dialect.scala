@@ -23,8 +23,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Every session that executes model SQL must pin this dialect; a query that
   * runs under ANSI instead silently carries different error/NULL semantics
-  * than production. Mains and specs apply [[Dialect.apply]] on the builder;
-  * the runtime additionally calls [[Dialect.pin]] at execution entry points
+  * than production. Mains and specs build their session through
+  * [[Dialect.local]], which applies [[Dialect.apply]] to the builder; the
+  * runtime additionally calls [[Dialect.pin]] at execution entry points
   * as a safety net for sessions the engine did not build (ANSI is a runtime
   * SQLConf, so a live set is effective).
   *
@@ -33,21 +34,44 @@ import org.apache.spark.sql.SparkSession
   * `chmod` per file and directory. That has to happen at build time: Hadoop
   * caches one `FileSystem` per scheme for the life of the JVM, so it is not
   * part of [[Dialect.pin]], and a session built without [[Dialect.apply]]
-  * keeps Hadoop's forking default. `FileContext` writes (Structured
-  * Streaming checkpoints) get [[LocalFs.ForFileContext]] as
-  * `fs.AbstractFileSystem.file.impl` the same way.
+  * keeps Hadoop's forking default.
+  *
+  * [[Dialect.local]] is the one place for the engine's session settings:
+  * every main and spec builds its local session through it and adds only
+  * what it alone needs.
   */
 object Dialect {
   val settings: Map[String, String] = Map(
     "spark.sql.ansi.enabled" -> "false")
 
-  /** Apply the dialect and the local filesystem to a session builder
-    * (mains, specs). */
+  /** Apply the dialect and the local filesystem to a session builder. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[LocalFs.ForFileContext].getName)
+
+  /** A `local[cores]` session builder with the engine's execution settings
+    * (the ones the bench times) and the dialect. */
+  def local(cores: Int): SparkSession.Builder =
+    apply(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // r17 (guide §1.2 "per-task work"): the Janino class cache defaults to
+      // 100 entries; one pipeline query alone holds >100 live codegen units,
+      // so under the default EVERY TASK recompiles its stage (~200-500 ms of
+      // pure executor CPU per task, measured via per-stage executorRunTime —
+      // constant across data sizes). Not a local[32] artifact: executors
+      // default to the same 100, and a 100 TB run recompiles per task the
+      // same way. Order-controlled A/B on the 4 pipeline queries:
+      // 36.8 s -> 24.7 s (q74 12.1 -> 7.2). Memory cost is bounded (< a few
+      // hundred MB of generated classes across the 80-query sweep).
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // test files are ~1-10MB; default 128MB packs a whole table into one
+      // scan partition and serializes the read across 32 cores
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "512k")
+      .config("spark.ui.enabled", "false"))
 
   /** Pin the dialect on a live session (runtime entry points). */
   def pin(spark: SparkSession): Unit =

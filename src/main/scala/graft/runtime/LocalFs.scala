@@ -1,12 +1,8 @@
 package graft.runtime
 
-import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local filesystem with an in-process `setPermission`.
@@ -22,10 +18,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * [[Dialect.apply]] installs it as `fs.file.impl` when a session is built;
   * Hadoop caches one `FileSystem` per scheme for the life of the JVM, so a
-  * session built without that hook keeps Hadoop's forking default. Writes
-  * through `FileContext` (Structured Streaming's checkpoints, offset and
-  * commit logs and state files) do not use `fs.file.impl`; for them
-  * [[Dialect.apply]] installs [[LocalFs.ForFileContext]].
+  * session built without that hook keeps Hadoop's forking default.
   */
 final class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
@@ -38,23 +31,5 @@ object LocalFs {
           Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
             .map(_.SYMBOL).mkString))
         catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
-  }
-
-  /** `FileContext`'s local filesystem (`fs.AbstractFileSystem.file.impl`)
-    * over [[Raw]]: Hadoop's `org.apache.hadoop.fs.local.LocalFs` is the same
-    * checksum layer over a delegate that builds its own forking
-    * `RawLocalFileSystem`. Hadoop creates one per `FileContext`, through this
-    * (URI, Configuration) constructor. */
-  final class ForFileContext(uri: URI, conf: Configuration)
-      extends ChecksumFs(new RawForFileContext(uri, conf))
-
-  /** Hadoop's `org.apache.hadoop.fs.local.RawLocalFs` with [[Raw]] as the
-    * delegate, and that class's four overrides. */
-  final class RawForFileContext(uri: URI, conf: Configuration)
-      extends DelegateToFileSystem(uri, new Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
-    override def getUriDefaultPort: Int = -1
-    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
-    override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
-    override def isValidName(src: String): Boolean = true
   }
 }

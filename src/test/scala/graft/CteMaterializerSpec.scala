@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.runtime._
 
@@ -11,12 +10,7 @@ import graft.runtime._
   */
 class CteMaterializerSpec extends AnyFunSuite {
 
-  private lazy val spark = graft.runtime.Dialect(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("cte-materializer-spec").getOrCreate()
+  private lazy val spark = Dialect.local(4).appName("cte-materializer-spec").getOrCreate()
 
   test("parse: defs, bodies, tail — with comments, literals and nesting") {
     val sql =

@@ -6,24 +6,19 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileSystem,
-  LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.{col, lit}
 import graft.plans.TxLog
 import graft.runtime.{LocalFs, TempDirs, Warehouse}
 
 /** [[LocalFs]]: the engine session's local filesystem sets modes without
-  * forking `chmod`, and leaves exactly the modes stock Hadoop leaves; the
-  * same for `FileContext` writes ([[LocalFs.ForFileContext]]), which
-  * Structured Streaming's checkpoints go through. */
+  * forking `chmod`, and leaves exactly the modes stock Hadoop leaves. */
 class LocalFsSpec extends SparkSpec {
 
   test("the engine session's local filesystem is LocalFs") {
     assert(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).isInstanceOf[LocalFs])
     assert(FileSystem.getLocal(spark.sessionState.newHadoopConf()).isInstanceOf[LocalFs])
-    assert(AbstractFileSystem.get(URI.create("file:///"), spark.sessionState.newHadoopConf())
-      .isInstanceOf[LocalFs.ForFileContext])
   }
 
   /** Commands of the processes the JVM started while `body` ran. */
@@ -107,89 +102,5 @@ class LocalFsSpec extends SparkSpec {
     assert(stock("sticky") == Integer.parseInt("1777", 8))
     assert(stock("a/b/c/default.bin") ==
       (Integer.parseInt("666", 8) & ~Integer.parseInt(umask, 8)))
-  }
-
-  private val StockFileContextFs = "org.apache.hadoop.fs.local.LocalFs"
-
-  /** [[modesAfterCalls]] through a `FileContext` over the
-    * `fs.AbstractFileSystem.file.impl` class `impl`. */
-  private def modesAfterContextCalls(impl: String, umask: String): Map[String, Int] = {
-    val conf = new Configuration()
-    conf.set("fs.permissions.umask-mode", umask)
-    conf.set("fs.AbstractFileSystem.file.impl", impl)
-    val fc = FileContext.getFileContext(URI.create("file:///"), conf)
-    val root = Files.createTempDirectory("graft_fc_modes")
-    val base = new Path(root.toUri)
-    def create(rel: String, perm: Option[FsPermission]): Unit = {
-      val opts = Seq[Options.CreateOpts](Options.CreateOpts.createParent()) ++
-        perm.map(Options.CreateOpts.perms)
-      val out = fc.create(new Path(base, rel),
-        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE), opts: _*)
-      out.write(Array[Byte](1, 2, 3)); out.close()
-    }
-    try {
-      fc.mkdir(new Path(base, "a/b/c"), FsPermission.getDirDefault, true)
-      fc.mkdir(new Path(base, "d"), new FsPermission("750"), false)
-      create("a/b/c/default.bin", None)
-      create("d/explicit.bin", Some(new FsPermission("640")))
-      create("new/parent/file.bin", None)
-      create("chmod.bin", None)
-      fc.setPermission(new Path(base, "chmod.bin"), new FsPermission("604"))
-      fc.mkdir(new Path(base, "sticky"), FsPermission.getDirDefault, false)
-      fc.setPermission(new Path(base, "sticky"), new FsPermission("1777"))
-      fc.rename(new Path(base, "chmod.bin"), new Path(base, "renamed.bin"))
-      modesBelow(root)
-    } finally Files.walk(root).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-  }
-
-  for (umask <- Seq("022", "077")) test(s"FileContext modes equal stock Hadoop's under umask $umask") {
-    val stock = modesAfterContextCalls(StockFileContextFs, umask)
-    val ours = modesAfterContextCalls(classOf[LocalFs.ForFileContext].getName, umask)
-    assert(ours == stock)
-    assert(stock.contains("a/b/c/.default.bin.crc"), "checksum files are written")
-    assert(stock("renamed.bin") == Integer.parseInt("604", 8))
-    assert(stock("sticky") == Integer.parseInt("1777", 8))
-  }
-
-  /** Run a stateful streaming aggregation with a checkpoint directory,
-    * `fs.AbstractFileSystem.file.impl` optionally overridden for the query;
-    * the checkpoint tree's (relative path → mode) and the commands of the
-    * processes started while it ran. */
-  private def streamingCheckpoint(fileContextImpl: Option[String]): (Map[String, Int], Seq[String]) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "fs.AbstractFileSystem.file.impl"
-    val root = Files.createTempDirectory("graft_ckpt")
-    fileContextImpl.foreach(spark.conf.set(key, _))
-    try {
-      val in = MemoryStream[(Long, Long)]
-      val cmds = processesStartedBy {
-        val q = in.toDF().toDF("k", "v").groupBy("k").count()
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(s"ckpt_${fileContextImpl.isDefined}")
-          .option("checkpointLocation", root.toString).start()
-        try {
-          in.addData((1L, 1L), (2L, 2L)); q.processAllAvailable()
-          in.addData((1L, 3L)); q.processAllAvailable()
-        } finally q.stop()
-      }
-      (modesBelow(root), cmds)
-    } finally {
-      fileContextImpl.foreach(_ => spark.conf.unset(key))
-      Files.walk(root).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-    }
-  }
-
-  test("a streaming checkpoint write starts no chmod process and leaves stock modes") {
-    val (ours, oursCmds) = streamingCheckpoint(None)
-    val (stock, stockCmds) = streamingCheckpoint(Some(StockFileContextFs))
-    assert(ours.keySet.exists(_.startsWith("offsets/")), ours.keys.toSeq.sorted)
-    assert(ours.keySet.exists(_.startsWith("state/")), ours.keys.toSeq.sorted)
-    assert(!oursCmds.exists(_.contains("chmod")), oursCmds.mkString("\n"))
-    // without libhadoop, stock Hadoop forks: the override reached the query
-    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
-      assert(stockCmds.exists(_.contains("chmod")))
-    assert(ours == stock)
   }
 }

@@ -11,12 +11,7 @@ object OpsProperties extends Properties("graft.ops") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = graft.runtime.Dialect(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.runtime.Dialect.local(4).getOrCreate()
 
   private val rowGen = for {
     k <- Gen.choose(0, 3)

@@ -6,14 +6,8 @@ import graft.runtime.{Ctx, SourceRegistry, Warehouse}
 
 /** Shared local session + warehouse scaffolding for specs. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = graft.runtime.Dialect(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.runtime.Dialect.local(4).appName("graft-test").getOrCreate()
 
   // Reference-dialect regression net: every suite inherits this triad of
   // non-ANSI behaviors the corpus relies on (evidence in runtime/Dialect.scala
