@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name, lit}
+import org.apache.spark.sql.types.StructType
 
 /** A minimal but real table-format transaction log — the self-contained
   * stand-in for the Delta log the reference materializes 197 models on
@@ -42,9 +43,9 @@ import org.apache.spark.sql.functions.{col, input_file_name, lit}
   *  - **Tombstones + VACUUM give snapshot isolation.** `remove` actions
   *    leave the file bytes in place; a concurrent reader holding an older
   *    snapshot keeps reading them. [[vacuum]] physically deletes only
-  *    tombstones older than the retention window — the missing piece the
-  *    rename/pointer protocols in [[graft.runtime.TableCommitProtocol]]
-  *    explicitly documented as the log's job.
+  *    tombstones older than the retention window — the missing piece of
+  *    the parquet path's staged rename ([[graft.runtime.Warehouse.createTable]]),
+  *    which deletes the replaced files at once.
   *  - **Time travel** falls out: [[snapshot]] accepts any historical
   *    version (subject to vacuum retention).
   *
@@ -358,12 +359,23 @@ object TxLog {
     * snapshots inline the file→value map into the plan (codegen'd, no join);
     * large ones broadcast-join the manifest — constant-size plans at any
     * file count, the same shape Delta's own scan uses (partition values ride
-    * the file index, not the plan). */
+    * the file index, not the plan).
+    *
+    * `schema` is the table's column set when the caller keeps one (the
+    * warehouse's canonical schema): the files are then read with it, as the
+    * warehouse reads a parquet table, so a column added after older files
+    * were written keeps its values. Inference reads one file's footer only. */
   def readSubset(spark: SparkSession, table: Path, files: Seq[AddFile],
                  partitionCols: Seq[String],
-                 inlineThreshold: Int = inlinePartitionMapThreshold): DataFrame = {
-    val base = graft.Tables.readParquet(spark, table.toString,
-      files.map(f => table.resolve(f.path).toString))
+                 inlineThreshold: Int = inlinePartitionMapThreshold,
+                 schema: Option[StructType] = None): DataFrame = {
+    val paths = files.map(f => table.resolve(f.path).toString)
+    val base = schema match {
+      case Some(s) => spark.read
+        .schema(StructType(s.fields.filterNot(f => partitionCols.contains(f.name))))
+        .parquet(paths: _*)
+      case None => graft.Tables.readParquet(spark, table.toString, paths)
+    }
     if (partitionCols.isEmpty) base
     else if (files.size <= inlineThreshold)
       partitionCols.foldLeft(base) { (df, c) =>

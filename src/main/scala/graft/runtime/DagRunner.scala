@@ -176,59 +176,35 @@ final class DagRunner(models: Seq[Model]) {
         "snapshot models need var 'run_ts' or 'start_date_ymd' for deterministic SCD2 effective timestamps"))
 
   def materialize(ctx: Ctx, m: Model, fullRefresh: Boolean = false): Unit = {
-    // file_format='delta' routes through the transaction-log table format
-    // when the warehouse opts in (snapshots keep the parquet path — their
-    // full-table rewrite already commits atomically via replaceTable)
-    val asLog = ctx.warehouse.logFormatEnabled && m.fileFormat == "delta"
+    val wh = ctx.warehouse
+    // the warehouse picks the table format (parquet or transaction log) from
+    // file_format; every write below dispatches on it
+    wh.routeFormat(m.name, m.fileFormat)
     // builds register session-global temp views: one at a time per session
     // (also when a View's builder re-derives at a later read)
     def build(c: Ctx): DataFrame = DagRunner.buildLock(c.spark).synchronized(m.build(c))
+    def rebuild: Boolean = fullRefresh || !wh.tableExists(m.name)
+    def full: DataFrame = build(ctx.copy(isIncremental = false))
+    def increment: DataFrame = build(ctx.copy(isIncremental = true))
     m.materialization match {
     case Materialization.Table(partitionBy, orderBy) =>
-      if (asLog) ctx.warehouse.createTableLog(m.name, build(ctx), partitionBy, None, orderBy)
-      else ctx.warehouse.createTable(m.name, build(ctx), partitionBy, None, orderBy)
+      wh.createTable(m.name, build(ctx), partitionBy, None, orderBy)
     case Materialization.View =>
       // builder-backed: the view plan re-derives after upstream table
       // mutations (a captured DataFrame pins stale file listings)
-      ctx.warehouse.registerView(m.name, () => build(ctx))
+      wh.registerView(m.name, () => build(ctx))
     case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange, spread) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          build(ctx.copy(isIncremental = false)), partitionBy, spread)
-        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)),
-          partitionBy, spread)
-      } else if (asLog)
-        ctx.warehouse.insertOverwritePartitionsLog(m.name,
-          build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
-      else
-        ctx.warehouse.insertOverwritePartitions(m.name,
-          build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
+      if (rebuild) wh.createTable(m.name, full, partitionBy, spread)
+      else wh.insertOverwritePartitions(m.name, increment, partitionBy, onSchemaChange, spread)
     case Materialization.IncrementalMerge(uniqueKey, partitionBy, onSchemaChange, incOnly) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)), partitionBy)
-      } else if (asLog)
-        ctx.warehouse.mergeUpsertLog(m.name,
-          build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
-      else
-        ctx.warehouse.mergeUpsert(m.name,
-          build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
+      if (rebuild) wh.createTable(m.name, full, partitionBy)
+      else wh.mergeUpsert(m.name, increment, uniqueKey, partitionBy, onSchemaChange, incOnly)
     case Materialization.IncrementalAppend(partitionBy) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, build(ctx.copy(isIncremental = false)), partitionBy)
-      } else if (asLog)
-        ctx.warehouse.appendLog(m.name, build(ctx.copy(isIncremental = true)), partitionBy)
-      else
-        ctx.warehouse.append(m.name, build(ctx.copy(isIncremental = true)), partitionBy)
+      if (rebuild) wh.createTable(m.name, full, partitionBy)
+      else wh.append(m.name, increment, partitionBy)
     case Materialization.Snapshot(uniqueKey, strategy, invalidateHardDeletes) =>
-      // snapshots write through Scd2's format-agnostic createTable/
-      // replaceTable; route them onto the log when the model is delta
-      // (all 54 reference snapshots are) so SCD2 advances commit atomically
-      // with history, like Delta's snapshot MERGE
-      if (asLog) ctx.warehouse.routeAsLog(m.name)
+      // a delta snapshot (all 54 reference snapshots are) advances as one
+      // log commit with history, like Delta's snapshot MERGE
       Scd2.snapshot(ctx, m.name, build(ctx), uniqueKey, strategy,
         invalidateHardDeletes, runTs(ctx))
     }

@@ -86,7 +86,8 @@ final case class Model(
     deps: Seq[String] = Nil,
     tags: Set[String] = Set.empty,
     meta: Map[String, String] = Map.empty,
-    /** reference: `file_format` config — 'delta' (197 models) routes
-      * through the [[graft.plans.TxLog]] transaction log when the
-      * warehouse has `logFormatEnabled`; anything else is plain parquet. */
+    /** reference: `file_format` config — [[DagRunner.materialize]] hands
+      * it to [[Warehouse.routeFormat]]: 'delta' (197 models) writes through
+      * the [[graft.plans.TxLog]] transaction log when the warehouse has
+      * `logFormatEnabled`; anything else is plain parquet. */
     fileFormat: String = "parquet")

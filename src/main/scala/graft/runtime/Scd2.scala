@@ -108,9 +108,9 @@ object Scd2 {
       .unionByName(keepOrClose)
       .unionByName(opened)
 
-    // replaceTable stages to a tmp dir first, so reading the old files while
-    // writing the new version is safe; the swap happens after the write.
-    wh.replaceTable(name, withMetaCols(result, uniqueKey))
+    // createTable stages the new version beside the live table, so reading
+    // the old files while writing it is safe; the swap happens after the write.
+    wh.createTable(name, withMetaCols(result, uniqueKey))
   }
 
   /** Internal bucket partition column of bucketed snapshot tables. */

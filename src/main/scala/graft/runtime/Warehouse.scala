@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * metastore + S3 warehouse (reference: CTAS through
   * macros/spark_adapter_patch/create_table.sql:23-43).
   *
-  * Tables are parquet directories under `root`; views are named lazy plans.
+  * Tables are parquet directories under `root` (or transaction-log tables,
+  * see [[routeFormat]]); views are named lazy plans.
   * A `_schema.json` sidecar pins each table's canonical column set so
   * `on_schema_change` policies (sync/append/ignore) work over immutable
   * parquet files: reads merge file schemas, then project to the canonical
@@ -24,8 +25,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 final class Warehouse(val spark: SparkSession, val root: String,
                       namer: String => String = identity,
-                      commitProtocol: TableCommitProtocol =
-                        TableCommitProtocol.LocalAtomicRename,
                       val logFormatEnabled: Boolean = false) {
 
   // Every model execution reads/writes through a Warehouse, so this is the
@@ -61,16 +60,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * macros/generate_alias_name.sql:1-28 — dev runs prefix relations). */
   def tablePath(name: String): String = s"$root/${namer(name)}"
 
-  /** Directory currently holding the table's data: the logical path under a
-    * rename protocol, the pointed-to version directory under [[TableCommitProtocol.PointerSwap]].
-    * Every physical read and in-place write resolves through here; only
-    * [[replaceTable]]'s publish targets the logical path. */
-  private def dataDir(name: String): String =
-    commitProtocol.resolveData(Paths.get(tablePath(name))).toString
-  private def schemaPath(name: String): Path = Paths.get(dataDir(name), "_schema.json")
+  private def schemaPath(name: String): Path = Paths.get(tablePath(name), "_schema.json")
 
   def tableExists(name: String): Boolean =
-    views.contains(name) || Files.exists(Paths.get(dataDir(name)))
+    views.contains(name) || Files.exists(Paths.get(tablePath(name)))
 
   def registerView(name: String, df: DataFrame): Unit =
     views.put(name, new ViewEntry(None, (df, mutationEpoch)))
@@ -111,7 +104,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * null-fills columns absent from older files (append_new_columns) and
     * ignores file columns outside the canonical set (ignore policy), which is
     * exactly what the old merge-then-project path computed. Only sidecar-less
-    * directories (externally created) fall back to mergeSchema. */
+    * directories (externally created) fall back to mergeSchema. A log-backed
+    * table reads its manifest's live files with the same canonical schema. */
   def read(name: String): DataFrame = views.get(name) match {
     case Some(v) =>
       if (v.derived._2 != mutationEpoch) v.build.foreach(b => v.derived = derive(b))
@@ -122,9 +116,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
         case Some(schema) =>
           // partition columns surface last regardless of the given schema;
           // project back to canonical order (no extra I/O, plan-only)
-          spark.read.schema(schema).parquet(dataDir(name))
+          spark.read.schema(schema).parquet(tablePath(name))
             .select(schema.fieldNames.toSeq.map(col): _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(dataDir(name))
+        case None => spark.read.option("mergeSchema", "true").parquet(tablePath(name))
       }
   }
 
@@ -135,7 +129,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   private def writeSchema(name: String, schema: StructType): Unit = {
-    Files.createDirectories(Paths.get(dataDir(name)))
+    Files.createDirectories(Paths.get(tablePath(name)))
     Files.writeString(schemaPath(name), schema.json)
   }
 
@@ -163,46 +157,71 @@ final class Warehouse(val spark: SparkSession, val root: String,
           (cols.map(col) :+ (abs(hash(col(spreadCol))) % n)): _*)
     }
 
-  /** Full-rebuild CTAS (reference: materialized='table').
+  /** Names whose writes go to the transaction-log format, set per model by
+    * [[routeFormat]]. Every write method dispatches on it; reads auto-route
+    * via [[isLogBacked]]. */
+  private val logRouted = scala.collection.concurrent.TrieMap.empty[String, Unit]
+
+  /** Pick the table format of `name`'s writes from its model's file_format:
+    * 'delta' (197 reference models, all 54 snapshots) goes to the
+    * [[graft.plans.TxLog]] log when `logFormatEnabled`; any other format
+    * clears a route left by an earlier materialization of the same name. */
+  def routeFormat(name: String, fileFormat: String): Unit =
+    if (logFormatEnabled && fileFormat == "delta") logRouted.put(name, ())
+    else logRouted.remove(name)
+
+  /** Full-rebuild CTAS (reference: materialized='table'), also every other
+    * full replace: an incremental model's first run, an unpartitioned
+    * insert_overwrite or merge, an SCD2 advance.
+    *
+    * The new table is written to a hidden staging directory beside the live
+    * one, with its `_schema.json` and the persisted docs that still name a
+    * column (reference persists comments across runs); the old directory is
+    * then deleted and the staged one renamed into place, so a failed write
+    * leaves the old table untouched, and the write may read the table it
+    * replaces. The rename is atomic on local disk and HDFS only; an object
+    * store has no atomic directory rename and needs the log
+    * ([[graft.plans.TxLog]]), which routed names use.
     *
     * @param orderBy global ORDER BY sink (reference: ~690 cosmetic trailing
     *   `ORDER BY` sites): range-partition + per-partition sort, so part files
     *   hold disjoint ordered ranges in file-name order. */
-  /** Tables routed to the transaction-log format by the caller that knows
-    * the model's file_format but writes through format-agnostic helpers —
-    * the SCD2 snapshot path (all 54 reference snapshots are
-    * `file_format='delta'`). createTable/replaceTable on a routed name
-    * delegate to the log equivalents; reads auto-route via isLogBacked. */
-  private val logRouted = scala.collection.concurrent.TrieMap.empty[String, Unit]
-  def routeAsLog(name: String): Unit = logRouted.put(name, ())
-
   def createTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
                   hashSpread: Option[(String, Int)] = None,
                   orderBy: Seq[String] = Nil): Unit = try {
+    val out =
+      if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
+      else distributeForWrite(df, partitionBy, hashSpread)
     if (logRouted.contains(name)) {
-      createTableLog(name, df, partitionBy, hashSpread, orderBy); return
-    }
-    // persisted docs survive a full rebuild (reference persists comments
-    // across runs); SaveMode.Overwrite wipes the directory incl. the sidecar.
-    // Restore happens in a finally (a failed write must not lose the docs),
-    // filtered to columns that still exist in the new schema.
-    val docsPath = Paths.get(dataDir(name), "_docs.json")
-    val savedDocs = docs(name)
-    try {
-      val out =
-        if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
-        else distributeForWrite(df, partitionBy, hashSpread)
-      val w = out.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
+      // TxLog.overwrite IS an atomic full replace (tombstone-all + add-new
+      // in one commit), with history/time-travel kept
+      graft.plans.TxLog.overwrite(logPath(name), out, partitionBy)
       writeSchema(name, df.schema)
-    } finally {
-      val survivors = savedDocs.filter { case (k, _) =>
-        k == "__table__" || df.schema.fieldNames.contains(k) }
-      if (survivors.nonEmpty) {
-        Files.createDirectories(docsPath.getParent)
-        Files.writeString(docsPath, serializeDocs(survivors))
-      }
+      return
     }
+    val target = Paths.get(tablePath(name))
+    val staged = target.resolveSibling(s".staging_${target.getFileName}")
+    try {
+      val w = out.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staged.toString)
+      // sidecars ship INSIDE the staged directory, so the rename publishes a
+      // complete table; underscore-prefixed files are invisible to Spark's
+      // listing, so the staged dir stays a valid parquet directory
+      Files.writeString(staged.resolve("_schema.json"), df.schema.json)
+      val survivingDocs = docs(name).filter { case (k, _) =>
+        k == "__table__" || df.schema.fieldNames.contains(k) }
+      if (survivingDocs.nonEmpty)
+        Files.writeString(staged.resolve("_docs.json"), serializeDocs(survivingDocs))
+    } catch { case e: Throwable =>
+      if (Files.exists(staged)) TempDirs.deleteTree(staged)
+      throw e
+    }
+    // the commit point; a failure from here on keeps the complete staged copy
+    if (Files.exists(target)) TempDirs.deleteTree(target)
+    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+    // a frame cached over the old files re-caches over the new ones, as
+    // Spark's own overwrite of the path does
+    spark.catalog.refreshByPath(target.toString)
   } finally noteMutation()
 
   /** Dynamic-partition insert-overwrite: only partitions present in `df` are
@@ -220,9 +239,12 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
     val aligned = alignSchema(name, df, onSchemaChange)
     val out = distributeForWrite(aligned, partitionBy, hashSpread)
-    // per-write option, not the session conf: concurrent writes share the session
-    out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionBy: _*).parquet(dataDir(name))
+    if (logRouted.contains(name))
+      graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
+    else
+      // per-write option, not the session conf: concurrent writes share the session
+      out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionBy: _*).parquet(tablePath(name))
   } finally noteMutation()
 
   /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
@@ -250,7 +272,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * is bounded by partition count, the same driver-side bookkeeping Spark's
     * own dynamic partition overwrite does. Unpartitioned tables fall back to
     * a full rewrite — documented cost, same as Delta MERGE with no pruning
-    * predicate matching every file.
+    * predicate matching every file. A log-routed table merges at file
+    * granularity instead ([[mergeUpsertLog]]).
     *
     * Contract (same as dbt merge): the increment must be unique on
     * `uniqueKey`; reference models guarantee this with their ROW_NUMBER dedup
@@ -269,13 +292,16 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
     if (!tableExists(name)) { createTable(name, df, partitionBy); return }
     val aligned = alignSchema(name, df, onSchemaChange)
+    if (logRouted.contains(name)) {
+      mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly); return
+    }
     val keys = aligned.select(uniqueKey.map(col): _*).distinct()
     if (partitionBy.isEmpty) {
       // read(name) is constructed only on the paths that scan the whole
       // table: building the DataFrame lists every file eagerly, which the
       // 100× probe measured as the dominant merge term at 7,700 partitions
       val survivors = read(name).join(keys, uniqueKey, "left_anti")
-      replaceTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
+      createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
       return
     }
     val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
@@ -307,7 +333,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       }
     affected.filterNot(r => outParts.contains(partitionBy.indices.map(r.get)))
       .foreach { r =>
-        val p = Paths.get(dataDir(name), partitionDir(partitionBy, r))
+        val p = Paths.get(tablePath(name), partitionDir(partitionBy, r))
         if (Files.exists(p)) deleteRecursively(p)
       }
   } finally noteMutation()
@@ -345,7 +371,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * skipped; with none on disk the result is an empty slice. */
   private def readPartitionDirs(name: String, partitionBy: Seq[String],
                                 parts: Seq[org.apache.spark.sql.Row]): DataFrame = {
-    val base = dataDir(name)
+    val base = tablePath(name)
     val dirs = parts.map(r => s"$base/${partitionDir(partitionBy, r)}")
       .filter(p => Files.exists(Paths.get(p)))
     val schema = canonicalSchema(name)
@@ -413,10 +439,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
         // MUST resolve; a miss means partitionDir's encoding diverged from
         // the writer's and survivors would silently vanish — fail loudly
         val missing = matched.map(r => partitionDir(partitionBy, r))
-          .filterNot(d => Files.exists(Paths.get(dataDir(name), d)))
+          .filterNot(d => Files.exists(Paths.get(tablePath(name), d)))
         if (missing.nonEmpty) throw new IllegalStateException(
           s"mergeUpsert($name): matched partition directories not found under " +
-            s"${dataDir(name)}: ${missing.mkString(", ")} — partition-path " +
+            s"${tablePath(name)}: ${missing.mkString(", ")} — partition-path " +
             "encoding mismatch would silently drop surviving rows")
         (incParts.collect() ++ matched).distinct
       }
@@ -432,8 +458,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
   /** Row append (reference: incremental_strategy='append'). */
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
     val aligned = alignSchema(name, df, OnSchemaChange.Ignore)
-    val w = aligned.write.mode(SaveMode.Append)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
+    if (logRouted.contains(name)) graft.plans.TxLog.append(logPath(name), aligned, partitionBy)
+    else {
+      val w = aligned.write.mode(SaveMode.Append)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tablePath(name))
+    }
   } finally noteMutation()
 
   /** Docs persistence (reference: persist_docs + alter_column_comment,
@@ -442,7 +471,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * metadata (`comment`) on read. */
   def setDocs(name: String, tableComment: String,
               columnComments: Map[String, String]): Unit =
-    Files.writeString(Paths.get(dataDir(name), "_docs.json"),
+    Files.writeString(Paths.get(tablePath(name), "_docs.json"),
       serializeDocs(Map("__table__" -> tableComment) ++ columnComments))
 
   private def serializeDocs(m: Map[String, String]): String =
@@ -452,7 +481,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   def docs(name: String): Map[String, String] = {
-    val p = Paths.get(dataDir(name), "_docs.json")
+    val p = Paths.get(tablePath(name), "_docs.json")
     if (!Files.exists(p)) Map.empty
     else {
       val re = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
@@ -467,7 +496,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * directory entry per level, never a file listing. */
   private def partitionColsOnDisk(name: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var dir = Paths.get(dataDir(name))
+    var dir = Paths.get(tablePath(name))
     var continue = true
     while (continue) {
       continue = false
@@ -548,7 +577,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
         else partCols.map(c => s"`$c`").mkString(" PARTITIONED BY (", ", ", ")")
       spark.sql(s"DROP TABLE IF EXISTS $ident")
       spark.sql(s"CREATE TABLE $ident ($colsDdl) USING parquet$tblCm$partDdl " +
-        s"LOCATION ${lit(dataDir(name))}")
+        s"LOCATION ${lit(tablePath(name))}")
       if (partCols.nonEmpty) spark.sql(s"ALTER TABLE $ident RECOVER PARTITIONS")
     }
   } catch {
@@ -567,7 +596,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def createBucketedTable(name: String, df: DataFrame, bucketCols: Seq[String],
                           numBuckets: Int, sortCols: Seq[String] = Nil): Unit = try {
     val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", dataDir(name))
+      .option("path", tablePath(name))
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val ws = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -578,40 +607,18 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * the catalog, not a bare parquet read). */
   def readBucketed(name: String): DataFrame = spark.table(name)
 
-  /** Atomic-ish full replace used by SCD2 rewrites: stage to a tmp dir, then
-    * swap. (Prod-grade would use Delta/Iceberg commit protocols; parquet +
-    * rename is the local-FS equivalent — SURVEY.md §7 "SCD2 without Delta".) */
-  def replaceTable(name: String, df: DataFrame): Unit = try {
-    if (logRouted.contains(name)) {
-      // TxLog.overwrite IS an atomic full replace (tombstone-all + add-new
-      // in one commit) — the log format's native equivalent of the staged
-      // rename below, with history/time-travel kept
-      createTableLog(name, df); return
-    }
-    val tmp = s"$root/.staging_$name"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // the schema sidecar ships INSIDE the staged directory, so the commit
-    // publishes a complete table (no post-flip sidecar write a concurrent
-    // reader could miss); underscore-prefixed files are invisible to
-    // Spark's listing, so the staged dir stays a valid parquet directory
-    Files.writeString(Paths.get(tmp, "_schema.json"), df.schema.json)
-    // the publish step is the pluggable commit point (see
-    // [[TableCommitProtocol]] — a Delta/Iceberg log-append drops in here)
-    commitProtocol.commitReplace(Paths.get(tmp), Paths.get(tablePath(name)))
-  } finally noteMutation()
-
   // ---- transaction-log table format (reference: file_format='delta') ----
   //
   // The reference declares 197 models `file_format='delta'`; when
-  // `logFormatEnabled`, DagRunner routes those materializations through the
-  // [[graft.plans.TxLog]] log instead of plain parquet directories. Same
+  // `logFormatEnabled`, [[routeFormat]] sends those models' writes through
+  // the [[graft.plans.TxLog]] log instead of plain parquet directories. Same
   // model contract (on_schema_change, dynamic-partition overwrite, merge
   // semantics), different storage guarantees: atomic multi-partition
   // commits, snapshot isolation via tombstones, time travel, and — for
   // merge — FILE-level rewrite granularity (the actual Delta MERGE shape),
-  // finer than the parquet path's partition-directory rewrite. Snapshots
-  // (SCD2) stay on the parquet path: their full-table rewrite goes through
-  // [[replaceTable]]'s commit protocol, which is already atomic.
+  // finer than the parquet path's partition-directory rewrite. SCD2
+  // snapshots write through [[createTable]], so a delta snapshot's advance
+  // is one log overwrite commit.
 
   def isLogBacked(name: String): Boolean =
     graft.plans.TxLog.exists(Paths.get(tablePath(name)))
@@ -634,7 +641,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val snap = graft.plans.TxLog.snapshot(p)
     val live = snap.files.filter(f => partitionFilter(f.partitionValues))
     val base =
-      if (live.nonEmpty) graft.plans.TxLog.readSubset(spark, p, live, snap.partitionCols)
+      if (live.nonEmpty) readLogFiles(name, live, snap.partitionCols)
       else canonicalSchema(name) match {
         case Some(schema) => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -644,29 +651,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
     canonicalCast(name, base)
   }
 
-  def createTableLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-                     hashSpread: Option[(String, Int)] = None,
-                     orderBy: Seq[String] = Nil): Unit = try {
-    val out =
-      if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
-      else distributeForWrite(df, partitionBy, hashSpread)
-    graft.plans.TxLog.overwrite(logPath(name), out, partitionBy)
-    writeSchema(name, df.schema)
-  } finally noteMutation()
-
-  def insertOverwritePartitionsLog(name: String, df: DataFrame, partitionBy: Seq[String],
-                                   onSchemaChange: OnSchemaChange,
-                                   hashSpread: Option[(String, Int)] = None): Unit = try {
-    if (partitionBy.isEmpty) { createTableLog(name, alignSchema(name, df, onSchemaChange)); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    graft.plans.TxLog.overwritePartitions(logPath(name),
-      distributeForWrite(aligned, partitionBy, hashSpread), partitionBy)
-  } finally noteMutation()
-
-  def appendLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
-    graft.plans.TxLog.append(logPath(name),
-      alignSchema(name, df, OnSchemaChange.Ignore), partitionBy)
-  } finally noteMutation()
+  /** Manifest files of a log table, read with its canonical schema. */
+  private def readLogFiles(name: String, files: Seq[graft.plans.TxLog.AddFile],
+                           partitionCols: Seq[String]): DataFrame =
+    graft.plans.TxLog.readSubset(spark, logPath(name), files, partitionCols,
+      schema = canonicalSchema(name))
 
   /** Delta-shaped merge: probe which FILES hold matched keys (key columns
     * only — column-pruned), tombstone exactly those, re-add their surviving
@@ -674,19 +663,12 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * granularity is the file, not the partition directory — candidate files
     * are still manifest-pruned to the increment's partitions under
     * `incrementPartitionsOnly` (dbt incremental_predicates analogue). On a
-    * concurrency conflict the probe re-runs against the fresh snapshot. */
-  def mergeUpsertLog(name: String, df: DataFrame, uniqueKey: Seq[String],
-                     partitionBy: Seq[String],
-                     onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-                     incrementPartitionsOnly: Boolean = false): Unit = try {
+    * concurrency conflict the probe re-runs against the fresh snapshot.
+    * `aligned` already matches the table's canonical column set. */
+  private def mergeUpsertLog(name: String, aligned: DataFrame, uniqueKey: Seq[String],
+                             partitionBy: Seq[String],
+                             incrementPartitionsOnly: Boolean): Unit = {
     import graft.plans.TxLog
-    if (uniqueKey.isEmpty) {
-      if (tableExists(name)) appendLog(name, df, partitionBy)
-      else createTableLog(name, df, partitionBy)
-      return
-    }
-    if (!tableExists(name)) { createTableLog(name, df, partitionBy); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
     val keys = aligned.select(uniqueKey.map(col): _*).distinct()
     val incPvs: Set[Map[String, String]] =
       if (partitionBy.isEmpty) Set.empty
@@ -706,7 +688,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
         else snap.files
       val matchedFiles: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else TxLog.readSubset(spark, p, candidates, snap.partitionCols)
+        else readLogFiles(name, candidates, snap.partitionCols)
           .withColumn("__file", TxLog.scannedFileName)
           .join(keys, uniqueKey, "left_semi")
           .select(col("__file")).distinct().collect().map(_.getString(0)).toSet
@@ -714,7 +696,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       val survivors =
         if (removes.isEmpty) None
         else Some(canonicalCast(name,
-          TxLog.readSubset(spark, p, removes, snap.partitionCols))
+          readLogFiles(name, removes, snap.partitionCols))
           .join(keys, uniqueKey, "left_anti"))
       val out = survivors match {
         case Some(s) => aligned.unionByName(s.select(aligned.columns.toSeq.map(col): _*))
@@ -723,7 +705,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       try { TxLog.replaceFiles(p, snap.version, removes.map(_.path), out, partitionBy); return }
       catch { case _: TxLog.TxConflict if attempts < 5 => () }
     }
-  } finally noteMutation()
+  }
 
   private def canonicalCast(name: String, df: DataFrame): DataFrame =
     canonicalSchema(name) match {

@@ -35,7 +35,7 @@ class CardBinsVersionRealSpec extends SparkSpec {
 
     val wh = new Warehouse(spark, TempDirs.create("graft_wh_cardbins"),
       logFormatEnabled = true)
-    wh.routeAsLog(snap.name)
+    wh.routeFormat(snap.name, "delta")
     val ctx = Ctx(spark, wh,
       SourceRegistry.overDir(spark, "/root/testdata/sf0.001"),
       Map("run_ts" -> "2024-03-02 00:00:00"))

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.runtime._
 
@@ -1049,13 +1050,98 @@ class RuntimeSpec extends SparkSpec {
     assert(docs("__table__").startsWith("Key metrics of a user on a specific date"))
   }
 
+  private val scd2Ts1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  private val scd2Ts2 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+
+  /** A check-strategy SCD2 run keyed on `v`. */
+  private def snapshot(ctx: Ctx, name: String, staged: org.apache.spark.sql.DataFrame,
+                       ts: java.sql.Timestamp): Unit =
+    Scd2.snapshot(ctx, name, staged, "v", Scd2Strategy.Check(Nil),
+      invalidateHardDeletes = false, ts)
+
   test("docs survive a rebuild filtered to surviving columns") {
     val ctx = freshCtx()
     val wh = ctx.warehouse
-    wh.createTable("doc_t", Seq((1, "x")).toDF("v", "gone_col"))
-    wh.setDocs("doc_t", "the table", Map("v" -> "kept", "gone_col" -> "dropped"))
-    wh.createTable("doc_t", Seq(2).toDF("v")) // rebuild without gone_col
-    assert(wh.docs("doc_t") == Map("__table__" -> "the table", "v" -> "kept"))
+    // (table, first build, full replace that does not carry gone_col)
+    val cases: Seq[(String, () => Unit, () => Unit)] = Seq(
+      ("doc_t", () => wh.createTable("doc_t", Seq((1, "x")).toDF("v", "gone_col")),
+        () => wh.createTable("doc_t", Seq(2).toDF("v"))),
+      ("doc_scd2", () => snapshot(ctx, "doc_scd2", Seq((1, "a")).toDF("v", "p"), scd2Ts1),
+        () => snapshot(ctx, "doc_scd2", Seq((1, "b")).toDF("v", "p"), scd2Ts2)), // SCD2 advance
+      ("doc_merge", () => wh.createTable("doc_merge", Seq((1, "a")).toDF("v", "p")),
+        () => wh.mergeUpsert("doc_merge", Seq((1, "b"), (2, "c")).toDF("v", "p"),
+          Seq("v"), partitionBy = Nil))) // unpartitioned merge
+    for ((name, create, replace) <- cases) {
+      create()
+      wh.setDocs(name, "the table", Map("v" -> "kept", "gone_col" -> "dropped"))
+      val before = wh.read(name).collect().toSet
+      replace()
+      assert(wh.read(name).collect().toSet != before, s"$name was not rewritten")
+      assert(wh.docs(name) == Map("__table__" -> "the table", "v" -> "kept"), name)
+    }
+  }
+
+  test("a rebuild re-caches a cached read of the table") {
+    val wh = freshCtx().warehouse
+    wh.createTable("cached_t", Seq(1, 2).toDF("v"))
+    val cached = wh.read("cached_t").cache()
+    try {
+      assert(cached.count() == 2)
+      wh.createTable("cached_t", Seq(3).toDF("v"))
+      assert(wh.read("cached_t").as[Int].collect().toSeq == Seq(3))
+    } finally cached.unpersist()
+  }
+
+  /** A full replace whose write fails in a task: the old rows, canonical
+    * schema and docs still read back, no staging directory is left beside
+    * the table, and the same replace then succeeds. */
+  private def assertCrashSafe(wh: Warehouse, name: String, create: () => Unit,
+                              replace: Boolean => Unit): Unit = {
+    def staging = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(wh.root))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(".staging")).toList
+      finally ls.close()
+    }
+    create()
+    wh.setDocs(name, "the table", Map("v" -> "kept"))
+    val rows = wh.read(name).collect().toSet
+    val schema = wh.canonicalSchema(name)
+    val docs = wh.docs(name)
+    val e = intercept[Exception](replace(true))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("task failed")), e)
+    assert(wh.read(name).collect().toSet == rows)
+    assert(wh.canonicalSchema(name) == schema)
+    assert(wh.docs(name) == docs)
+    assert(staging.isEmpty, s"staging left behind: $staging")
+    replace(false)
+    assert(wh.read(name).collect().toSet != rows)
+    assert(wh.docs(name) == docs)
+    assert(staging.isEmpty, s"staging left behind: $staging")
+  }
+
+  /** `v` from a range, through a UDF that throws in the write's tasks when
+    * `fail` is set (a range, not a local relation, so the optimizer cannot
+    * fold the UDF away before the tasks run). */
+  private def taskFrame(fail: Boolean, from: Long, to: Long): org.apache.spark.sql.DataFrame = {
+    val v = udf((x: Long) => if (fail) throw new IllegalStateException("task failed") else x)
+      .asNondeterministic()
+    spark.range(from, to).select(v($"id").as("v"), lit("new").as("p"))
+  }
+
+  test("crash safety: a failed createTable keeps the old table") {
+    val wh = freshCtx().warehouse
+    assertCrashSafe(wh, "crash_t",
+      () => wh.createTable("crash_t", Seq((1L, "a"), (2L, "b")).toDF("v", "p")),
+      fail => wh.createTable("crash_t", taskFrame(fail, 5, 8)))
+  }
+
+  test("crash safety: a failed SCD2 advance keeps the old history") {
+    val ctx = freshCtx()
+    assertCrashSafe(ctx.warehouse, "crash_s",
+      () => snapshot(ctx, "crash_s", Seq((1L, "a"), (2L, "b")).toDF("v", "p"), scd2Ts1),
+      fail => snapshot(ctx, "crash_s", taskFrame(fail, 1, 3), scd2Ts2))
   }
 
   test("docs are metastore-visible: DESCRIBE surfaces column + table comments") {

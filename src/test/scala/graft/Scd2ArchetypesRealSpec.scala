@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   *    an update closes the old row at the NEW row's updated_at, a
   *    disappearance closes it at the RUN timestamp. `file_format='delta'`
   *    — this spec runs it on a LOG-ENABLED warehouse, so the SCD2
-  *    full-replace lands as TxLog overwrite commits (routeAsLog) and the
+  *    full-replace lands as TxLog overwrite commits (routeFormat) and the
   *    history is read back through the manifest.
   *  - snapshots/spark/b2b_mart/scd2_rfq_media_uploads_snapshot.sql —
   *    CHECK strategy on a single column that is ITSELF part of the

@@ -11,8 +11,8 @@ import graft.runtime._
 /** file_format='delta' routing: the SAME model DAG materialized on a plain
   * parquet warehouse and on a log-format warehouse must produce identical
   * tables through every incremental strategy — while the log side
-  * additionally gets commit history and time travel. This is the
-  * integration the commit-protocol seam pointed at. */
+  * additionally gets commit history and time travel. The warehouse picks
+  * the format from the model's file_format ([[Warehouse.routeFormat]]). */
 class TxLogWarehouseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -125,6 +125,21 @@ class TxLogWarehouseSpec extends SparkSpec {
     runBoth(pq, lg, model(withExtra = true))
     assertParity(pq, lg, "t_sc")
     assert(lg.warehouse.read("t_sc").columns.contains("extra"))
+  }
+
+  test("merge without a unique key keeps new columns under append_new_columns on the log path") {
+    val (pq, lg) = ctxPair()
+    def model(withExtra: Boolean) = Model("t_nk",
+      c => {
+        val base = c.source("default", "region").select($"r_regionkey", $"r_name")
+        if (withExtra) base.withColumn("extra", lit(7)) else base
+      },
+      Materialization.IncrementalMerge(Nil, Nil, OnSchemaChange.AppendNewColumns),
+      fileFormat = "delta")
+    runBoth(pq, lg, model(withExtra = false))
+    runBoth(pq, lg, model(withExtra = true))
+    assertParity(pq, lg, "t_nk")
+    assert(lg.warehouse.read("t_nk").columns.contains("extra"))
   }
 
   test("SCD2 snapshot (the 54 delta snapshots' shape) routes onto the log: " +
