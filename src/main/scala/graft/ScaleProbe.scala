@@ -434,10 +434,10 @@ object ScaleProbe {
     // txlog FILE-COUNT probe: the 100 TB regime is 10k–100k LIVE files per
     // snapshot (not commit count — the checkpoint already bounds that).
     // Manifest parse is O(files) driver-side metadata (same order as
-    // Spark's own directory listing would be); the partition re-attach must
-    // NOT inline O(files) literals into every reader plan — past
-    // inlinePartitionMapThreshold readSubset broadcast-joins a manifest
-    // frame, keeping reader plans constant-size in file count.
+    // Spark's own directory listing would be); reads hand the manifest's
+    // files and partition values to Spark through ManifestFileIndex, so a
+    // reader plan is one scan whatever the file count and the partition
+    // predicate prunes files before any footer is opened.
     locally {
       import java.nio.file.Paths
       import graft.plans.TxLog
@@ -452,7 +452,7 @@ object ScaleProbe {
         timed(s"txlog_manifest resolve (~${tasks * 7} files)") {
           n = TxLog.snapshot(t).files.size.toLong; n
         }
-        timed(s"txlog_read manifest-join + partition prune ($n files)") {
+        timed(s"txlog_read manifest index + partition prune ($n files)") {
           TxLog.read(spark, t).filter(col("p") === "3").count()
         }
         timed(s"txlog_compact ($n files -> 7)") {

@@ -1,12 +1,20 @@
 package graft.plans
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory,
+  PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** A minimal but real table-format transaction log — the self-contained
   * stand-in for the Delta log the reference materializes 197 models on
@@ -51,18 +59,16 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale posture: commits are metadata (KBs per commit independent of data
   * volume); readers resolve a snapshot with ≤2 small reads (latest
-  * checkpoint + tail commits) and partition-prune on the manifest's
-  * partition values BEFORE any parquet footer is opened — driver-side work
-  * proportional to file count, the same work Spark's own
-  * PartitioningAwareFileIndex does after an O(files) directory listing.
+  * checkpoint + tail commits) and scan it through a [[ManifestFileIndex]],
+  * on which Spark prunes by the manifest's partition values BEFORE any
+  * parquet footer is opened. That is one stat per live file and no listing
+  * job: the work Spark's own PartitioningAwareFileIndex does after an
+  * O(files) directory listing, without the listing.
   */
 object TxLog {
 
   final case class AddFile(path: String, partitionValues: Map[String, String], rows: Long)
-  final case class Snapshot(version: Long, files: Seq[AddFile],
-                            partitionCols: Seq[String]) {
-    def paths(root: Path): Seq[String] = files.map(f => root.resolve(f.path).toString)
-  }
+  final case class Snapshot(version: Long, files: Seq[AddFile], partitionCols: Seq[String])
 
   /** Optimistic-concurrency loss: another writer claimed the version this
     * writer was about to commit. Re-read the snapshot and retry. */
@@ -325,96 +331,41 @@ object TxLog {
   }
 
   /** Read the live snapshot (or a historical one) as a DataFrame, from the
-    * manifest's explicit file list — no directory listing. `partitionFilter`
-    * prunes files by their manifest partition values BEFORE any footer is
-    * opened. Partition columns are re-attached from the manifest (they are
-    * not in the file bytes, same as Spark's own partitioned layout). */
-  def read(spark: SparkSession, table: Path, asOf: Long = Long.MaxValue,
-           partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame = {
+    * manifest's explicit file list through [[readSubset]]. */
+  def read(spark: SparkSession, table: Path, asOf: Long = Long.MaxValue): DataFrame = {
     val snap = snapshot(table, asOf)
-    val live = snap.files.filter(f => partitionFilter(f.partitionValues))
-    if (live.isEmpty)
-      throw new IllegalStateException(s"txlog snapshot v${snap.version} has no files after pruning")
-    readSubset(spark, table, live, snap.partitionCols)
+    readSubset(spark, table, snap.files, snap.partitionCols)
   }
 
-  /** The staging-unique terminal name segment of the file being scanned —
-    * input_file_name()'s scheme/prefix varies by filesystem, the name does
-    * not. Joins a scanned row back to its manifest entry. */
-  def scannedFileName: Column = org.apache.spark.sql.functions
-    .regexp_extract(input_file_name(), "[^/]+$", 0)
-
-  /** Above this file count the partition re-attach switches from an inline
-    * literal map to a broadcast manifest join: a 10k–100k-file snapshot (the
-    * 100 TB regime) would otherwise plant an O(files) expression tree in
-    * EVERY reader plan — quadratic driver work across queries, and far past
-    * codegen's method-size limits. 256 keeps small tables on the zero-join
-    * codegen'd path. */
-  private[graft] val inlinePartitionMapThreshold = 256
-
-  /** Read an explicit subset of manifest files, re-attaching partition
-    * columns (as strings) from their manifest partition values. The files
-    * are read with [[graft.Tables.readParquet]], keyed on the table, so
-    * re-reading an unchanged file set infers no schema. Small
-    * snapshots inline the file→value map into the plan (codegen'd, no join);
-    * large ones broadcast-join the manifest — constant-size plans at any
-    * file count, the same shape Delta's own scan uses (partition values ride
-    * the file index, not the plan).
-    *
-    * `schema` is the table's column set when the caller keeps one (the
-    * warehouse's canonical schema): the files are then read with it, as the
-    * warehouse reads a parquet table, so a column added after older files
-    * were written keeps its values. Inference reads one file's footer only. */
+  /** Read an explicit subset of manifest files through one
+    * [[ManifestFileIndex]] in a `HadoopFsRelation`: the scan Spark plans for a
+    * partitioned parquet directory, partition columns last. With `schema`
+    * (the warehouse's canonical schema) the files are read with it, as the
+    * warehouse reads a parquet table, and the partition columns take its
+    * types. Without it the data schema is inferred through
+    * [[graft.Tables.readParquet]] (cached per unchanged file set), partition
+    * columns are strings, and an empty file set fails. */
   def readSubset(spark: SparkSession, table: Path, files: Seq[AddFile],
                  partitionCols: Seq[String],
-                 inlineThreshold: Int = inlinePartitionMapThreshold,
                  schema: Option[StructType] = None): DataFrame = {
-    val paths = files.map(f => table.resolve(f.path).toString)
-    val base = schema match {
-      case Some(s) => spark.read
-        .schema(StructType(s.fields.filterNot(f => partitionCols.contains(f.name))))
-        .parquet(paths: _*)
-      case None => graft.Tables.readParquet(spark, table.toString, paths)
+    val full = schema.getOrElse {
+      if (files.isEmpty)
+        throw new IllegalStateException(s"txlog table $table has no files to infer a schema from")
+      graft.Tables.readParquet(spark, table.toString,
+        files.map(f => table.resolve(f.path).toString)).schema
     }
-    if (partitionCols.isEmpty) base
-    else if (files.size <= inlineThreshold)
-      partitionCols.foldLeft(base) { (df, c) =>
-        val mapping = files.map { f =>
-          (f.path.split('/').last, f.partitionValues.getOrElse(c, "__NULL__"))
-        }
-        val m = org.apache.spark.sql.functions.map(
-          mapping.flatMap { case (p, v) => Seq(lit(p), lit(v)) }: _*)
-        df.withColumn(c,
-          org.apache.spark.sql.functions.nullif(m(scannedFileName), lit("__NULL__")))
-      }
-    else manifestJoin(spark, base, files, partitionCols)
+    val partitionSchema = StructType(partitionCols.map { c =>
+      schema.flatMap(_.find(_.name == c)).getOrElse(StructField(c, StringType)).copy(nullable = true)
+    })
+    val dataSchema =
+      org.apache.spark.graft.AsNullable(StructType(full.filterNot(f => partitionCols.contains(f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestFileIndex(table, files)(spark, partitionSchema),
+      partitionSchema, dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** The large-snapshot partition re-attach: broadcast a (file count)-row
-    * manifest frame and equi-join on the scanned file name. One broadcast of
-    * KBs-per-file metadata, zero shuffle of the data side. */
-  private def manifestJoin(spark: SparkSession, base: DataFrame,
-                           files: Seq[AddFile], partitionCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // the working column must not shadow a real data column (withColumn
-    // would overwrite it with the scanned file name and drop() would then
-    // remove the user's data) — suffix until free
-    val fileCol = Iterator.from(0).map {
-      case 0 => "__txlog_file"
-      case i => s"__txlog_file_$i"
-    }.find(n => !base.columns.contains(n)).get
-    val schema = StructType(StructField(fileCol, StringType, nullable = false) +:
-      partitionCols.map(StructField(_, StringType, nullable = true)))
-    val rows: java.util.List[Row] = files.map { f =>
-      Row.fromSeq(f.path.split('/').last +:
-        partitionCols.map(c => f.partitionValues.get(c).orNull))
-    }.asJava
-    val manifest = spark.createDataFrame(rows, schema)
-    base.withColumn(fileCol, scannedFileName)
-      .join(org.apache.spark.sql.functions.broadcast(manifest), Seq(fileCol), "left")
-      .drop(fileCol)
-  }
+  /** Where a scan of [[ManifestFileIndex]] finds `f`. */
+  def filePath(table: Path, f: AddFile): HPath = new HPath(table.resolve(f.path).toUri)
 
   /** File-level replace — the commit shape of a Delta MERGE: tombstone
     * exactly `removePaths` (manifest-relative) and add `df`'s freshly staged
@@ -528,4 +479,51 @@ object TxLog {
       (v, lines.count(_.startsWith("""{"add"""")), lines.count(_.startsWith("""{"remove"""")))
     }
   }
+}
+
+/** A [[FileIndex]] over an explicit list of [[TxLog]] manifest files: the log,
+  * not a directory listing, names the files a read scans and their partition
+  * values, so Spark prunes on `partitionSchema` as on a partitioned directory
+  * and plans one scan at any file count, with one stat per file and no Spark
+  * job. Equality is the case class's (table plus file list), so plans over one
+  * snapshot compare equal. The manifest keeps each partition value as the path
+  * segment Spark wrote (escaped; `__HIVE_DEFAULT_PARTITION__` for NULL); the
+  * index decodes it once per distinct value with Spark's own
+  * partition-discovery cast, so log and parquet reads of the same rows agree. */
+final case class ManifestFileIndex(table: Path, files: Seq[TxLog.AddFile])(
+    spark: SparkSession, override val partitionSchema: StructType) extends FileIndex {
+
+  private val statuses = files.map { f =>
+    val a = Files.readAttributes(table.resolve(f.path), classOf[BasicFileAttributes])
+    // replication 0 and block size 1, as Delta's own index builds its statuses
+    f -> new FileStatus(a.size, false, 0, 1L, a.lastModifiedTime.toMillis, TxLog.filePath(table, f))
+  }
+
+  private val partitions: Seq[(InternalRow, Array[FileStatus])] = {
+    val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
+    statuses.groupBy(_._1.partitionValues).toSeq.map { case (pv, fs) =>
+      InternalRow.fromSeq(partitionSchema.map(c => PartitioningUtils.castPartValueToDesiredType(
+        c.dataType, pv.getOrElse(c.name, DEFAULT_PARTITION_NAME), zone))) -> fs.map(_._2).toArray
+    }
+  }
+
+  override def rootPaths: Seq[HPath] = Seq(new HPath(table.toUri))
+
+  /** Spark passes only predicates over partition columns here. */
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = partitionFilters.reduceOption(And).map(p => Predicate.createInterpreted(p.transform {
+      case a: AttributeReference =>
+        val i = partitionSchema.fieldIndex(a.name)
+        BoundReference(i, partitionSchema(i).dataType, nullable = true)
+    }))
+    partitions.collect { case (row, fs) if keep.forall(_.eval(row)) => PartitionDirectory(row, fs) }
+  }
+
+  override def inputFiles: Array[String] = statuses.map(_._2.getPath.toString).toArray
+
+  override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
+
+  /** The file set is the snapshot's; there is nothing to re-list. */
+  override def refresh(): Unit = ()
 }

@@ -105,7 +105,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * ignores file columns outside the canonical set (ignore policy), which is
     * exactly what the old merge-then-project path computed. Only sidecar-less
     * directories (externally created) fall back to mergeSchema. A log-backed
-    * table reads its manifest's live files with the same canonical schema. */
+    * table reads its manifest's live files through one
+    * [[graft.plans.ManifestFileIndex]] with the same canonical schema and
+    * projection, so its partition predicates prune files too. */
   def read(name: String): DataFrame = views.get(name) match {
     case Some(v) =>
       if (v.derived._2 != mutationEpoch) v.build.foreach(b => v.derived = derive(b))
@@ -618,37 +620,23 @@ final class Warehouse(val spark: SparkSession, val root: String,
   // merge — FILE-level rewrite granularity (the actual Delta MERGE shape),
   // finer than the parquet path's partition-directory rewrite. SCD2
   // snapshots write through [[createTable]], so a delta snapshot's advance
-  // is one log overwrite commit.
+  // is one log overwrite commit. Reads take the file list and partition
+  // values from the manifest, never from a directory listing.
 
   def isLogBacked(name: String): Boolean =
     graft.plans.TxLog.exists(Paths.get(tablePath(name)))
 
   private def logPath(name: String): Path = Paths.get(tablePath(name))
 
-  /** Log-backed read with the canonical-schema projection (partition columns
-    * come back as strings from the manifest; the cast restores their
-    * canonical types, mirroring what Spark's own partition-dir inference
-    * does for the parquet path). */
-  private def readLogCanonical(
-      name: String,
-      partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame = {
-    // a 0-row materialization legitimately commits ZERO files (a dynamic
-    // overwrite of an empty frame writes no partitions), and a pruning
-    // filter can empty any snapshot — mirror the parquet path and return
-    // an empty frame with the sidecar schema instead of failing the read
-    // (the corpus EXECUTE phase reads 0-row tables constantly)
-    val p = logPath(name)
-    val snap = graft.plans.TxLog.snapshot(p)
-    val live = snap.files.filter(f => partitionFilter(f.partitionValues))
-    val base =
-      if (live.nonEmpty) readLogFiles(name, live, snap.partitionCols)
-      else canonicalSchema(name) match {
-        case Some(schema) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        case None =>
-          graft.plans.TxLog.read(spark, p, partitionFilter = partitionFilter)
-      }
-    canonicalCast(name, base)
+  /** Log-backed read: the snapshot's live files through the manifest index
+    * with the canonical schema, which also types the partition columns, then
+    * the parquet read's projection to canonical order (the index puts
+    * partition columns last). A snapshot with no files (a 0-row
+    * materialization commits none) reads as an empty frame with the schema. */
+  private def readLogCanonical(name: String): DataFrame = {
+    val snap = graft.plans.TxLog.snapshot(logPath(name))
+    val df = readLogFiles(name, snap.files, snap.partitionCols)
+    canonicalSchema(name).fold(df)(s => df.select(s.fieldNames.toSeq.map(col): _*))
   }
 
   /** Manifest files of a log table, read with its canonical schema. */
@@ -686,18 +674,23 @@ final class Warehouse(val spark: SparkSession, val root: String,
         if (incrementPartitionsOnly && partitionBy.nonEmpty)
           snap.files.filter(f => incPvs.contains(f.partitionValues))
         else snap.files
+      // each matched row's file, as the scan reports it (a URI), compared with
+      // the index's path for each candidate by decoded path: Spark may spell
+      // the scheme part differently (`file:/` for `file:///`)
       val matchedFiles: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else readLogFiles(name, candidates, snap.partitionCols)
-          .withColumn("__file", TxLog.scannedFileName)
-          .join(keys, uniqueKey, "left_semi")
-          .select(col("__file")).distinct().collect().map(_.getString(0)).toSet
-      val removes = candidates.filter(f => matchedFiles.contains(f.path.split('/').last))
+        else {
+          val scan = readLogFiles(name, candidates, snap.partitionCols)
+          scan.select(scan.metadataColumn("_metadata").getField("file_path").as("__file") +:
+              uniqueKey.map(col): _*)
+            .join(keys, uniqueKey, "left_semi")
+            .select(col("__file")).distinct().collect()
+            .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+        }
+      val removes = candidates.filter(f => matchedFiles.contains(TxLog.filePath(p, f).toUri.getPath))
       val survivors =
         if (removes.isEmpty) None
-        else Some(canonicalCast(name,
-          readLogFiles(name, removes, snap.partitionCols))
-          .join(keys, uniqueKey, "left_anti"))
+        else Some(readLogFiles(name, removes, snap.partitionCols).join(keys, uniqueKey, "left_anti"))
       val out = survivors match {
         case Some(s) => aligned.unionByName(s.select(aligned.columns.toSeq.map(col): _*))
         case None => aligned
@@ -706,23 +699,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
       catch { case _: TxLog.TxConflict if attempts < 5 => () }
     }
   }
-
-  private def canonicalCast(name: String, df: DataFrame): DataFrame =
-    canonicalSchema(name) match {
-      case Some(s) =>
-        val actual = df.schema.fields.map(f => f.name -> f.dataType).toMap
-        df.select(s.fields.toSeq.map { f =>
-          actual.get(f.name) match {
-            // nullability-normalized identity: casting e.g. array<string>
-            // with containsNull=true to a canonical containsNull=false is
-            // both unnecessary and rejected by the analyzer
-            case Some(t) if t.catalogString == f.dataType.catalogString => col(f.name)
-            case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        }: _*)
-      case None => df
-    }
 
   /** Apply the on_schema_change policy against the canonical schema, update
     * the sidecar, and return the frame to write. */

@@ -38,6 +38,17 @@ trait SparkSpec extends AnyFunSuite {
     n.get
   }
 
+  /** Runs `df` once and returns how many files its scans read, from each
+    * file scan's `numFiles` metric (the files left after partition pruning). */
+  def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+  }
+
   def freshCtx(vars: Map[String, String] = Map.empty): Ctx = {
     val wh = new Warehouse(spark, graft.runtime.TempDirs.create("graft_wh"))
     Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"), vars)

@@ -269,35 +269,21 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, t, asOf = v - 1).count() == 9)
   }
 
-  test("large-snapshot partition re-attach: broadcast manifest join equals the " +
-       "inline map and never shuffles the data side") {
-    val t = freshTable()
-    TxLog.overwrite(t, df((1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)), Seq("part"))
-    TxLog.append(t, df((4, "a", 4.0), (5, "b", 5.0)))
-    val snap = TxLog.snapshot(t)
-    val inline = TxLog.readSubset(spark, t, snap.files, snap.partitionCols)
-    val joined = TxLog.readSubset(spark, t, snap.files, snap.partitionCols,
-      inlineThreshold = 0) // force the manifest-join path
-    assert(joined.columns.toSeq == inline.columns.toSeq,
-      "both re-attach paths must yield the same schema (order included)")
-    val key = Seq($"id", $"part", $"value")
-    assert(joined.select(key: _*).as[(Int, String, Double)].collect().sorted.toSeq ==
-           inline.select(key: _*).as[(Int, String, Double)].collect().sorted.toSeq)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-      s"manifest join must broadcast the manifest side:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffleExchange"),
-      s"manifest join must not shuffle the data side:\n$plan")
-  }
-
   test("manifest partition pruning reads only the requested partition's files") {
     val t = freshTable()
     TxLog.overwrite(t, df((1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)), Seq("part"))
     val snap = TxLog.snapshot(t)
-    val pruned = snap.files.filter(_.partitionValues.get("part").contains("b"))
-    assert(pruned.nonEmpty && pruned.size < snap.files.size,
-      "partitioned write must produce per-partition files")
-    val rows = TxLog.read(spark, t, partitionFilter = _.get("part").contains("b"))
+    val inB = snap.files.count(_.partitionValues.get("part").contains("b"))
+    assert(inB > 0 && inB < snap.files.size, "partitioned write must produce per-partition files")
+    val rows = TxLog.read(spark, t).filter($"part" === "b")
     assert(rows.select($"id").as[Int].collect().toSeq == Seq(2))
+    assert(filesScanned(rows) == inB)
+  }
+
+  test("a NULL partition value reads back as NULL") {
+    val t = freshTable()
+    TxLog.overwrite(t, Seq((1, Some("a")), (2, None)).toDF("id", "part"), Seq("part"))
+    val rows = TxLog.read(spark, t).select($"id", $"part").as[(Int, Option[String])]
+    assert(rows.collect().sorted.toSeq == Seq((1, Some("a")), (2, None)))
   }
 }

@@ -71,16 +71,79 @@ class TxLogWarehouseSpec extends SparkSpec {
 
   test("a second read of an unchanged log table starts no Spark job before its action") {
     val (_, lg) = ctxPair()
-    // few files on purpose: above Spark's parallel-listing threshold (32
-    // paths) the file listing itself runs as a job
-    val m = Model("t_reread",
+    // a few files, and 300: past Spark's parallel-listing threshold (32
+    // paths) a read that lists its files runs the listing as a job
+    val few = Model("t_reread",
       c => c.source("default", "orders").select($"o_orderkey", $"o_orderstatus"),
       Materialization.IncrementalInsertOverwrite(Seq("o_orderstatus")), fileFormat = "delta")
-    new DagRunner(Seq(m)).materialize(lg, m)
-    val first = lg.warehouse.read("t_reread")
-    var second: DataFrame = null
-    assert(jobsStartedBy { second = lg.warehouse.read("t_reread") } == 0)
-    assert(sortedRows(second) == sortedRows(first))
+    val many = Model("t_reread_many",
+      c => c.spark.range(0, 600).select($"id", ($"id" % 300).as("p")),
+      Materialization.IncrementalInsertOverwrite(Seq("p")), fileFormat = "delta")
+    for (m <- Seq(few, many)) {
+      new DagRunner(Seq(m)).materialize(lg, m)
+      val first = lg.warehouse.read(m.name)
+      var second: DataFrame = null
+      assert(jobsStartedBy { second = lg.warehouse.read(m.name) } == 0, m.name)
+      val plan = second.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+      assert(sortedRows(second) == sortedRows(first))
+    }
+    assert(TxLog.snapshot(Paths.get(lg.warehouse.tablePath("t_reread_many"))).files.size >= 300)
+  }
+
+  test("a model's SQL predicate on a log table's partition column scans only its files") {
+    val (pq, lg) = ctxPair()
+    val m = Model("t_prune",
+      c => c.source("default", "orders").select($"o_orderkey", $"o_orderstatus"),
+      Materialization.IncrementalInsertOverwrite(Seq("o_orderstatus")), fileFormat = "delta")
+    runBoth(pq, lg, m)
+    val sql = "SELECT o_orderkey FROM {{ ref('t_prune') }} WHERE o_orderstatus = 'F'"
+    val picked = SqlTemplater.runSql(lg, "pick", sql)
+    val files = TxLog.snapshot(Paths.get(lg.warehouse.tablePath("t_prune"))).files
+    val inF = files.count(_.partitionValues.get("o_orderstatus").contains("F"))
+    assert(inF > 0 && inF < files.size)
+    assert(filesScanned(picked) == inF)
+    assert(sortedRows(picked) == sortedRows(SqlTemplater.runSql(pq, "pick", sql)))
+  }
+
+  test("insert_overwrite: NULL and escaped string partition values read back as written") {
+    val (pq, lg) = ctxPair()
+    val m = Model("t_esc",
+      _ => Seq((1, "a:b"), (2, null), (3, "x/y"), (4, "50%")).toDF("id", "p"),
+      Materialization.IncrementalInsertOverwrite(Seq("p")), fileFormat = "delta")
+    runBoth(pq, lg, m)
+    assertParity(pq, lg, "t_esc")
+  }
+
+  test("insert_overwrite: a timestamp partition value reads back as written") {
+    val (pq, lg) = ctxPair()
+    val m = Model("t_tsp",
+      _ => Seq((1, java.sql.Timestamp.valueOf("2001-07-01 10:00:00"))).toDF("id", "ts"),
+      Materialization.IncrementalInsertOverwrite(Seq("ts")), fileFormat = "delta")
+    runBoth(pq, lg, m)
+    assertParity(pq, lg, "t_tsp")
+  }
+
+  test("merge on an escaped partition value replaces the matched key") {
+    val (pq, lg) = ctxPair()
+    def model(v: String) = Model("t_mesc",
+      _ => Seq((1, "a:b", v)).toDF("id", "p", "v"),
+      Materialization.IncrementalMerge(Seq("id"), Seq("p")), fileFormat = "delta")
+    runBoth(pq, lg, model("one"))
+    runBoth(pq, lg, model("two"))
+    assertParity(pq, lg, "t_mesc")
+  }
+
+  test("a log table whose snapshot has no files reads as an empty frame with its schema") {
+    val (pq, lg) = ctxPair()
+    val m = Model("t_empty",
+      c => c.source("default", "orders").filter($"o_orderkey" < 0)
+        .select($"o_orderkey", $"o_orderstatus"),
+      Materialization.IncrementalInsertOverwrite(Seq("o_orderstatus")), fileFormat = "delta")
+    runBoth(pq, lg, m)
+    assert(TxLog.snapshot(Paths.get(lg.warehouse.tablePath("t_empty"))).files.isEmpty)
+    assertParity(pq, lg, "t_empty")
+    assert(lg.warehouse.read("t_empty").schema == pq.warehouse.read("t_empty").schema)
   }
 
   test("append accumulates identically") {
