@@ -6,6 +6,9 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
@@ -13,7 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory,
   PartitioningUtils}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** A minimal but real table-format transaction log — the self-contained
@@ -342,17 +346,22 @@ object TxLog {
     * partitioned parquet directory, partition columns last. With `schema`
     * (the warehouse's canonical schema) the files are read with it, as the
     * warehouse reads a parquet table, and the partition columns take its
-    * types. Without it the data schema is inferred through
-    * [[graft.Tables.readParquet]] (cached per unchanged file set), partition
-    * columns are strings, and an empty file set fails. */
+    * types. Without it the data schema is read on the driver, with no Spark
+    * job, from the footer of the first file by path (the one
+    * `spark.read.parquet` infers from), partition columns are strings, and
+    * an empty file set fails. */
   def readSubset(spark: SparkSession, table: Path, files: Seq[AddFile],
                  partitionCols: Seq[String],
                  schema: Option[StructType] = None): DataFrame = {
     val full = schema.getOrElse {
       if (files.isEmpty)
         throw new IllegalStateException(s"txlog table $table has no files to infer a schema from")
-      graft.Tables.readParquet(spark, table.toString,
-        files.map(f => table.resolve(f.path).toString)).schema
+      val first = files.map(filePath(table, _)).minBy(_.toString)
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(first, spark.sessionState.newHadoopConf()), NO_FILTER)
+      // converted under the session's parquet inference settings
+      ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
     val partitionSchema = StructType(partitionCols.map { c =>
       schema.flatMap(_.find(_.name == c)).getOrElse(StructField(c, StringType)).copy(nullable = true)

@@ -20,16 +20,17 @@ import org.apache.spark.sql.functions._
   * to an md5 surrogate over key+updated_at — so every run recomputes
   * identical values and the bucket-pruned path stays byte-stable.
   * The update is ONE full-outer join of the staged snapshot against the open
-  * rows on the unique key (closed history passes through untouched), then an
-  * atomic table rewrite — no Delta MERGE needed. At scale both sides shuffle
-  * once on the key; history never re-shuffles.
+  * rows on the unique key (closed history passes through untouched), then a
+  * staged rewrite of the whole table ([[snapshot]]) or of the touched
+  * buckets only ([[snapshotBucketed]]) — no Delta MERGE needed. At scale
+  * both sides shuffle once on the key; history never re-shuffles.
   *
   * Requirement (same as dbt): `staged` must be unique per `uniqueKey`.
   */
 object Scd2 {
 
   /** Version-change predicate between the previously-open row (`o.*`) and the
-    * staged row (`n.*`) — shared by the full-rewrite and bucket-pruned paths. */
+    * staged row (`n.*`). */
   private def changedPredicate(strategy: Scd2Strategy, payloadCols: Seq[String],
                                uniqueKey: String): Column = strategy match {
     case Scd2Strategy.Timestamp(updatedAt) =>
@@ -58,60 +59,8 @@ object Scd2 {
 
   def snapshot(ctx: Ctx, name: String, staged: DataFrame, uniqueKey: String,
                strategy: Scd2Strategy, invalidateHardDeletes: Boolean,
-               runTs: Timestamp): Unit = {
-    val wh = ctx.warehouse
-    val payloadCols = staged.columns.toSeq
-
-    def validFrom(prefix: String) = strategy match {
-      case Scd2Strategy.Timestamp(updatedAt) => col(s"$prefix.$updatedAt").cast("timestamp")
-      case Scd2Strategy.Check(_) => lit(runTs)
-    }
-
-    if (!wh.tableExists(name)) {
-      wh.createTable(name, withMetaCols(staged
-        .withColumn("dbt_valid_from", strategy match {
-          case Scd2Strategy.Timestamp(u) => col(u).cast("timestamp")
-          case Scd2Strategy.Check(_) => lit(runTs)
-        })
-        .withColumn("dbt_valid_to", lit(null).cast("timestamp")), uniqueKey))
-      return
-    }
-
-    val existing = wh.read(name)
-    val closed = existing.filter(col("dbt_valid_to").isNotNull)
-    val open = existing.filter(col("dbt_valid_to").isNull).alias("o")
-    val fresh = staged.alias("n")
-
-    val changed = changedPredicate(strategy, payloadCols, uniqueKey)
-
-    val j = open.join(fresh, col(s"o.$uniqueKey") === col(s"n.$uniqueKey"), "full_outer")
-    val oPresent = col(s"o.$uniqueKey").isNotNull
-    val nPresent = col(s"n.$uniqueKey").isNotNull
-
-    def side(prefix: String, from: org.apache.spark.sql.Column,
-             to: org.apache.spark.sql.Column) =
-      payloadCols.map(c => col(s"$prefix.$c").as(c)) :+ from.as("dbt_valid_from") :+
-        to.as("dbt_valid_to")
-
-    // unchanged / hard-delete handling of the previously-open row
-    val keepOrClose = j.filter(oPresent).select(side("o",
-      col("o.dbt_valid_from"),
-      when(nPresent && changed, validFrom("n"))
-        .when(!nPresent && invalidateHardDeletes, lit(runTs))
-        .otherwise(lit(null).cast("timestamp"))): _*)
-
-    // brand-new keys and new versions of changed keys
-    val opened = j.filter(nPresent && (!oPresent || changed))
-      .select(side("n", validFrom("n"), lit(null).cast("timestamp")): _*)
-
-    val result = closed.select(keepOrClose.columns.map(col): _*)
-      .unionByName(keepOrClose)
-      .unionByName(opened)
-
-    // createTable stages the new version beside the live table, so reading
-    // the old files while writing it is safe; the swap happens after the write.
-    wh.createTable(name, withMetaCols(result, uniqueKey))
-  }
+               runTs: Timestamp): Unit =
+    advance(ctx, name, staged, uniqueKey, strategy, invalidateHardDeletes, runTs, None)
 
   /** Internal bucket partition column of bucketed snapshot tables. */
   val BucketCol = "scd_bucket"
@@ -138,33 +87,41 @@ object Scd2 {
     */
   def snapshotBucketed(ctx: Ctx, name: String, staged: DataFrame, uniqueKey: String,
                        strategy: Scd2Strategy, invalidateHardDeletes: Boolean,
-                       runTs: Timestamp, numBuckets: Int = 32): Unit = {
+                       runTs: Timestamp, numBuckets: Int = 32): Unit =
+    advance(ctx, name, staged, uniqueKey, strategy, invalidateHardDeletes, runTs,
+      Some(numBuckets))
+
+  /** One SCD2 run of either entry point; `buckets` is the bucket count of a
+    * bucketed table. The two differ only in what they publish: the whole
+    * history through `createTable`, or the touched buckets through
+    * `insertOverwritePartitions`. */
+  private def advance(ctx: Ctx, name: String, staged: DataFrame, uniqueKey: String,
+                      strategy: Scd2Strategy, invalidateHardDeletes: Boolean,
+                      runTs: Timestamp, buckets: Option[Int]): Unit = {
     val wh = ctx.warehouse
     val payloadCols = staged.columns.toSeq
-    require(!payloadCols.contains(BucketCol),
+    require(buckets.isEmpty || !payloadCols.contains(BucketCol),
       s"staged frame may not carry reserved column $BucketCol")
-    def bucketOf(key: Column): Column = pmod(xxhash64(key), lit(numBuckets)).cast("int")
+    def bucketOf(key: Column): Column = pmod(xxhash64(key), lit(buckets.get)).cast("int")
+    def withBucket(df: DataFrame) =
+      buckets.fold(df)(_ => df.withColumn(BucketCol, bucketOf(col(uniqueKey))))
 
     def validFrom(prefix: String) = strategy match {
       case Scd2Strategy.Timestamp(updatedAt) => col(s"$prefix.$updatedAt").cast("timestamp")
       case Scd2Strategy.Check(_) => lit(runTs)
     }
+    val fresh = staged.alias("n")
 
     if (!wh.tableExists(name)) {
-      wh.createTable(name, withMetaCols(staged
-        .withColumn("dbt_valid_from", strategy match {
-          case Scd2Strategy.Timestamp(u) => col(u).cast("timestamp")
-          case Scd2Strategy.Check(_) => lit(runTs)
-        })
-        .withColumn("dbt_valid_to", lit(null).cast("timestamp")), uniqueKey)
-        .withColumn(BucketCol, bucketOf(col(uniqueKey))),
-        partitionBy = Seq(BucketCol))
+      wh.createTable(name, withBucket(withMetaCols(fresh
+        .withColumn("dbt_valid_from", validFrom("n"))
+        .withColumn("dbt_valid_to", lit(null).cast("timestamp")), uniqueKey)),
+        partitionBy = buckets.map(_ => BucketCol).toSeq)
       return
     }
 
     val existing = wh.read(name)
     val open = existing.filter(col("dbt_valid_to").isNull).alias("o")
-    val fresh = staged.alias("n")
     val changed = changedPredicate(strategy, payloadCols, uniqueKey)
     val j = open.join(fresh, col(s"o.$uniqueKey") === col(s"n.$uniqueKey"), "full_outer")
     val oPresent = col(s"o.$uniqueKey").isNotNull
@@ -173,35 +130,44 @@ object Scd2 {
     // a bucket needs rewriting iff it holds a new key, a changed key, or
     // (when invalidating) a hard-deleted key. Catalyst column-prunes this
     // aggregate's scan down to the key + compare columns.
-    val touches = (nPresent && (!oPresent || changed)) ||
-      (oPresent && !nPresent && lit(invalidateHardDeletes))
-    val touched: Seq[Int] = j.filter(touches)
-      .select(bucketOf(coalesce(col(s"n.$uniqueKey"), col(s"o.$uniqueKey"))).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return
+    val touched: Option[Seq[Int]] = buckets.map { _ =>
+      val touches = (nPresent && (!oPresent || changed)) ||
+        (oPresent && !nPresent && lit(invalidateHardDeletes))
+      j.filter(touches)
+        .select(bucketOf(coalesce(col(s"n.$uniqueKey"), col(s"o.$uniqueKey"))).as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+    }
+    if (touched.exists(_.isEmpty)) return
+    def inTouched(df: DataFrame) = touched.fold(df)(t => df.filter(col(BucketCol).isin(t: _*)))
 
     def side(prefix: String, from: Column, to: Column) =
       payloadCols.map(c => col(s"$prefix.$c").as(c)) :+ from.as("dbt_valid_from") :+
         to.as("dbt_valid_to")
 
+    // unchanged / hard-delete handling of the previously-open row
     val keepOrClose = j.filter(oPresent).select(side("o",
       col("o.dbt_valid_from"),
       when(nPresent && changed, validFrom("n"))
         .when(!nPresent && lit(invalidateHardDeletes), lit(runTs))
         .otherwise(lit(null).cast("timestamp"))): _*)
+
+    // brand-new keys and new versions of changed keys
     val opened = j.filter(nPresent && (!oPresent || changed))
       .select(side("n", validFrom("n"), lit(null).cast("timestamp")): _*)
-    // closed history only inside rewritten buckets rides along; the literal
-    // IN over the partition column static-prunes this scan.
-    val closedTouched = existing.filter(col("dbt_valid_to").isNotNull)
-      .filter(col(BucketCol).isin(touched: _*))
-      .select((payloadCols ++ Seq("dbt_valid_from", "dbt_valid_to")).map(col): _*)
 
-    val result = withMetaCols(closedTouched
-      .unionByName(keepOrClose)
-      .unionByName(opened), uniqueKey)
-      .withColumn(BucketCol, bucketOf(col(uniqueKey)))
-      .filter(col(BucketCol).isin(touched: _*))
-    wh.insertOverwritePartitions(name, result, Seq(BucketCol), OnSchemaChange.Ignore)
+    // closed history passes through untouched; in a bucketed table only the
+    // rewritten buckets' rides along, and the literal IN over the partition
+    // column static-prunes this scan
+    val closed = inTouched(existing.filter(col("dbt_valid_to").isNotNull))
+      .select(keepOrClose.columns.toSeq.map(col): _*)
+    val result = withMetaCols(closed.unionByName(keepOrClose).unionByName(opened), uniqueKey)
+
+    // both publishes stage the new files beside the live table, so reading
+    // the old files while writing them is safe
+    touched match {
+      case None => wh.createTable(name, result)
+      case Some(_) => wh.insertOverwritePartitions(name, inTouched(withBucket(result)),
+        Seq(BucketCol), OnSchemaChange.Ignore)
+    }
   }
 }

@@ -32,7 +32,6 @@ object SqlTemplater {
   def staticSources(text: String): Seq[(String, String)] =
     SourceRe.findAllMatchIn(text).map(m => (m.group(1), m.group(2))).toSeq.distinct
   private val VarRe = """\{\{\s*var\s*\(\s*['"]([^'"]+)['"](?:\s*,\s*['"]([^'"]*)['"])?\s*\)\s*\}\}""".r
-  private val IncrRe = """(?s)\{%\s*if\s+is_incremental\(\)\s*%\}(.*?)(?:\{%\s*else\s*%\}(.*?))?\{%\s*endif\s*%\}""".r
   private val ThisRe = """\{\{\s*this\s*\}\}""".r
 
   /** A `{% macro name(params) %}body{% endmacro %}` definition: the body is
@@ -201,9 +200,10 @@ object SqlTemplater {
   }
 
   /** Pure-text render of a dbt-style SQL body: config/comment strip, macro
-    * expansion, Jinja control flow, var / is_incremental substitution, and
-    * ref/source/this renaming — everything short of touching a catalog.
-    * `runSql` executes this; CorpusSweep parses it corpus-wide. */
+    * expansion, Jinja control flow (is_incremental() included), var
+    * substitution, and ref/source/this renaming — everything short of
+    * touching a catalog. `runSql` executes this; CorpusSweep parses it
+    * corpus-wide. */
   def renderText(modelName: String, sql: String, macros: Map[String, MacroDef],
                  vars: Map[String, String], varOf: String => String,
                  isIncremental: Boolean): Rendered = {
@@ -226,11 +226,8 @@ object SqlTemplater {
       bindings = Map("target" -> Jinja.VMap(scala.collection.mutable.LinkedHashMap(
         "name" -> Jinja.VStr(vars.getOrElse("target_name", "prod")))))))
 
-    var text = IncrRe.replaceAllIn(interpreted, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        if (isIncremental) m.group(1) else Option(m.group(2)).getOrElse("")))
-
-    text = VarRe.replaceAllIn(text, m =>
+    // a var() the interpreter left verbatim (missing, no default) goes to varOf
+    var text = VarRe.replaceAllIn(interpreted, m =>
       scala.util.matching.Regex.quoteReplacement(
         Option(m.group(2)) match {
           case Some(default) => vars.getOrElse(m.group(1), default)

@@ -1,7 +1,6 @@
 package graft.runtime
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,11 +11,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * macros/spark_adapter_patch/create_table.sql:23-43).
   *
   * Tables are parquet directories under `root` (or transaction-log tables,
-  * see [[routeFormat]]); views are named lazy plans.
+  * see [[routeFormat]]); views are named lazy plans. A parquet table's data
+  * is replaced only by one write staged beside it ([[stagedWrite]]).
   * A `_schema.json` sidecar pins each table's canonical column set so
   * `on_schema_change` policies (sync/append/ignore) work over immutable
-  * parquet files: reads merge file schemas, then project to the canonical
-  * schema (null-filling dropped/added columns).
+  * parquet files: reads apply it, null-filling dropped/added columns.
   *
   * Scale note: all writes `repartition` on the partition columns first —
   * the automatic equivalent of the reference's 28 hand-written
@@ -174,16 +173,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Full-rebuild CTAS (reference: materialized='table'), also every other
     * full replace: an incremental model's first run, an unpartitioned
-    * insert_overwrite or merge, an SCD2 advance.
-    *
-    * The new table is written to a hidden staging directory beside the live
-    * one, with its `_schema.json` and the persisted docs that still name a
-    * column (reference persists comments across runs); the old directory is
-    * then deleted and the staged one renamed into place, so a failed write
-    * leaves the old table untouched, and the write may read the table it
-    * replaces. The rename is atomic on local disk and HDFS only; an object
-    * store has no atomic directory rename and needs the log
-    * ([[graft.plans.TxLog]]), which routed names use.
+    * insert_overwrite or merge, an SCD2 advance. A parquet table is replaced
+    * whole by [[stagedWrite]].
     *
     * @param orderBy global ORDER BY sink (reference: ~690 cosmetic trailing
     *   `ORDER BY` sites): range-partition + per-partition sort, so part files
@@ -201,52 +192,80 @@ final class Warehouse(val spark: SparkSession, val root: String,
       writeSchema(name, df.schema)
       return
     }
+    stagedWrite(name, out, partitionBy, partitions = None)
+  } finally noteMutation()
+
+  /** The one way a parquet table's data is replaced: `out` is written once to
+    * a hidden `.staging_<table>` directory beside the table (a failed write
+    * leaves the table untouched, and the write may read it), then published.
+    * `partitions` None: `out`'s schema and the docs that still name a column
+    * ship inside the staged directory, which replaces the table by delete and
+    * rename. `Some(emptied)`: each leaf partition directory written replaces
+    * its live one the same way, one at a time (a crash in between leaves some
+    * partitions new), and each `emptied` path not written is deleted. Renames
+    * are atomic on local disk and HDFS only; object stores need the log. */
+  private def stagedWrite(name: String, out: DataFrame, partitionBy: Seq[String],
+                          partitions: Option[Seq[String]]): Unit = {
     val target = Paths.get(tablePath(name))
     val staged = target.resolveSibling(s".staging_${target.getFileName}")
     try {
       val w = out.write.mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staged.toString)
-      // sidecars ship INSIDE the staged directory, so the rename publishes a
-      // complete table; underscore-prefixed files are invisible to Spark's
-      // listing, so the staged dir stays a valid parquet directory
-      Files.writeString(staged.resolve("_schema.json"), df.schema.json)
-      val survivingDocs = docs(name).filter { case (k, _) =>
-        k == "__table__" || df.schema.fieldNames.contains(k) }
-      if (survivingDocs.nonEmpty)
-        Files.writeString(staged.resolve("_docs.json"), serializeDocs(survivingDocs))
+      if (partitions.isEmpty) {
+        // sidecars ship INSIDE the staged directory, so the rename publishes a
+        // complete table; underscore-prefixed files are invisible to Spark's
+        // listing, so the staged dir stays a valid parquet directory
+        Files.writeString(staged.resolve("_schema.json"), out.schema.json)
+        val survivingDocs = docs(name).filter { case (k, _) =>
+          k == "__table__" || out.schema.fieldNames.contains(k) }
+        if (survivingDocs.nonEmpty)
+          Files.writeString(staged.resolve("_docs.json"), serializeDocs(survivingDocs))
+      }
     } catch { case e: Throwable =>
       if (Files.exists(staged)) TempDirs.deleteTree(staged)
       throw e
     }
-    // the commit point; a failure from here on keeps the complete staged copy
-    if (Files.exists(target)) TempDirs.deleteTree(target)
-    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-    // a frame cached over the old files re-caches over the new ones, as
-    // Spark's own overwrite of the path does
+    // the commit point; a failure from here on keeps the staged copy. The
+    // whole table is the one leaf "", partitions a listing (no Spark job)
+    val leaves = partitions.fold(Seq("")) { _ =>
+      val walk = Files.walk(staged, partitionBy.size)
+      try walk.iterator().asScala.map(staged.relativize(_)).filter(r =>
+        r.getNameCount == partitionBy.size && r.getFileName.toString.contains("=") &&
+          Files.isDirectory(staged.resolve(r))).map(_.toString).toList
+      finally walk.close()
+    }
+    leaves.foreach { rel =>
+      val live = target.resolve(rel)
+      if (Files.exists(live)) TempDirs.deleteTree(live)
+      Files.createDirectories(live.getParent)
+      Files.move(staged.resolve(rel), live, StandardCopyOption.ATOMIC_MOVE)
+    }
+    partitions.foreach { emptied =>
+      emptied.filterNot(leaves.contains).map(target.resolve(_)).filter(Files.exists(_))
+        .foreach(TempDirs.deleteTree)
+      TempDirs.deleteTree(staged)
+    }
+    // Spark's write re-cached the staging path, not the table: a frame
+    // cached over the old files re-caches over the new ones here
     spark.catalog.refreshByPath(target.toString)
-  } finally noteMutation()
+  }
 
   /** Dynamic-partition insert-overwrite: only partitions present in `df` are
-    * replaced (reference: incremental_strategy='insert_overwrite' + the
-    * spark.sql.sources.partitionOverwriteMode=dynamic conf, given here as
-    * the write's own `partitionOverwriteMode` option). */
+    * replaced (reference: incremental_strategy='insert_overwrite' under
+    * Spark's dynamic partition-overwrite conf, which no write here sets: a
+    * parquet table publishes a [[stagedWrite]]'s partitions). */
   def insertOverwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String],
                                 onSchemaChange: OnSchemaChange,
                                 hashSpread: Option[(String, Int)] = None): Unit = try {
-    if (partitionBy.isEmpty) {
+    alignSchema(name, df, onSchemaChange) { aligned =>
+      val out = distributeForWrite(aligned, partitionBy, hashSpread)
       // dbt-spark semantics: insert_overwrite without partition_by replaces
       // the whole table (reference: dsa_orders.sql declares exactly this)
-      createTable(name, alignSchema(name, df, onSchemaChange))
-      return
+      if (partitionBy.isEmpty) createTable(name, aligned)
+      else if (logRouted.contains(name))
+        graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
+      else stagedWrite(name, out, partitionBy, partitions = Some(Nil))
     }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    val out = distributeForWrite(aligned, partitionBy, hashSpread)
-    if (logRouted.contains(name))
-      graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
-    else
-      // per-write option, not the session conf: concurrent writes share the session
-      out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionBy: _*).parquet(tablePath(name))
   } finally noteMutation()
 
   /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
@@ -264,10 +283,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
     *     also relocates the row);
     *  2. scan ONLY those partition directories (the `isin`-style literal
     *     predicate below prunes at listing time), anti-join out replaced keys;
-    *  3. dynamic-partition-overwrite survivors ∪ increment, and drop any
-    *     affected directory that ends up with zero rows (a fully-replaced
-    *     partition absent from the output would otherwise be left stale —
-    *     dynamic overwrite only touches partitions present in the write).
+    *  3. write survivors ∪ increment ONCE beside the table and publish the
+    *     partition directories it produced, deleting every affected
+    *     directory it left with zero rows (a fully-replaced partition absent
+    *     from the output would otherwise be left stale) — [[stagedWrite]].
     *
     * Scale shape: the key probe is a key-only semi-join (broadcast when the
     * increment is small, AQE otherwise); the collected affected-partition list
@@ -284,60 +303,30 @@ final class Warehouse(val spark: SparkSession, val root: String,
                   partitionBy: Seq[String],
                   onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
                   incrementPartitionsOnly: Boolean = false): Unit = try {
-    // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
-    // INSERT): nothing can match, so it degrades to append (reference
-    // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
-    if (uniqueKey.isEmpty) {
-      if (tableExists(name)) append(name, alignSchema(name, df, onSchemaChange), partitionBy)
-      else createTable(name, df, partitionBy)
-      return
-    }
     if (!tableExists(name)) { createTable(name, df, partitionBy); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    if (logRouted.contains(name)) {
-      mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly); return
-    }
-    val keys = aligned.select(uniqueKey.map(col): _*).distinct()
-    if (partitionBy.isEmpty) {
-      // read(name) is constructed only on the paths that scan the whole
-      // table: building the DataFrame lists every file eagerly, which the
-      // 100× probe measured as the dominant merge term at 7,700 partitions
-      val survivors = read(name).join(keys, uniqueKey, "left_anti")
-      createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
-      return
-    }
-    val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
-      incrementPartitionsOnly)
-    // partitions still present after the merge; the rest of `affected` must
-    // have their directories dropped explicitly
-    // stage the merged slice before overwriting: Spark (correctly) refuses a
-    // plan that overwrites the same directory it reads, and `out` reads the
-    // affected partitions of the target. Double-writes only the affected
-    // partitions, not the table.
-    // not dot-prefixed: Spark's file listing treats dot/underscore paths as
-    // hidden, which risks the staged read silently resolving to zero files
-    val staging = s"$root/merge-staging-tmp/${namer(name)}"
-    out.write.mode(SaveMode.Overwrite).parquet(staging)
-    val outParts =
-      try {
-        val staged = spark.read.schema(out.schema).parquet(staging)
-        insertOverwritePartitions(name, staged, partitionBy, OnSchemaChange.Ignore)
-        staged.select(partitionBy.map(col): _*).distinct().collect()
-          .map(r => partitionBy.indices.map(r.get)).toSet
-      } finally {
-        deleteRecursively(Paths.get(staging))
-        val parent = Paths.get(staging).getParent
-        if (Files.exists(parent)) {
-          val listing = Files.list(parent)
-          val empty = try !listing.findAny().isPresent finally listing.close()
-          if (empty) Files.delete(parent)
-        }
+    alignSchema(name, df, onSchemaChange) { aligned =>
+      // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
+      // INSERT): nothing can match, so it degrades to append (reference
+      // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
+      if (uniqueKey.isEmpty) append(name, aligned, partitionBy)
+      else if (logRouted.contains(name))
+        mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly)
+      else if (partitionBy.isEmpty) {
+        // read(name) is constructed only on the paths that scan the whole
+        // table: building the DataFrame lists every file eagerly, which the
+        // 100× probe measured as the dominant merge term at 7,700 partitions
+        val keys = aligned.select(uniqueKey.map(col): _*).distinct()
+        val survivors = read(name).join(keys, uniqueKey, "left_anti")
+        createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
+      } else {
+        val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
+          incrementPartitionsOnly)
+        // staged beside the partitions it reads, in canonical column order and types
+        alignSchema(name, out, OnSchemaChange.Ignore)(o => stagedWrite(name,
+          distributeForWrite(o, partitionBy, None), partitionBy,
+          Some(affected.map(partitionDir(partitionBy, _)).toSeq)))
       }
-    affected.filterNot(r => outParts.contains(partitionBy.indices.map(r.get)))
-      .foreach { r =>
-        val p = Paths.get(tablePath(name), partitionDir(partitionBy, r))
-        if (Files.exists(p)) deleteRecursively(p)
-      }
+    }
   } finally noteMutation()
 
   /** `col=value/...` relative path of one partition, hive-escaped.
@@ -410,16 +399,13 @@ final class Warehouse(val spark: SparkSession, val root: String,
   private[graft] def mergeSlice(name: String, df: DataFrame, uniqueKey: Seq[String],
                                 partitionBy: Seq[String], incrementPartitionsOnly: Boolean)
       : (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    // Partition values are compared driver-side via Row equality — both in
-    // (incParts ++ matched).distinct here and in the caller's
-    // outParts.contains cleanup — and Row equality has no Spark set-op type
+    // Partition values are compared driver-side via Row equality in
+    // (incParts ++ matched).distinct, which has no Spark set-op type
     // coercion: an increment whose partition column drifted (int vs long
     // under append_new_columns/sync, which alignSchema does not cast) would
-    // make equal values unequal, duplicating survivor reads and
-    // mis-classifying a just-written partition as dropped. Normalize the
-    // increment's partition columns to the canonical types once, up front:
-    // `matched` (from read(), canonical-typed), the union fed to staging,
-    // and the cleanup comparison then all agree.
+    // make equal values unequal and duplicate survivor reads. Normalize the
+    // increment's partition columns to the canonical types once, up front,
+    // so `matched` (from read(), canonical-typed) and the union agree.
     val canonTypes: Map[String, DataType] = canonicalSchema(name)
       .map(_.fields.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
     val dfN = df.select(df.columns.toSeq.map { c =>
@@ -459,11 +445,12 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Row append (reference: incremental_strategy='append'). */
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
-    val aligned = alignSchema(name, df, OnSchemaChange.Ignore)
-    if (logRouted.contains(name)) graft.plans.TxLog.append(logPath(name), aligned, partitionBy)
-    else {
-      val w = aligned.write.mode(SaveMode.Append)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tablePath(name))
+    alignSchema(name, df, OnSchemaChange.Ignore) { aligned =>
+      if (logRouted.contains(name)) graft.plans.TxLog.append(logPath(name), aligned, partitionBy)
+      else {
+        val w = aligned.write.mode(SaveMode.Append)
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tablePath(name))
+      }
     }
   } finally noteMutation()
 
@@ -701,9 +688,14 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Apply the on_schema_change policy against the canonical schema, update
-    * the sidecar, and return the frame to write. */
-  private def alignSchema(name: String, df: DataFrame, policy: OnSchemaChange): DataFrame =
-    canonicalSchema(name) match {
+    * the sidecar (reads inside `write`, such as merge survivors, see it) and
+    * `write` the aligned frame. If `write` throws, the previous sidecar, or
+    * its absence, is put back; a process kill before the commit still leaves
+    * the old files read under the new schema. */
+  private def alignSchema(name: String, df: DataFrame, policy: OnSchemaChange)
+                         (write: DataFrame => Unit): Unit = {
+    val before = Some(schemaPath(name)).filter(Files.exists(_)).map(Files.readAllBytes)
+    val aligned = canonicalSchema(name) match {
       case None =>
         writeSchema(name, df.schema); df
       case Some(existing) =>
@@ -724,7 +716,14 @@ final class Warehouse(val spark: SparkSession, val root: String,
             writeSchema(name, df.schema)
             df
         }
+      }
+    try write(aligned)
+    catch { case e: Throwable =>
+      before match {
+        case Some(bytes) => Files.write(schemaPath(name), bytes)
+        case None => Files.deleteIfExists(schemaPath(name))
+      }
+      throw e
     }
-
-  private def deleteRecursively(p: Path): Unit = TempDirs.deleteTree(p)
+  }
 }

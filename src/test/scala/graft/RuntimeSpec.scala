@@ -478,18 +478,26 @@ class RuntimeSpec extends SparkSpec {
     val incr = SqlTemplater.sqlModel("sql_incr",
       """SELECT n_nationkey, n_name FROM {{ ref('sql_base') }}
         |WHERE n_nationkey >= {{ var('min_key') }}
-        |{% if is_incremental() %} AND n_nationkey < (SELECT MAX(n_nationkey) FROM {{ this }}) {% endif %}
+        |{% if is_incremental() %} AND n_nationkey < (SELECT MAX(n_nationkey) FROM {{ this }})
+        |{% else %} AND n_nationkey <= 20 {% endif %}
         |""".stripMargin,
       Materialization.IncrementalInsertOverwrite(Seq("n_nationkey")))
     assert(incr.deps == Seq("sql_base"))
     val dag = new DagRunner(Seq(base, incr))
     val r1 = dag.run(ctx0).toMap
     assert(r1.values.forall(_.isInstanceOf[RunStatus.Success]), r1.toString)
+    assert(ctx0.ref("sql_incr").agg(max($"n_nationkey")).as[Int].head() == 20) // else branch
     val full = ctx0.ref("sql_incr").count()
     val r2 = dag.run(ctx0).toMap // incremental: strictly-below-max filter
     assert(r2.values.forall(_.isInstanceOf[RunStatus.Success]), r2.toString)
     assert(ctx0.ref("sql_incr").count() == full) // partitions below max overwritten with same data
     assert(ctx0.ref("sql_incr").agg(min($"n_nationkey")).as[Int].head() == 5)
+    // each mode renders exactly its own branch
+    def branch(incremental: Boolean) = SqlTemplater.renderText("m",
+      "{% if is_incremental() %}inc{% else %}full{% endif %}", Map.empty, Map.empty,
+      _ => "", incremental).text.trim
+    assert(branch(incremental = true) == "inc")
+    assert(branch(incremental = false) == "full")
   }
 
   test("macro definitions parse and expand at call sites (incl. nested args)") {
@@ -1083,24 +1091,34 @@ class RuntimeSpec extends SparkSpec {
 
   test("a rebuild re-caches a cached read of the table") {
     val wh = freshCtx().warehouse
-    wh.createTable("cached_t", Seq(1, 2).toDF("v"))
-    val cached = wh.read("cached_t").cache()
-    try {
-      assert(cached.count() == 2)
-      wh.createTable("cached_t", Seq(3).toDF("v"))
-      assert(wh.read("cached_t").as[Int].collect().toSeq == Seq(3))
-    } finally cached.unpersist()
+    val rebuild = Seq((3, "a")).toDF("v", "p")
+    // (table, partition columns, rebuild, rows after it)
+    val cases: Seq[(String, Seq[String], String => Unit, Set[(Int, String)])] = Seq(
+      ("cached_t", Nil, wh.createTable(_, rebuild), Set((3, "a"))),
+      ("cached_io", Seq("p"),
+        wh.insertOverwritePartitions(_, rebuild, Seq("p"), OnSchemaChange.Ignore), Set((3, "a"))),
+      ("cached_m", Seq("p"), wh.mergeUpsert(_, rebuild, Seq("v"), Seq("p")),
+        Set((1, "a"), (2, "a"), (3, "a"))))
+    for ((name, partitionBy, replace, expected) <- cases) {
+      wh.createTable(name, Seq((1, "a"), (2, "a")).toDF("v", "p"), partitionBy)
+      val cached = wh.read(name).cache()
+      try {
+        assert(cached.count() == 2)
+        replace(name)
+        assert(wh.read(name).select($"v", $"p").as[(Int, String)].collect().toSet == expected, name)
+      } finally cached.unpersist()
+    }
   }
 
-  /** A full replace whose write fails in a task: the old rows, canonical
-    * schema and docs still read back, no staging directory is left beside
-    * the table, and the same replace then succeeds. */
+  /** A replace whose write fails in a task: the old canonical schema, rows
+    * and docs still read back, nothing but the table is left under the
+    * warehouse root (no staging directory), and the same replace then
+    * succeeds. */
   private def assertCrashSafe(wh: Warehouse, name: String, create: () => Unit,
                               replace: Boolean => Unit): Unit = {
     def staging = {
       val ls = java.nio.file.Files.list(java.nio.file.Paths.get(wh.root))
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(".staging")).toList
+      try ls.iterator().asScala.map(_.getFileName.toString).filter(_ != name).toList
       finally ls.close()
     }
     create()
@@ -1111,8 +1129,8 @@ class RuntimeSpec extends SparkSpec {
     val e = intercept[Exception](replace(true))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("task failed")), e)
-    assert(wh.read(name).collect().toSet == rows)
     assert(wh.canonicalSchema(name) == schema)
+    assert(wh.read(name).collect().toSet == rows)
     assert(wh.docs(name) == docs)
     assert(staging.isEmpty, s"staging left behind: $staging")
     replace(false)
@@ -1142,6 +1160,56 @@ class RuntimeSpec extends SparkSpec {
     assertCrashSafe(ctx.warehouse, "crash_s",
       () => snapshot(ctx, "crash_s", Seq((1L, "a"), (2L, "b")).toDF("v", "p"), scd2Ts1),
       fail => snapshot(ctx, "crash_s", taskFrame(fail, 1, 3), scd2Ts2))
+  }
+
+  /** A (v, p) table partitioned by `p`, on the log when `log` is set. */
+  private def partitionedCrashTable(log: Boolean, name: String): (Warehouse, () => Unit) = {
+    val wh = new Warehouse(spark, runtime.TempDirs.create("graft_wh"), logFormatEnabled = log)
+    wh.routeFormat(name, if (log) "delta" else "parquet")
+    (wh, () => wh.createTable(name, Seq((1L, "a"), (2L, "b")).toDF("v", "p"), Seq("p")))
+  }
+
+  for (log <- Seq(false, true)) {
+    val format = if (log) "log" else "parquet"
+    test(s"crash safety: a failed insert_overwrite adding a column keeps the old schema ($format)") {
+      val (wh, create) = partitionedCrashTable(log, "crash_io")
+      assertCrashSafe(wh, "crash_io", create,
+        fail => wh.insertOverwritePartitions("crash_io", taskFrame(fail, 5, 8)
+          .withColumn("added", lit(1)), Seq("p"), OnSchemaChange.SyncAllColumns))
+    }
+  }
+
+  test("crash safety: a failed partitioned merge adding a column keeps the old schema " +
+       "and leaves nothing beside its table") {
+    // the pruned merge collects the increment's partitions without running the
+    // failing column, so the task fails in the slice's write
+    val (wh, create) = partitionedCrashTable(log = false, "crash_ms")
+    assertCrashSafe(wh, "crash_ms", create,
+      fail => wh.mergeUpsert("crash_ms", taskFrame(fail, 5, 8).withColumn("added", lit(1)),
+        Seq("v"), Seq("p"), OnSchemaChange.SyncAllColumns, incrementPartitionsOnly = true))
+  }
+
+  test("a partitioned merge writes its slice once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val wh = freshCtx().warehouse
+    wh.createTable("once_m", Seq((1, "a"), (2, "b")).toDF("v", "p"), Seq("p"))
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[InsertIntoHadoopFsRelationCommand]) writes.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // key 2 moves from b to a: partition b is left empty and goes away
+      wh.mergeUpsert("once_m", Seq((2, "a"), (3, "a")).toDF("v", "p"), Seq("v"), Seq("p"))
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.get == 1)
+    assert(wh.read("once_m").as[(Int, String)].collect().toSet == Set((1, "a"), (2, "a"), (3, "a")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(wh.tablePath("once_m"), "p=b")))
   }
 
   test("docs are metastore-visible: DESCRIBE surfaces column + table comments") {

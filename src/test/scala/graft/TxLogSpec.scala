@@ -286,4 +286,17 @@ class TxLogSpec extends SparkSpec {
     val rows = TxLog.read(spark, t).select($"id", $"part").as[(Int, Option[String])]
     assert(rows.collect().sorted.toSeq == Seq((1, Some("a")), (2, None)))
   }
+
+  test("a read without a schema takes it from one footer: no Spark job on a 40-file snapshot") {
+    val t = freshTable()
+    TxLog.overwrite(t, spark.range(0, 400)
+      .selectExpr("id", "CAST(id AS STRING) AS s", "id * 0.5 AS d").repartition(40))
+    val files = TxLog.snapshot(t).files.map(f => TxLog.filePath(t, f).toString)
+    assert(files.size == 40)
+    var first: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { first = TxLog.read(spark, t) } == 0)
+    assert(jobsStartedBy { TxLog.read(spark, t) } == 0)
+    assert(first.schema == spark.read.parquet(files: _*).schema)
+    assert(first.count() == 400)
+  }
 }
