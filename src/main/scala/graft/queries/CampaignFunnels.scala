@@ -29,7 +29,9 @@ import graft.runtime._
   *    30 MINUTES)` (ibid.:330-413 previews_to_source / preview_to_openings /
   *    preview_to_cart_addings), including the group-expansion purchase join
   *    (ibid.:391-413 joins medicine_group_products before cart_addings) and
-  *    MIN_BY first-touch attribution (ibid.:341-345);
+  *    MIN_BY first-touch attribution (ibid.:341-345), over STRING values
+  *    as `EXACT_MIN_BY` ([[graft.functions.ArgCode]]) so the aggregate
+  *    stays a HashAggregate;
   *  - a UNION ALL source-event block (ibid.:595-630 banner_initial_events);
   *  - a three-step chained funnel (ibid.:821-856
   *    table_product_previews_to_openings_to_cart_addings);
@@ -165,21 +167,7 @@ object CampaignFunnels {
       |    SELECT
       |        device_id,
       |        session_num,
-      |        -- r18 opt (guide §1.2 per-task work, same family as the r17
-      |        -- MAX(DATE_FORMAT) fix): MIN_BY over a STRING gives the
-      |        -- aggregate an immutable buffer, forcing the whole aggregate to
-      |        -- SortAggregate (an extra full sort per run). platform has the
-      |        -- closed 4-value domain produced by raw_events' CASE (never
-      |        -- NULL), so encode it as an INT inside the aggregate and decode
-      |        -- after: the winning row is picked by event_ts alone, and the
-      |        -- encode is a bijection on the domain, so the result is
-      |        -- identical row-for-row (the oracle still computes arg_min over
-      |        -- the string).
-      |        CASE MIN_BY(CASE platform WHEN 'desktop' THEN 0 WHEN 'mobile' THEN 1
-      |                                  WHEN 'apps' THEN 2 ELSE 3 END, event_ts)
-      |            WHEN 0 THEN 'desktop' WHEN 1 THEN 'mobile'
-      |            WHEN 2 THEN 'apps' WHEN 3 THEN 'unknown'
-      |        END AS session_platform,
+      |        EXACT_MIN_BY(platform, event_ts) AS session_platform,
       |        MIN(event_ts) AS session_start_ts,
       |        MAX(event_ts) AS session_end_ts,
       |        COUNT(*) AS session_events,
@@ -238,16 +226,7 @@ object CampaignFunnels {
       |        pv.platform,
       |        pv.product_id,
       |        ctg.name AS category_name,
-      |        -- r18 opt: same int-encode as session_platform (string MIN_BY
-      |        -- buffer → SortAggregate over the whole range-join output).
-      |        -- source_type has the closed 3-value domain of source_events'
-      |        -- literals; the NULL of an unmatched LEFT JOIN row encodes to
-      |        -- NULL and decodes to NULL (no ELSE), preserving the
-      |        -- COALESCE(..., 'organic') downstream.
-      |        CASE MIN_BY(CASE se.source_type WHEN 'signup' THEN 0 WHEN 'promo' THEN 1
-      |                                        WHEN 'external' THEN 2 END, se.event_ts)
-      |            WHEN 0 THEN 'signup' WHEN 1 THEN 'promo' WHEN 2 THEN 'external'
-      |        END AS source_type
+      |        EXACT_MIN_BY(se.source_type, se.event_ts) AS source_type
       |    FROM product_views AS pv
       |    LEFT JOIN source_events AS se
       |        ON

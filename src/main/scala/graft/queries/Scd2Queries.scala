@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.ArgCode
 import graft.runtime._
 
 /** SCD2 snapshot engine on the oracle gate: two consecutive dbt-style
@@ -24,25 +25,16 @@ object Scd2Queries {
     stateAsOf(orders, None)
 
   private def stateAsOf(orders: DataFrame, cutoff: Option[String]): DataFrame = {
+    ArgCode.register(orders.sparkSession)
     val base = cutoff.fold(orders)(c => orders.filter(col("o_orderdate") <= lit(c)))
     // unique argmax key: day number * 1e10 + orderkey
     val key = unix_date(to_date(col("o_orderdate"))).cast("long") * 10000000000L +
       col("o_orderkey")
-    // r18 opt (guide §1.2, the immutable-buffer family): MAX_BY over the
-    // STRING status forces the whole 3-function aggregate to SortAggregate
-    // (full sort of orders by custkey, both snapshot runs). o_orderstatus is
-    // the TPC-H CHAR(1) domain, so aggregate its ascii code (int buffer →
-    // HashAggregate) and decode with char() after. ascii/char round-trips
-    // NULL and a single character with code point 1–255 only (an empty
-    // string or a higher code point does not); the winning row is picked by
-    // `key` alone, so the result is identical (oracle: arg_max over the string).
     base.groupBy(col("o_custkey").as("_id"))
       .agg(
-        max_by(ascii(col("o_orderstatus")), key).as("status_code"),
+        ArgCode.maxBy(col("o_orderstatus"), key).as("status"),
         max_by(col("o_totalprice"), key).as("last_price"),
         max(to_date(col("o_orderdate"))).as("updated_at"))
-      .select(col("_id"), expr("char(status_code)").as("status"),
-        col("last_price"), col("updated_at"))
   }
 
   def q53Scd2Pipeline(spark: SparkSession, dir: String): DataFrame = {
@@ -78,6 +70,7 @@ object Scd2Queries {
     val orders = Tables(spark, dir, "orders")
     val building = Tables(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
+    ArgCode.register(spark)
 
     def state(cutoff: Option[String], exclBuilding: Boolean, label: String): DataFrame = {
       val base0 = cutoff.fold(orders)(c => orders.filter(col("o_orderdate") <= lit(c)))
@@ -86,12 +79,9 @@ object Scd2Queries {
       else base0
       val key = unix_date(to_date(col("o_orderdate"))).cast("long") * 10000000000L +
         col("o_orderkey")
-      // same ascii/char int-encode as stateAsOf (string MAX_BY buffer would
-      // force SortAggregate); identical result on the CHAR(1) status domain
       base.groupBy(col("o_custkey").as("_id"))
-        .agg(max_by(ascii(col("o_orderstatus")), key).as("status_code"),
+        .agg(ArgCode.maxBy(col("o_orderstatus"), key).as("status"),
           count(lit(1)).as("n_orders"))
-        .select(col("_id"), expr("char(status_code)").as("status"), col("n_orders"))
         .withColumn("loaded_label", lit(label))
     }
 
@@ -208,9 +198,7 @@ object Scd2Queries {
       |    meta = { 'model_owner': '@graft' }
       |) }}
       |SELECT o_custkey AS _id,
-      |  -- r18: ascii/char int-encode of the CHAR(1) status so the aggregate
-      |  -- stays HashAggregate (string MAX_BY buffer → SortAggregate)
-      |  CHAR(MAX_BY(ASCII(o_orderstatus), UNIX_DATE(CAST(o_orderdate AS DATE)) * 10000000000 + o_orderkey)) AS status,
+      |  EXACT_MAX_BY(o_orderstatus, UNIX_DATE(CAST(o_orderdate AS DATE)) * 10000000000 + o_orderkey) AS status,
       |  MAX_BY(o_totalprice, UNIX_DATE(CAST(o_orderdate AS DATE)) * 10000000000 + o_orderkey) AS last_price,
       |  MAX(CAST(o_orderdate AS DATE)) AS updated_at
       |FROM {{ source('default', 'orders') }}

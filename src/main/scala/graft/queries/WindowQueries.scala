@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.ArgCode
 import graft.ops.Sessionize
 
 /** Window-function operators from SURVEY.md §2.5: ROW_NUMBER dedup, LAG/LEAD,
@@ -189,38 +190,18 @@ object WindowQueries {
 
   /** Deterministic FIRST/LAST per group via MIN_BY/MAX_BY over a unique
     * ordering key (reference's FIRST_VALUE/LAST_VALUE-as-aggregate,
-    * models/spark/base/active_devices.sql:24-43, made order-stable). */
+    * models/spark/base/active_devices.sql:24-43, made order-stable). The
+    * STRING event_type goes through [[ArgCode]], so the aggregate stays a
+    * HashAggregate. */
   def q16FirstLastPerUser(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables(spark, dir, "events")
-    // r18 (the immutable-buffer family, see GoldOrdersWide.lineitem_agg):
-    // MIN_BY/MAX_BY over the STRING event_type forced the whole aggregate to
-    // SortAggregate; encode the closed 5-value event domain as an int inside
-    // the aggregate and decode after — the winning row is picked by ts_ns
-    // alone and the encode is a bijection (NULL round-trips), so the result
-    // is identical (oracle still computes arg_min/arg_max over the string).
-    // A non-NULL type outside the five fails the query, naming the value,
-    // instead of silently becoming NULL.
-    val code = when(col("event_type") === "click", 0)
-      .when(col("event_type") === "error", 1)
-      .when(col("event_type") === "purchase", 2)
-      .when(col("event_type") === "signup", 3)
-      .when(col("event_type") === "view", 4)
-      .when(col("event_type").isNotNull, raise_error(
-        concat(lit("q16: event_type outside the encoded domain: "), col("event_type"))))
-    def decode(c: org.apache.spark.sql.Column) =
-      when(c === 0, "click").when(c === 1, "error").when(c === 2, "purchase")
-        .when(c === 3, "signup").when(c === 4, "view")
-    e.groupBy(col("user_id"))
+    ArgCode.register(spark)
+    Tables(spark, dir, "events").groupBy(col("user_id"))
       .agg(
-        min_by(code, col("ts_ns")).as("first_code"),
-        max_by(code, col("ts_ns")).as("last_code"),
+        ArgCode.minBy(col("event_type"), col("ts_ns")).as("first_type"),
+        ArgCode.maxBy(col("event_type"), col("ts_ns")).as("last_type"),
         min(expr("ts_ns div 1000000000")).as("first_es"),
         max(expr("ts_ns div 1000000000")).as("last_es"),
         count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        decode(col("first_code")).as("first_type"),
-        decode(col("last_code")).as("last_type"),
-        col("first_es"), col("last_es"), col("n_events"))
   }
 
   val q16Oracle: String =

@@ -1,7 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.DataFrame
-import graft.functions.TimeFunctions
+import graft.functions.{ArgCode, TimeFunctions}
 
 /** Minimal dbt-Jinja surface over spark.sql — enough that the reference's
   * model bodies run near-verbatim (SURVEY.md §7 `sqlfront`: the reference's
@@ -310,6 +310,7 @@ object SqlTemplater {
   def runSql(ctx: Ctx, modelName: String, sql: String,
              materializeCtes: Boolean = false): DataFrame = {
     TimeFunctions.register(ctx.spark)
+    ArgCode.register(ctx.spark)
 
     val r = renderText(modelName, sql, ctx.macros, ctx.vars, ctx.varOf, ctx.isIncremental)
 

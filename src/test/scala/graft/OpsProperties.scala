@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ArgCode
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -121,6 +123,42 @@ object OpsProperties extends Properties("graft.ops") {
       val a = graft.ops.Dedup.dupGroups(pairs).as[(Long, Long)].collect().toMap
       val b = graft.ops.Dedup.dupGroupsTwoPhase(pairs).as[(Long, Long)].collect().toMap
       a == b
+    }
+
+  // ---- the exact string code behind exact_min_by / exact_max_by ----
+
+  private val codePoint = Gen.frequency(
+    1 -> Gen.const(0),                      // NUL
+    3 -> Gen.choose(1, 0x7f),
+    2 -> Gen.choose(0x80, 0x7ff),
+    2 -> Gen.oneOf(Gen.choose(0x800, 0xd7ff), Gen.choose(0xe000, 0xffff)),
+    2 -> Gen.choose(0x10000, 0x10ffff))     // supplementary: 4 UTF-8 bytes
+  private def utf8Bytes(s: String): Int = s.getBytes("UTF-8").length
+  private def str(cps: Seq[Int]): String = new String(cps.toArray, 0, cps.length)
+  /** The longest prefix of a random code point list that fits the code. */
+  private val fitting = Gen.choose(0, 15).flatMap(Gen.listOfN(_, codePoint)).map { cps =>
+    str(cps.inits.find(p => utf8Bytes(str(p)) <= ArgCode.MaxBytes).get)
+  }
+  private val tooLong = Gen.choose(16, 30).flatMap(Gen.listOfN(_, codePoint)).map(str)
+  private def encode(s: String) = ArgCode.encode(UTF8String.fromString(s))
+
+  property("argCode: decode(encode(s)) == s up to 15 UTF-8 bytes") =
+    forAll(Gen.listOfN(50, fitting)) { ss =>
+      ss.forall(s => ArgCode.decode(encode(s)).toString == s)
+    }
+
+  property("argCode: encode is injective") =
+    forAll(Gen.listOfN(50, fitting)) { ss =>
+      // NUL-padded neighbours share every byte but a length or a position
+      val all = (ss ++ ss.collect { case s if utf8Bytes(s) < ArgCode.MaxBytes =>
+        Seq(s + "\u0000", "\u0000" + s) }.flatten).distinct
+      all.map(encode).distinct.size == all.size
+    }
+
+  property("argCode: more than 15 UTF-8 bytes throws, naming the value") =
+    forAll(Gen.listOfN(20, tooLong)) { ss =>
+      ss.forall(s => scala.util.Try(encode(s)).failed.toOption
+        .exists(_.getMessage.contains(s)))
     }
 
   // ---- macro param binding (the templater's Jinja-value semantics) ----

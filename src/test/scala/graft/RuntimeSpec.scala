@@ -1201,6 +1201,8 @@ class RuntimeSpec extends SparkSpec {
         if (qe.logical.isInstanceOf[InsertIntoHadoopFsRelationCommand]) writes.incrementAndGet()
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    // the listener bus delivers late: drain createTable's write before listening
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       // key 2 moves from b to a: partition b is left empty and goes away

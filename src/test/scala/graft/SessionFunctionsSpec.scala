@@ -1,19 +1,20 @@
 package graft
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import graft.functions.{TextExpressions, TimeFunctions, VectorFunctions}
+import graft.functions.{ArgCode, TextExpressions, TimeFunctions, VectorFunctions}
 
 /** The engine's SQL functions register once per session: a repeated
   * `register` keeps each registry entry as it was. */
 class SessionFunctionsSpec extends SparkSpec {
 
   private val names = Seq("vec_dot", "millis_to_ts", "millis_to_ts_msk", "word_shingles",
-    "simhash64", "lang_id", "fingerprint64", "minhash_sig")
+    "simhash64", "lang_id", "fingerprint64", "minhash_sig", "exact_min_by", "exact_max_by")
 
   private def registerAll(): Unit = {
     VectorFunctions.register(spark)
     TimeFunctions.register(spark)
     TextExpressions.register(spark)
+    ArgCode.register(spark)
   }
 
   private def entries = {
