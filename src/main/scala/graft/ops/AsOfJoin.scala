@@ -108,28 +108,18 @@ object AsOfJoin {
     * scan is only paid when input stats suggest it could pay off; below
     * `minBytesForDetect` (default 1 GiB combined) even a fully-skewed input
     * sorts in seconds on one thread, so the detect pass would cost more
-    * than it saves. Session override: `graft.asof.salted` = `on` (always
-    * detect+salt), `off` (always plain), `auto` (default, stats dispatch).
-    * Output is bit-identical across all three paths (OpsSpec/OpsProperties
-    * pin salted == backward).
+    * than it saves. Output is bit-identical on both paths (OpsSpec and
+    * OpsProperties pin salted == backward).
     */
   def auto(left: DataFrame, right: DataFrame, keyCols: Seq[String],
            leftTime: String, rightTime: String, prefix: String = "r_",
            splits: Int = 32, hotThreshold: Long = 1000000L,
            detectSample: Double = 0.01,
            minBytesForDetect: Long = 1L << 30): DataFrame = {
-    val mode =
-      try left.sparkSession.conf.get("graft.asof.salted", "auto")
-      catch { case _: Exception => "auto" }
     def sz(df: DataFrame): BigInt =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Exception => BigInt(Long.MaxValue) } // unknown => assume big
-    val wantSalted = mode match {
-      case "on"  => true
-      case "off" => false
-      case _     => sz(left) + sz(right) >= BigInt(minBytesForDetect)
-    }
-    if (wantSalted)
+    if (sz(left) + sz(right) >= BigInt(minBytesForDetect))
       backwardSalted(left, right, keyCols, leftTime, rightTime, prefix,
         splits, hotThreshold, detectSample)
     else backward(left, right, keyCols, leftTime, rightTime, prefix)

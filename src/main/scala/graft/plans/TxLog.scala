@@ -19,6 +19,9 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
+
+import graft.runtime.Json
 
 /** A minimal but real table-format transaction log — the self-contained
   * stand-in for the Delta log the reference materializes 197 models on
@@ -71,7 +74,6 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object TxLog {
 
-  final case class AddFile(path: String, partitionValues: Map[String, String], rows: Long)
   final case class Snapshot(version: Long, files: Seq[AddFile], partitionCols: Seq[String])
 
   /** Optimistic-concurrency loss: another writer claimed the version this
@@ -99,70 +101,61 @@ object TxLog {
 
   def exists(table: Path): Boolean = Files.isDirectory(logDir(table))
 
-  // ---- JSON (hand-rolled: actions are flat maps of strings/longs; no
-  // external JSON dependency is available in this environment) ----
+  /** One log line: an [[AddFile]], a [[Remove]] tombstone or a [[Meta]]. An
+    * add's partition values are keyed by column name, each the directory
+    * segment Spark wrote for it. */
+  sealed trait Action
+  final case class AddFile(path: String, partitionValues: Map[String, String], rows: Long)
+      extends Action
+  final case class Remove(path: String, ts: Long) extends Action
+  final case class Meta(partitionCols: Seq[String]) extends Action
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  /** `{"add":{"path":…,"pv":{…},"rows":…}}`, `{"remove":{"path":…,"ts":…}}` or
+    * `{"meta":{"partitionCols":[…]}}`, compact, an add's `pv` sorted by key. */
+  private[graft] def encode(a: Action): String = Json.write(a match {
+    case AddFile(path, pv, rows) => JObject("add" -> JObject("path" -> JString(path),
+      "pv" -> JObject(pv.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) }),
+      "rows" -> JLong(rows)))
+    case Remove(path, ts) => JObject("remove" -> JObject("path" -> JString(path), "ts" -> JLong(ts)))
+    case Meta(cols) => JObject("meta" -> JObject("partitionCols" -> JArray(cols.map(JString(_)).toList)))
+  })
+
+  private[graft] def decode(line: String): Action = {
+    def bad = new IllegalStateException(s"unparseable txlog action: $line")
+    def str(v: JValue): String = v match { case JString(s) => s; case _ => throw bad }
+    def num(v: JValue): Long = v match { case JInt(n) => n.toLong; case JLong(n) => n; case _ => throw bad }
+    Json.read(line) match {
+      case JObject(List(("add", a))) => a \ "pv" match {
+        case JObject(pv) =>
+          AddFile(str(a \ "path"), pv.map { case (k, v) => k -> str(v) }.toMap, num(a \ "rows"))
+        case _ => throw bad
+      }
+      case JObject(List(("remove", a))) => Remove(str(a \ "path"), num(a \ "ts"))
+      case JObject(List(("meta", a))) => a \ "partitionCols" match {
+        case JArray(cols) => Meta(cols.map(str))
+        case _ => throw bad
+      }
+      case _ => throw bad
     }
-
-  private def addJson(a: AddFile): String = {
-    val pv = a.partitionValues.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString(",")
-    s"""{"add":{"path":"${esc(a.path)}","pv":{$pv},"rows":${a.rows}}}"""
   }
 
-  private def removeJson(path: String, ts: Long): String =
-    s"""{"remove":{"path":"${esc(path)}","ts":$ts}}"""
-
-  private def metaJson(partitionCols: Seq[String]): String =
-    s"""{"meta":{"partitionCols":[${partitionCols.map(c => s""""${esc(c)}"""").mkString(",")}]}}"""
-
-  private val addRe =
-    """\{"add":\{"path":"((?:[^"\\]|\\.)*)","pv":\{((?:[^{}]|\{\})*)\},"rows":(-?\d+)\}\}""".r
-  private val removeRe = """\{"remove":\{"path":"((?:[^"\\]|\\.)*)","ts":(\d+)\}\}""".r
-  private val metaRe = """\{"meta":\{"partitionCols":\[([^\]]*)\]\}\}""".r
-  private val pvRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'u' => sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += s(i); i += 1 }
-    }
-    sb.toString
-  }
+  /** The actions of one commit or checkpoint file, in order. */
+  private def readActions(file: Path): Seq[Action] =
+    Files.readAllLines(file, StandardCharsets.UTF_8).asScala.toSeq.filter(_.nonEmpty).map(decode)
 
   private final case class Replay(
     files: scala.collection.mutable.LinkedHashMap[String, AddFile],
     tombstones: scala.collection.mutable.LinkedHashMap[String, Long],
     var partitionCols: Seq[String])
 
-  private def applyLine(r: Replay, line: String): Unit = line match {
-    case addRe(p, pv, rows) =>
-      val path = unesc(p)
-      val pvs = pvRe.findAllMatchIn(pv).map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-      r.files(path) = AddFile(path, pvs, rows.toLong)
-      r.tombstones.remove(path)
-    case removeRe(p, ts) =>
-      val path = unesc(p)
+  private def applyAction(r: Replay, a: Action): Unit = a match {
+    case f: AddFile =>
+      r.files(f.path) = f
+      r.tombstones.remove(f.path)
+    case Remove(path, ts) =>
       r.files.remove(path)
-      r.tombstones(path) = ts.toLong
-    case metaRe(cols) =>
-      r.partitionCols =
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(cols).map(m => unesc(m.group(1))).toSeq
-    case "" => ()
-    case other => throw new IllegalStateException(s"unparseable txlog action: $other")
+      r.tombstones(path) = ts
+    case Meta(cols) => r.partitionCols = cols
   }
 
   private def listVersions(table: Path): (Seq[Long], Seq[Long]) = prof("txlog.listVersions") {
@@ -189,13 +182,9 @@ object TxLog {
     val base = checkpoints.filter(_ <= target).maxOption
     val r = Replay(scala.collection.mutable.LinkedHashMap.empty,
       scala.collection.mutable.LinkedHashMap.empty, Nil)
-    base.foreach { cp =>
-      Files.readAllLines(checkpointFile(table, cp), StandardCharsets.UTF_8)
-        .asScala.foreach(applyLine(r, _))
-    }
+    base.foreach(cp => readActions(checkpointFile(table, cp)).foreach(applyAction(r, _)))
     for (v <- upto if base.forall(v > _)) // checkpoint already includes its own version
-      Files.readAllLines(commitFile(table, v), StandardCharsets.UTF_8)
-        .asScala.foreach(applyLine(r, _))
+      readActions(commitFile(table, v)).foreach(applyAction(r, _))
     Snapshot(target, r.files.values.toSeq, r.partitionCols)
   }
 
@@ -204,9 +193,7 @@ object TxLog {
     val (commits, _) = listVersions(table)
     val r = Replay(scala.collection.mutable.LinkedHashMap.empty,
       scala.collection.mutable.LinkedHashMap.empty, Nil)
-    for (v <- commits)
-      Files.readAllLines(commitFile(table, v), StandardCharsets.UTF_8)
-        .asScala.foreach(applyLine(r, _))
+    for (v <- commits) readActions(commitFile(table, v)).foreach(applyAction(r, _))
     (r, commits.lastOption.getOrElse(-1L))
   }
 
@@ -215,11 +202,11 @@ object TxLog {
     * was read — the caller re-reads and retries (optimistic concurrency).
     * The claim itself is create-new on the commit file: two writers racing
     * for the same version number cannot both win. */
-  private def commit(table: Path, readVersion: Long, actions: Seq[String]): Long = prof("txlog.commit") {
+  private def commit(table: Path, readVersion: Long, actions: Seq[Action]): Long = prof("txlog.commit") {
     Files.createDirectories(logDir(table))
     val next = readVersion + 1
     val tmp = logDir(table).resolve(f"$next%020d.json.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, actions.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, actions.map(encode).mkString("\n").getBytes(StandardCharsets.UTF_8))
     try {
       // The version-number claim must be CREATE-NEW: rename(2) (and thus
       // Files.move, even with ATOMIC_MOVE) silently REPLACES an existing
@@ -239,7 +226,7 @@ object TxLog {
   private def maybeCheckpoint(table: Path, version: Long): Unit =
     if (version > 0 && version % checkpointInterval == 0) prof("txlog.checkpoint") {
       val snap = snapshot(table, version)
-      val lines = metaJson(snap.partitionCols) +: snap.files.map(addJson)
+      val lines = (Meta(snap.partitionCols) +: snap.files).map(encode)
       val tmp = checkpointFile(table, version).resolveSibling(
         f"$version%020d.checkpoint.json.tmp")
       Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -261,9 +248,8 @@ object TxLog {
     // distribution the caller chose. Unclustered input to a partitioned
     // write means every task writes a sliver into every partition directory
     // it holds (tasks × partitions files per commit) — the Warehouse write
-    // paths repartition via distributeForWrite (including the hashSpread
-    // skew spread, which a forced repartition here would clobber); direct
-    // TxLog callers must cluster by the partition columns themselves.
+    // paths repartition via distributeForWrite; direct TxLog callers must
+    // cluster by the partition columns themselves.
     val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
     writer.mode("overwrite").parquet(staging.toString)
     Files.createDirectories(dataDir(table))
@@ -273,14 +259,7 @@ object TxLog {
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .map { p =>
           val rel = staging.relativize(p)
-          // partition values come from the directory structure Spark wrote
-          val pvs = rel.iterator().asScala.map(_.toString).toSeq.dropRight(1)
-            .flatMap { seg =>
-              seg.split("=", 2) match {
-                case Array(k, v) => Some(k -> v)
-                case _ => None
-              }
-            }.toMap
+          val pvs = partitionValues(partitionBy, Option(rel.getParent).fold("")(_.toString))
           val dest = dataDir(table).resolve(s"$stagingId-${rel.toString.replace('/', '-')}")
           Files.move(p, dest)
           AddFile(table.relativize(dest).toString, pvs, -1L)
@@ -290,14 +269,20 @@ object TxLog {
     adds
   }
 
+  /** A file's partition values as an [[AddFile]] keeps them, from the
+    * `k=v/…` directory path Spark's writer names them by: keyed by the
+    * column's own name, which a read looks them up by, each value its
+    * escaped directory segment. */
+  def partitionValues(partitionBy: Seq[String], dir: String): Map[String, String] =
+    partitionBy.zip(dir.split("/").map(d => d.drop(d.indexOf('=') + 1))).toMap
+
   /** Create or fully replace the table: tombstone every live file, add the
     * new ones. One atomic commit. */
   def overwrite(table: Path, df: DataFrame, partitionBy: Seq[String] = Nil): Long =
     retryingCommit(table) { snap =>
       val now = System.currentTimeMillis()
       val adds = stage(table, df, partitionBy)
-      metaJson(partitionBy) +:
-        (snap.files.map(f => removeJson(f.path, now)) ++ adds.map(addJson))
+      Meta(partitionBy) +: (snap.files.map(f => Remove(f.path, now)) ++ adds)
     }
 
   /** Append new files; nothing is removed. */
@@ -305,7 +290,7 @@ object TxLog {
     retryingCommit(table) { snap =>
       val cols = if (snap.partitionCols.nonEmpty) snap.partitionCols else partitionBy
       val adds = stage(table, df, cols)
-      metaJson(cols) +: adds.map(addJson)
+      Meta(cols) +: adds
     }
 
   /** Dynamic-partition overwrite: replace exactly the partitions present in
@@ -318,11 +303,11 @@ object TxLog {
       val adds = stage(table, df, partitionBy)
       val touched: Set[Map[String, String]] = adds.map(_.partitionValues).toSet
       val removes = snap.files.filter(f => touched.contains(f.partitionValues))
-      metaJson(partitionBy) +: (removes.map(f => removeJson(f.path, now)) ++ adds.map(addJson))
+      Meta(partitionBy) +: (removes.map(f => Remove(f.path, now)) ++ adds)
     }
 
   private def retryingCommit(table: Path, maxRetries: Int = 5)
-                            (actions: Snapshot => Seq[String]): Long = {
+                            (actions: Snapshot => Seq[Action]): Long = {
     var attempt = 0
     while (true) {
       attempt += 1
@@ -387,7 +372,7 @@ object TxLog {
     val now = System.currentTimeMillis()
     val adds = stage(table, df, partitionBy)
     commit(table, readVersion,
-      metaJson(partitionBy) +: (removePaths.map(removeJson(_, now)) ++ adds.map(addJson)))
+      Meta(partitionBy) +: (removePaths.map(Remove(_, now)) ++ adds))
   }
 
   /** Physically delete tombstoned files older than `retentionMs`, and prune
@@ -474,8 +459,7 @@ object TxLog {
     retryingCommit(table) { cur =>
       val now = System.currentTimeMillis()
       val adds = stage(table, df, cur.partitionCols)
-      metaJson(cur.partitionCols) +:
-        (cur.files.map(f => removeJson(f.path, now)) ++ adds.map(addJson))
+      Meta(cur.partitionCols) +: (cur.files.map(f => Remove(f.path, now)) ++ adds)
     }
   }
 
@@ -484,8 +468,8 @@ object TxLog {
   def history(table: Path): Seq[(Long, Int, Int)] = {
     val (commits, _) = listVersions(table)
     commits.map { v =>
-      val lines = Files.readAllLines(commitFile(table, v), StandardCharsets.UTF_8).asScala
-      (v, lines.count(_.startsWith("""{"add"""")), lines.count(_.startsWith("""{"remove"""")))
+      val actions = readActions(commitFile(table, v))
+      (v, actions.count(_.isInstanceOf[AddFile]), actions.count(_.isInstanceOf[Remove]))
     }
   }
 }
@@ -495,9 +479,9 @@ object TxLog {
   * values, so Spark prunes on `partitionSchema` as on a partitioned directory
   * and plans one scan at any file count, with one stat per file and no Spark
   * job. Equality is the case class's (table plus file list), so plans over one
-  * snapshot compare equal. The manifest keeps each partition value as the path
-  * segment Spark wrote (escaped; `__HIVE_DEFAULT_PARTITION__` for NULL); the
-  * index decodes it once per distinct value with Spark's own
+  * snapshot compare equal. The manifest keeps each partition value, by column
+  * name, as the path segment Spark wrote (escaped; `__HIVE_DEFAULT_PARTITION__`
+  * for NULL); the index decodes it once per distinct value with Spark's own
   * partition-discovery cast, so log and parquet reads of the same rows agree. */
 final case class ManifestFileIndex(table: Path, files: Seq[TxLog.AddFile])(
     spark: SparkSession, override val partitionSchema: StructType) extends FileIndex {

@@ -162,8 +162,8 @@ object JoinQueries {
       .agg(max(col("event_id")).as("view_event"))
     // `auto` dispatches to the skew-salted variant when Catalyst's size
     // estimate says the inputs are big enough for one hot key to serialize
-    // the window (or when graft.asof.salted=on); output is bit-identical
-    // either way (OpsSpec pins it), so the oracle gate covers both paths.
+    // the window; output is bit-identical either way (OpsSpec pins it), so
+    // the oracle gate covers both paths.
     AsOfJoin.auto(purchases, views, Seq("user_id"), "es", "es")
       .select(col("event_id"), col("user_id"), col("r_view_event").as("view_event"),
         (col("es") - col("r_es")).as("wait_sec"))

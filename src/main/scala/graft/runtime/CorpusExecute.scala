@@ -539,8 +539,8 @@ object CorpusExecute {
     // cannot appear in paths, var names, or var values, so the join is
     // unambiguous (r17: a reviewer misread them as plain ' '; this comment
     // prevents the next misread, same story as AnnDeterminismSpec's \u0001)
-    sha16(dirs.map(_.toAbsolutePath.toString).mkString(" ") + " " +
-      vars.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" "))
+    sha16(dirs.map(_.toAbsolutePath.toString).mkString("\u0000") + "\u0000" +
+      vars.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\u0000"))
 
   /** Hash of the CORE environment that affects every node's rendering and
     * has no finer-grained owner: seed file contents, vars, mode. A change
@@ -561,12 +561,12 @@ object CorpusExecute {
         // content: even a file whose bytes contain NUL cannot alias a
         // neighboring (path, content) split
         val bytes = Files.readAllBytes(p)
-        feed(dir.relativize(p).toString); feed(" ")
+        feed(dir.relativize(p).toString); feed("\u0000")
         feed(bytes.length.toString); feed(":")
-        md.update(bytes); feed(" ")
+        md.update(bytes); feed("\u0000")
       }
     }
-    for ((k, v) <- vars.toSeq.sorted) { feed(k); feed("="); feed(v); feed(" ") }
+    for ((k, v) <- vars.toSeq.sorted) { feed(k); feed("="); feed(v); feed("\u0000") }
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
@@ -575,7 +575,7 @@ object CorpusExecute {
     * warm start. */
   def macroHashesOf(macros: Map[String, SqlTemplater.MacroDef]): Map[String, String] =
     macros.map { case (name, d) =>
-      name -> sha16(d.params.mkString(" ") + "" + d.body)
+      name -> sha16(d.params.mkString("\u0000") + "\u0001" + d.body)
     }
 
   /** Which nodes a set of edited macros reaches: first close over

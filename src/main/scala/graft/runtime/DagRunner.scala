@@ -188,14 +188,14 @@ final class DagRunner(models: Seq[Model]) {
     def increment: DataFrame = build(ctx.copy(isIncremental = true))
     m.materialization match {
     case Materialization.Table(partitionBy, orderBy) =>
-      wh.createTable(m.name, build(ctx), partitionBy, None, orderBy)
+      wh.createTable(m.name, build(ctx), partitionBy, orderBy)
     case Materialization.View =>
       // builder-backed: the view plan re-derives after upstream table
       // mutations (a captured DataFrame pins stale file listings)
       wh.registerView(m.name, () => build(ctx))
-    case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange, spread) =>
-      if (rebuild) wh.createTable(m.name, full, partitionBy, spread)
-      else wh.insertOverwritePartitions(m.name, increment, partitionBy, onSchemaChange, spread)
+    case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange) =>
+      if (rebuild) wh.createTable(m.name, full, partitionBy)
+      else wh.insertOverwritePartitions(m.name, increment, partitionBy, onSchemaChange)
     case Materialization.IncrementalMerge(uniqueKey, partitionBy, onSchemaChange, incOnly) =>
       if (rebuild) wh.createTable(m.name, full, partitionBy)
       else wh.mergeUpsert(m.name, increment, uniqueKey, partitionBy, onSchemaChange, incOnly)

@@ -22,14 +22,10 @@ object Materialization {
 
   /** Dynamic-partition insert-overwrite (reference: 158 models,
     * incremental_strategy='insert_overwrite'). Models receive
-    * `ctx.isIncremental` and add their own lookback filter.
-    * @param hashSpread optional N-way intra-partition spread for skewed
-    *   partitions (reference: `DISTRIBUTE BY month, ABS(HASH(id)) % 10`,
-    *   models/spark/gold/gold_orders.sql:696) */
+    * `ctx.isIncremental` and add their own lookback filter. */
   final case class IncrementalInsertOverwrite(
       partitionBy: Seq[String],
-      onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-      hashSpread: Option[(String, Int)] = None) extends Materialization
+      onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore) extends Materialization
 
   /** Pure row append (reference: incremental_strategy='append',
     * models/spark/mart/fact_table_update.sql:8). */

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{JObject, JString}
 
 /** Managed-table store: the engine's stand-in for the reference's Hive
   * metastore + S3 warehouse (reference: CTAS through
@@ -23,7 +24,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * written by few tasks and small-file explosion is avoided.
   */
 final class Warehouse(val spark: SparkSession, val root: String,
-                      namer: String => String = identity,
                       val logFormatEnabled: Boolean = false) {
 
   // Every model execution reads/writes through a Warehouse, so this is the
@@ -54,10 +54,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   private def mutationEpoch: Long = mutationEpochCtr.get()
   private def noteMutation(): Unit = mutationEpochCtr.incrementAndGet()
 
-  /** `namer` is the generate_schema_name / generate_alias_name hook
-    * (reference: macros/get_custom_schema.sql:1-22,
-    * macros/generate_alias_name.sql:1-28 — dev runs prefix relations). */
-  def tablePath(name: String): String = s"$root/${namer(name)}"
+  def tablePath(name: String): String = s"$root/$name"
 
   private def schemaPath(name: String): Path = Paths.get(tablePath(name), "_schema.json")
 
@@ -148,15 +145,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * the cluster's reducer count). */
   private def writeParallelism: Int = spark.sessionState.conf.numShufflePartitions
 
-  private def distributeForWrite(df: DataFrame, partitionBy: Seq[String],
-                                 hashSpread: Option[(String, Int)]): DataFrame =
-    (partitionBy, hashSpread) match {
-      case (Nil, _) => df
-      case (cols, None) => df.repartition(writeParallelism, cols.map(col): _*)
-      case (cols, Some((spreadCol, n))) =>
-        df.repartition(writeParallelism,
-          (cols.map(col) :+ (abs(hash(col(spreadCol))) % n)): _*)
-    }
+  private def distributeForWrite(df: DataFrame, partitionBy: Seq[String]): DataFrame =
+    if (partitionBy.isEmpty) df else df.repartition(writeParallelism, partitionBy.map(col): _*)
 
   /** Names whose writes go to the transaction-log format, set per model by
     * [[routeFormat]]. Every write method dispatches on it; reads auto-route
@@ -180,11 +170,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
     *   `ORDER BY` sites): range-partition + per-partition sort, so part files
     *   hold disjoint ordered ranges in file-name order. */
   def createTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-                  hashSpread: Option[(String, Int)] = None,
                   orderBy: Seq[String] = Nil): Unit = try {
     val out =
       if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
-      else distributeForWrite(df, partitionBy, hashSpread)
+      else distributeForWrite(df, partitionBy)
     if (logRouted.contains(name)) {
       // TxLog.overwrite IS an atomic full replace (tombstone-all + add-new
       // in one commit), with history/time-travel kept
@@ -255,10 +244,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * Spark's dynamic partition-overwrite conf, which no write here sets: a
     * parquet table publishes a [[stagedWrite]]'s partitions). */
   def insertOverwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String],
-                                onSchemaChange: OnSchemaChange,
-                                hashSpread: Option[(String, Int)] = None): Unit = try {
+                                onSchemaChange: OnSchemaChange): Unit = try {
     alignSchema(name, df, onSchemaChange) { aligned =>
-      val out = distributeForWrite(aligned, partitionBy, hashSpread)
+      val out = distributeForWrite(aligned, partitionBy)
       // dbt-spark semantics: insert_overwrite without partition_by replaces
       // the whole table (reference: dsa_orders.sql declares exactly this)
       if (partitionBy.isEmpty) createTable(name, aligned)
@@ -323,7 +311,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
           incrementPartitionsOnly)
         // staged beside the partitions it reads, in canonical column order and types
         alignSchema(name, out, OnSchemaChange.Ignore)(o => stagedWrite(name,
-          distributeForWrite(o, partitionBy, None), partitionBy,
+          distributeForWrite(o, partitionBy), partitionBy,
           Some(affected.map(partitionDir(partitionBy, _)).toSeq)))
       }
     }
@@ -457,26 +445,25 @@ final class Warehouse(val spark: SparkSession, val root: String,
   /** Docs persistence (reference: persist_docs + alter_column_comment,
     * dbt_project.yml:43-45, macros/spark_adapter_patch/alter_column_comment.sql):
     * table + column comments stored in a sidecar and surfaced as field
-    * metadata (`comment`) on read. */
+    * metadata (`comment`) on read. Replaced by rename, so a crash never
+    * leaves a half-written sidecar for [[docs]] to fail on. */
   def setDocs(name: String, tableComment: String,
-              columnComments: Map[String, String]): Unit =
-    Files.writeString(Paths.get(tablePath(name), "_docs.json"),
+              columnComments: Map[String, String]): Unit = {
+    val tmp = Files.writeString(Paths.get(tablePath(name), "_docs.json.tmp"),
       serializeDocs(Map("__table__" -> tableComment) ++ columnComments))
+    Files.move(tmp, tmp.resolveSibling("_docs.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
 
   private def serializeDocs(m: Map[String, String]): String =
-    m.map { case (k, v) => quote(k) + ": " + quote(v) }.mkString("{", ",", "}")
-
-  private def quote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    Json.write(JObject(m.toList.map { case (k, v) => k -> JString(v) }))
 
   def docs(name: String): Map[String, String] = {
     val p = Paths.get(tablePath(name), "_docs.json")
     if (!Files.exists(p)) Map.empty
-    else {
-      val re = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      re.findAllMatchIn(Files.readString(p)).map(m =>
-        m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") ->
-          m.group(2).replace("\\\"", "\"").replace("\\\\", "\\")).toMap
+    else Json.read(Files.readString(p)) match {
+      case JObject(kvs) => kvs.collect { case (k, JString(v)) => k -> v }.toMap
+      case other => throw new IllegalStateException(s"$p is not a JSON object: $other")
     }
   }
 
@@ -647,11 +634,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val keys = aligned.select(uniqueKey.map(col): _*).distinct()
     val incPvs: Set[Map[String, String]] =
       if (partitionBy.isEmpty) Set.empty
-      else aligned.select(partitionBy.map(col): _*).distinct().collect().map { r =>
-        partitionDir(partitionBy, r).split("/").toSeq.map { seg =>
-          val Array(k, v) = seg.split("=", 2); k -> v
-        }.toMap
-      }.toSet
+      else aligned.select(partitionBy.map(col): _*).distinct().collect()
+        .map(r => TxLog.partitionValues(partitionBy, partitionDir(partitionBy, r))).toSet
     var attempts = 0
     while (attempts < 5) {
       attempts += 1

@@ -35,7 +35,7 @@ class AnnDeterminismSpec extends SparkSpec {
             else BigDecimal(r.get(i).toString).setScale(6, BigDecimal.RoundingMode.HALF_UP).toString
           case _ => String.valueOf(r.get(i))
         }
-      }.mkString("") //  separator: adjacent-field aliasing
+      }.mkString("\u0001") // \u0001 separator: adjacent-field aliasing
                            // ("ab","c" vs "a","bc") must hash differently
     }.sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")

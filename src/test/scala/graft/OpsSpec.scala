@@ -88,24 +88,19 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("as-of auto dispatches by size stats and session knob, output-identical") {
+  test("as-of auto dispatches by size stats, output-identical") {
     val left = Seq(("u1", 100L, "l1"), ("u1", 50L, "l0"), ("u2", 7L, "l2"))
       .toDF("k", "t", "lv")
     val right = Seq(("u1", 90L, "r@90"), ("u1", 100L, "r@100")).toDF("k", "t", "rv")
     val expected = AsOfJoin.backward(left, right, Seq("k"), "t", "t")
       .select($"lv", $"r_rv").as[(String, Option[String])].collect().toSet
     // tiny inputs under the default 1 GiB floor => auto takes the plain path;
-    // forcing "on"/"off" and a 0-byte floor must all agree bit-for-bit
-    val configs = Seq(
-      ("auto", 1L << 30), ("auto", 0L), ("on", 1L << 30), ("off", 0L))
-    for ((mode, floor) <- configs) {
-      spark.conf.set("graft.asof.salted", mode)
-      try {
-        val got = AsOfJoin.auto(left, right, Seq("k"), "t", "t",
-            hotThreshold = 2L, detectSample = 1.0, minBytesForDetect = floor)
-          .select($"lv", $"r_rv").as[(String, Option[String])].collect().toSet
-        assert(got == expected, s"mode=$mode floor=$floor diverged")
-      } finally spark.conf.unset("graft.asof.salted")
+    // a 0-byte floor forces the salted path: both must agree bit-for-bit
+    for (floor <- Seq(1L << 30, 0L)) {
+      val got = AsOfJoin.auto(left, right, Seq("k"), "t", "t",
+          hotThreshold = 2L, detectSample = 1.0, minBytesForDetect = floor)
+        .select($"lv", $"r_rv").as[(String, Option[String])].collect().toSet
+      assert(got == expected, s"floor=$floor diverged")
     }
   }
 

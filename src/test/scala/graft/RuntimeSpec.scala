@@ -460,12 +460,12 @@ class RuntimeSpec extends SparkSpec {
       ("t2", "2024-01-01", 3L)))
   }
 
-  test("naming hook prefixes relations; docs sidecar round-trips") {
+  test("docs sidecar round-trips") {
     val root = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    val wh = new Warehouse(spark, root, name => s"dev_$name")
+    val wh = new Warehouse(spark, root)
     val ctx = Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"))
     new DagRunner(Seq(Model("t1", c => Seq(1).toDF("v")))).run(ctx)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/dev_t1")))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/t1")))
     assert(ctx.ref("t1").count() == 1)
     wh.setDocs("t1", "a \"test\" table", Map("v" -> "the value"))
     assert(wh.docs("t1") == Map("__table__" -> "a \"test\" table", "v" -> "the value"))

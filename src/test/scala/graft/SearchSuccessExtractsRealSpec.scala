@@ -133,7 +133,7 @@ class SearchSuccessExtractsRealSpec extends SparkSpec {
       sql, Map.empty, Map("start_date_ymd" -> d1Date.toString,
         "end_date_ymd" -> day(-1).toString))
     model.materialization match {
-      case Materialization.IncrementalInsertOverwrite(pb, _, _) =>
+      case Materialization.IncrementalInsertOverwrite(pb, _) =>
         assert(pb == Seq("search_date"))
       case other => fail(s"expected insert_overwrite, got $other")
     }

@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.plans.TxLog
+import graft.plans.TxLog.{AddFile, Meta, Remove, Snapshot}
+import graft.runtime.{OnSchemaChange, TempDirs, Warehouse}
 
 /** The transaction-log table format: commit atomicity (version claims),
   * snapshot isolation via tombstones + vacuum retention, time travel,
@@ -298,5 +300,92 @@ class TxLogSpec extends SparkSpec {
     assert(jobsStartedBy { TxLog.read(spark, t) } == 0)
     assert(first.schema == spark.read.parquet(files: _*).schema)
     assert(first.count() == 400)
+  }
+
+  test("a log table with `}`, `]`, `{}` and quote/backslash partition values " +
+       "survives insert_overwrite, append and keyed merges, and reads back exactly") {
+    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_codec"), logFormatEnabled = true)
+    wh.routeFormat("t", "delta")
+    def rows(xs: (Int, String, String)*) = xs.toDF("id", "v", "p")
+    wh.createTable("t", rows((0, "v0", "a}b"), (1, "v0", "x]y"), (2, "v0", "{}"),
+      (3, "v0", "q\"r\\s")), Seq("p"))
+    wh.insertOverwritePartitions("t", rows((10, "io", "a}b")), Seq("p"), OnSchemaChange.Ignore)
+    wh.append("t", rows((11, "ap", "{}")), Seq("p"))
+    wh.mergeUpsert("t", rows((3, "mg", "q\"r\\s"), (12, "mg", "x]y")), Seq("id"), Seq("p"))
+    // pruned to the increment's partitions: matched only if the increment's
+    // partition values are keyed as the manifest keys them
+    wh.mergeUpsert("t", rows((2, "m2", "{}")), Seq("id"), Seq("p"), incrementPartitionsOnly = true)
+    assert(TxLog.snapshot(Paths.get(wh.tablePath("t"))).version == 4L)
+    assert(wh.read("t").select($"id", $"v", $"p").as[(Int, String, String)].collect().toSet ==
+      Set((10, "io", "a}b"), (1, "v0", "x]y"), (2, "m2", "{}"), (3, "mg", "q\"r\\s"),
+        (11, "ap", "{}"), (12, "mg", "x]y")))
+  }
+
+  test("a log table partitioned on a column whose name Spark escapes reads its values back") {
+    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_pq"), logFormatEnabled = true)
+    wh.routeFormat("t", "delta")
+    wh.createTable("t", Seq((1, "a", "x"), (2, "b", "y")).toDF("id", "p:q", "v"), Seq("p:q"))
+    wh.mergeUpsert("t", Seq((2, "b", "z")).toDF("id", "p:q", "v"), Seq("id"), Seq("p:q"),
+      incrementPartitionsOnly = true)
+    assert(wh.read("t").select($"id", $"p:q", $"v").as[(Int, String, String)].collect().toSet ==
+      Set((1, "a", "x"), (2, "b", "z")))
+  }
+
+  // Lines as earlier releases wrote them: `"`, `\` and newline escaped as
+  // `\"`, `\\` and `\n`, every other control character as lowercase `\u00xx`.
+  private val legacyMeta = """{"meta":{"partitionCols":["p","q"]}}"""
+  private val legacyAdd1 = """{"add":{"path":"data/f1.parquet","pv":{"p":"a","q":"%7B}"},"rows":-1}}"""
+  private val legacyAdd2 = """{"add":{"path":"data/f \"2\".parquet","pv":{"p":"x\\y","q":"l1\nl2""" +
+    "\\u0009\\u0001" + """"},"rows":7}}"""
+  private val legacyRemove = """{"remove":{"path":"data/f1.parquet","ts":1700000000000}}"""
+  private val legacyAdd3 = """{"add":{"path":"data/f3.parquet","pv":{},"rows":-1}}"""
+
+  test("commit and checkpoint lines in the earlier format decode to the same snapshot") {
+    val f2 = AddFile("data/f \"2\".parquet", Map("p" -> "x\\y", "q" -> "l1\nl2\t\u0001"), 7L)
+    val f3 = AddFile("data/f3.parquet", Map.empty, -1L)
+    val expected = Snapshot(1L, Seq(f2, f3), Seq("p", "q"))
+    def table(commit0: Seq[String], commit1: Seq[String], checkpoint1: Seq[String]) = {
+      val t = freshTable()
+      val log = Files.createDirectories(t.resolve("_txlog"))
+      Files.writeString(log.resolve(f"${0L}%020d.json"), commit0.mkString("\n"))
+      Files.writeString(log.resolve(f"${1L}%020d.json"), commit1.mkString("\n"))
+      if (checkpoint1.nonEmpty)
+        Files.writeString(log.resolve(f"${1L}%020d.checkpoint.json"), checkpoint1.mkString("\n"))
+      t
+    }
+    val replayed = table(Seq(legacyMeta, legacyAdd1, legacyAdd2),
+      Seq(legacyMeta, legacyRemove, legacyAdd3), Nil)
+    assert(TxLog.snapshot(replayed) == expected)
+    assert(TxLog.history(replayed) == Seq((0L, 2, 0), (1L, 1, 1)))
+    // the commits hold no file: the snapshot can only come from the checkpoint
+    val checkpointed = table(Seq(legacyMeta), Seq(legacyMeta),
+      Seq(legacyMeta, legacyAdd2, legacyAdd3))
+    assert(TxLog.snapshot(checkpointed) == expected)
+  }
+
+  test("actions without control characters encode to the earlier format's exact bytes") {
+    for (line <- Seq(legacyMeta, legacyAdd1, legacyRemove, legacyAdd3))
+      assert(TxLog.encode(TxLog.decode(line)) == line)
+    assert(TxLog.encode(AddFile("data/f \"2\".parquet", Map("q" -> "b", "p" -> "x\\y"), 7L)) ==
+      """{"add":{"path":"data/f \"2\".parquet","pv":{"p":"x\\y","q":"b"},"rows":7}}""")
+    assert(TxLog.encode(Remove("data/f1.parquet", 1700000000000L)) == legacyRemove)
+    assert(TxLog.encode(Meta(Nil)) == """{"meta":{"partitionCols":[]}}""")
+    // a line the table writes itself, ordinary values only
+    val t = freshTable()
+    TxLog.overwrite(t, df((1, "a", 1.0)), Seq("part"))
+    val f = TxLog.snapshot(t).files.head
+    assert(Files.readString(t.resolve("_txlog").resolve(f"${0L}%020d.json")) ==
+      s"""{"meta":{"partitionCols":["part"]}}
+         |{"add":{"path":"${f.path}","pv":{"part":"a"},"rows":-1}}""".stripMargin)
+  }
+
+  test("a docs sidecar in the earlier format, with a raw newline, still reads") {
+    val wh = new Warehouse(spark, TempDirs.create("graft_docs_legacy"))
+    Files.createDirectories(Paths.get(wh.tablePath("t")))
+    Files.writeString(Paths.get(wh.tablePath("t"), "_docs.json"),
+      "{\"__table__\": \"two\nlines\",\"v\": \"a \\\"q\\\" and \\\\ back\"}")
+    assert(wh.docs("t") == Map("__table__" -> "two\nlines", "v" -> "a \"q\" and \\ back"))
+    wh.setDocs("t", "tab\there \u0001", Map("v" -> "a \"q\" and \\ back"))
+    assert(wh.docs("t") == Map("__table__" -> "tab\there \u0001", "v" -> "a \"q\" and \\ back"))
   }
 }
