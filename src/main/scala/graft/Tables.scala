@@ -1,9 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.graft.LeafFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
-import org.apache.spark.sql.types.StructType
 
 /** Source registry over the driver-provided parquet test tables.
   *
@@ -27,33 +32,70 @@ object Tables {
     if (name == "events") normalizeEvents(df) else df
   }
 
-  /** `spark.read.parquet(paths: _*)`, with the schema inferred once per
-    * unchanged file set: inference reads parquet footers in a Spark job
-    * (`SchemaMergeUtils.mergeSchemasInParallel`), a fixed cost on every
-    * `{{ source() }}` otherwise. A cached schema is used while its stamp
-    * holds: the session settings that change inference, and every leaf
-    * file's (path, length, modification time) in the file listing of the
-    * DataFrame returned, so the stamp and the read share one listing and a
-    * changed file set (new data landing) re-infers instead of being read
-    * with a stale schema. The cache keeps one entry per `location`,
-    * replaced on a miss, so a long-lived session holds one per source. It
-    * keeps only the `StructType`, never a DataFrame, which would pin its
-    * file listing. A missing path fails with Spark's own error. */
+  /** `spark.read.parquet(paths: _*)`, resolved once per unchanged file set.
+    * Resolving builds a `DataSource` and a file index and infers the schema
+    * from the footers in a Spark job, a fixed cost on every `{{ source() }}`
+    * otherwise. Each session keeps one entry per `location`, replaced on a
+    * miss: the resolved `HadoopFsRelation`, its stamp and each file's
+    * [[FooterBounds]]. The stamp is the session settings that change
+    * inference plus every leaf file's (path, length, modification time),
+    * taken from the relation's own file index and kept only when a fresh
+    * listing agrees with it, so a file landing between the two re-resolves.
+    *
+    * A hit lists the root paths (a stat for a file, Spark's hidden-file
+    * filter for a directory), and returns a new `LogicalRelation` over the
+    * held relation, with fresh expression ids: no `DataSource`, no footer, no
+    * job. A miss reads footers only for files it has not bounded before. The
+    * held bounds let [[FooterBounds.EmptyScan]] prove a filter over the
+    * source empty. Entries are weakly keyed on the session, but a held
+    * relation refers back to its session, so they live as long as the JVM:
+    * one per source the session read. A missing path fails with Spark's own
+    * error. */
   def readParquet(spark: SparkSession, location: String, paths: Seq[String]): DataFrame = {
     val confs = inferenceConfs.map(spark.conf.getOption)
-    val hit = schemaCache.get(location).collect {
-      case (c, files, schema) if c == confs => (files, spark.read.schema(schema).parquet(paths: _*))
-    }.collect { case (files, df) if leafFiles(df).contains(files) => df }
-    hit.getOrElse {
-      val df = spark.read.parquet(paths: _*)
-      leafFiles(df).foreach(files => schemaCache.put(location, (confs, files, df.schema)))
-      df
-    }
+    val held = Option(sources(spark).get(location))
+    held.filter(s => s.confs == confs && s.paths == paths && listing(spark, paths).contains(s.files))
+      .map(s => spark.baseRelationToDataFrame(s.relation))
+      .getOrElse {
+        val df = spark.read.parquet(paths: _*)
+        val fresh = df.queryExecution.analyzed.collectFirst {
+          case LogicalRelation(r @ HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _),
+            _, _, _, _) => (r, index)
+        }.flatMap { case (r, index) =>
+          val leaves = index.allFiles().map(f => stamp(f) -> f).sortBy(_._1)
+          val files = leaves.map(_._1)
+          Option.when(listing(spark, paths).contains(files)) {
+            val known = held.fold(Map.empty[(String, Long, Long), FooterBounds.FileBounds])(_.bounds)
+            val conf = spark.sessionState.newHadoopConf()
+            Source(confs, paths, files, r,
+              leaves.map { case (k, f) => k -> known.getOrElse(k, FooterBounds.read(f, conf)) }.toMap)
+          }
+        }
+        fresh match {
+          case Some(s) => sources(spark).put(location, s)
+          case None => sources(spark).remove(location)
+        }
+        df
+      }
   }
 
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Option[String]], Seq[(String, Long, Long)], StructType)]
-  private[graft] def schemaCacheSize: Int = schemaCache.size
+  private final case class Source(confs: Seq[Option[String]], paths: Seq[String],
+                                  files: Seq[(String, Long, Long)], relation: HadoopFsRelation,
+                                  bounds: Map[(String, Long, Long), FooterBounds.FileBounds])
+
+  private val sessions = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Source]]
+
+  private def sources(spark: SparkSession): ConcurrentHashMap[String, Source] =
+    sessions.synchronized(sessions.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Source]))
+
+  private[graft] def schemaCacheSize: Int =
+    sessions.synchronized(sessions.values.asScala.map(_.size).sum)
+
+  /** Every file's bounds of a relation this session holds, or None for any
+    * other relation. */
+  private[graft] def bounds(spark: SparkSession,
+                            r: HadoopFsRelation): Option[Iterable[FooterBounds.FileBounds]] =
+    sources(spark).values.asScala.find(_.relation eq r).map(_.bounds.values)
 
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -64,14 +106,13 @@ object Tables {
     "spark.sql.caseSensitive",
     "spark.sql.sources.partitionColumnTypeInference.enabled")
 
-  /** The (path, length, modification time) of every file `df` scans, from
-    * the file index its relation already listed. */
-  private def leafFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
-    df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }.collect {
-      case r: HadoopFsRelation => r.location
-    }.collect { case index: PartitioningAwareFileIndex =>
-      index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
-    }
+  private def stamp(f: FileStatus): (String, Long, Long) =
+    (f.getPath.toString, f.getLen, f.getModificationTime)
+
+  /** The sorted stamps of the leaf files under `paths` now; None when a
+    * path is gone. */
+  private def listing(spark: SparkSession, paths: Seq[String]): Option[Seq[(String, Long, Long)]] =
+    Try(LeafFiles(paths, spark.sessionState.newHadoopConf()).map(stamp).sorted).toOption
 
   /** Normalize the events table's `ts` column, adaptively by physical type:
     *

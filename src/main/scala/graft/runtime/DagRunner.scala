@@ -156,7 +156,8 @@ final class DagRunner(models: Seq[Model]) {
       materialize(ctx, m, reload)
       Right(RunStatus.Success((System.nanoTime() - t0) / 1e9))
     } catch {
-      case e: Exception => Right(RunStatus.Failed(e.getMessage))
+      // a message-less exception is recorded by its class name
+      case e: Exception => Right(RunStatus.Failed(Option(e.getMessage).getOrElse(e.toString)))
       case e: Throwable => Left(e)
     } finally {
       // hot-CTE checkpoints are per-materialization scratch: the write

@@ -36,6 +36,11 @@ import org.apache.spark.sql.SparkSession
   * part of [[Dialect.pin]], and a session built without [[Dialect.apply]]
   * keeps Hadoop's forking default.
   *
+  * It also injects [[graft.FooterBounds.EmptyScan]], the optimizer rule
+  * that replaces a filter over a source [[graft.Tables]] holds with an empty
+  * relation when the source's footer bounds refute it. Like the file
+  * system, an optimizer rule can only be added when the session is built.
+  *
   * [[Dialect.local]] is the one place for the engine's session settings:
   * every main and spec builds its local session through it and adds only
   * what it alone needs.
@@ -44,10 +49,12 @@ object Dialect {
   val settings: Map[String, String] = Map(
     "spark.sql.ansi.enabled" -> "false")
 
-  /** Apply the dialect and the local filesystem to a session builder. */
+  /** Apply the dialect, the local filesystem and the empty-scan rule to a
+    * session builder. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .withExtensions(_.injectOptimizerRule(graft.FooterBounds.EmptyScan))
 
   /** A `local[cores]` session builder with the engine's execution settings
     * (the ones the bench times) and the dialect. */

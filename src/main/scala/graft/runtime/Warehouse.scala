@@ -244,17 +244,36 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * Spark's dynamic partition-overwrite conf, which no write here sets: a
     * parquet table publishes a [[stagedWrite]]'s partitions). */
   def insertOverwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String],
-                                onSchemaChange: OnSchemaChange): Unit = try {
+                                onSchemaChange: OnSchemaChange): Unit = {
+    val existed = tableExists(name)
     alignSchema(name, df, onSchemaChange) { aligned =>
-      val out = distributeForWrite(aligned, partitionBy)
       // dbt-spark semantics: insert_overwrite without partition_by replaces
       // the whole table (reference: dsa_orders.sql declares exactly this)
       if (partitionBy.isEmpty) createTable(name, aligned)
-      else if (logRouted.contains(name))
-        graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
-      else stagedWrite(name, out, partitionBy, partitions = Some(Nil))
+      else unlessEmpty(existed, aligned) {
+        val out = distributeForWrite(aligned, partitionBy)
+        if (logRouted.contains(name))
+          graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
+        else stagedWrite(name, out, partitionBy, partitions = Some(Nil))
+      }
     }
-  } finally noteMutation()
+  }
+
+  /** Run an increment's `write` and move the mutation epoch, unless the table
+    * `existed` and the increment is provably empty: its optimized plan is an
+    * empty relation, proven without running it (a source filter refuted by
+    * footer bounds, a false predicate, an empty local frame). Writing nothing
+    * into an existing table leaves it as it was, so the skip makes no
+    * staging directory, no log commit and no mutation. */
+  private def unlessEmpty(existed: Boolean, increment: DataFrame)(write: => Unit): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.{EmptyRelation, LocalRelation}
+    val empty = existed && (increment.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.isEmpty
+      case _: EmptyRelation => true
+      case _ => false
+    })
+    if (!empty) try write finally noteMutation()
+  }
 
   /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
     * INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
@@ -290,32 +309,33 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def mergeUpsert(name: String, df: DataFrame, uniqueKey: Seq[String],
                   partitionBy: Seq[String],
                   onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-                  incrementPartitionsOnly: Boolean = false): Unit = try {
-    if (!tableExists(name)) { createTable(name, df, partitionBy); return }
-    alignSchema(name, df, onSchemaChange) { aligned =>
+                  incrementPartitionsOnly: Boolean = false): Unit =
+    if (!tableExists(name)) createTable(name, df, partitionBy)
+    else alignSchema(name, df, onSchemaChange) { aligned =>
       // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
       // INSERT): nothing can match, so it degrades to append (reference
       // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
       if (uniqueKey.isEmpty) append(name, aligned, partitionBy)
-      else if (logRouted.contains(name))
-        mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly)
-      else if (partitionBy.isEmpty) {
-        // read(name) is constructed only on the paths that scan the whole
-        // table: building the DataFrame lists every file eagerly, which the
-        // 100× probe measured as the dominant merge term at 7,700 partitions
-        val keys = aligned.select(uniqueKey.map(col): _*).distinct()
-        val survivors = read(name).join(keys, uniqueKey, "left_anti")
-        createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
-      } else {
-        val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
-          incrementPartitionsOnly)
-        // staged beside the partitions it reads, in canonical column order and types
-        alignSchema(name, out, OnSchemaChange.Ignore)(o => stagedWrite(name,
-          distributeForWrite(o, partitionBy), partitionBy,
-          Some(affected.map(partitionDir(partitionBy, _)).toSeq)))
+      else unlessEmpty(existed = true, aligned) {
+        if (logRouted.contains(name))
+          mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly)
+        else if (partitionBy.isEmpty) {
+          // read(name) is constructed only on the paths that scan the whole
+          // table: building the DataFrame lists every file eagerly, which the
+          // 100× probe measured as the dominant merge term at 7,700 partitions
+          val keys = aligned.select(uniqueKey.map(col): _*).distinct()
+          val survivors = read(name).join(keys, uniqueKey, "left_anti")
+          createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
+        } else {
+          val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
+            incrementPartitionsOnly)
+          // staged beside the partitions it reads, in canonical column order and types
+          alignSchema(name, out, OnSchemaChange.Ignore)(o => stagedWrite(name,
+            distributeForWrite(o, partitionBy), partitionBy,
+            Some(affected.map(partitionDir(partitionBy, _)).toSeq)))
+        }
       }
     }
-  } finally noteMutation()
 
   /** `col=value/...` relative path of one partition, hive-escaped.
     *
@@ -432,15 +452,18 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Row append (reference: incremental_strategy='append'). */
-  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = try {
+  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+    val existed = tableExists(name)
     alignSchema(name, df, OnSchemaChange.Ignore) { aligned =>
-      if (logRouted.contains(name)) graft.plans.TxLog.append(logPath(name), aligned, partitionBy)
-      else {
-        val w = aligned.write.mode(SaveMode.Append)
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tablePath(name))
+      unlessEmpty(existed, aligned) {
+        if (logRouted.contains(name)) graft.plans.TxLog.append(logPath(name), aligned, partitionBy)
+        else {
+          val w = aligned.write.mode(SaveMode.Append)
+          (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tablePath(name))
+        }
       }
     }
-  } finally noteMutation()
+  }
 
   /** Docs persistence (reference: persist_docs + alter_column_comment,
     * dbt_project.yml:43-45, macros/spark_adapter_patch/alter_column_comment.sql):
@@ -673,34 +696,34 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Apply the on_schema_change policy against the canonical schema, update
     * the sidecar (reads inside `write`, such as merge survivors, see it) and
-    * `write` the aligned frame. If `write` throws, the previous sidecar, or
-    * its absence, is put back; a process kill before the commit still leaves
+    * `write` the aligned frame. A changed sidecar moves the mutation epoch
+    * itself, so a view over the table re-derives also when `write` skips an
+    * empty increment. If `write` throws, the previous sidecar, or its
+    * absence, is put back; a process kill before the commit still leaves
     * the old files read under the new schema. */
   private def alignSchema(name: String, df: DataFrame, policy: OnSchemaChange)
                          (write: DataFrame => Unit): Unit = {
     val before = Some(schemaPath(name)).filter(Files.exists(_)).map(Files.readAllBytes)
-    val aligned = canonicalSchema(name) match {
-      case None =>
-        writeSchema(name, df.schema); df
+    val (aligned, sidecar) = canonicalSchema(name) match {
+      case None => (df, Some(df.schema))
       case Some(existing) =>
         val existingNames = existing.fieldNames.toSeq
         val incomingNames = df.columns.toSeq
         policy match {
           case OnSchemaChange.Ignore =>
             // project increment onto the existing schema; drop new columns
-            df.select(existing.fields.toSeq.map { f =>
+            (df.select(existing.fields.toSeq.map { f =>
               if (incomingNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
               else lit(null).cast(f.dataType).as(f.name)
-            }: _*)
+            }: _*), None)
           case OnSchemaChange.AppendNewColumns =>
             val newCols = df.schema.fields.filterNot(f => existingNames.contains(f.name))
-            writeSchema(name, StructType(existing.fields ++ newCols))
-            df
+            (df, Some(StructType(existing.fields ++ newCols)).filter(_ != existing))
           case OnSchemaChange.SyncAllColumns =>
-            writeSchema(name, df.schema)
-            df
+            (df, Some(df.schema).filter(_ != existing))
         }
-      }
+    }
+    sidecar.foreach { s => writeSchema(name, s); noteMutation() }
     try write(aligned)
     catch { case e: Throwable =>
       before match {

@@ -193,4 +193,34 @@ object OpsProperties extends Properties("graft.ops") {
             runtime.Jinja.Env(Map.empty, isIncremental = false))).isFailure
       spliceOk && branchOk
     }
+
+  private val boundedGen = for {
+    values <- Gen.listOfN(12, Gen.option(Gen.choose(-50L, 50L)))
+    files <- Gen.choose(1, 3)
+    column <- Gen.oneOf("l", "d", "ntz")
+    op <- Gen.oneOf("<", "<=", ">", ">=", "=")
+    at <- Gen.choose(-80L, 80L)
+    literalLeft <- Gen.oneOf(true, false)
+  } yield (values, files, column, op, at, literalLeft)
+
+  property("footer-bound empty scans == direct parquet read (long, date, timestamp_ntz)") =
+    forAll(boundedGen) { case (values, files, column, op, at, literalLeft) =>
+      import spark.implicits._
+      def typed(v: String) = Map(
+        "l" -> s"CAST($v AS BIGINT)",
+        "d" -> s"DATE_ADD(DATE '2001-01-01', CAST($v AS INT))",
+        "ntz" -> s"CAST(TIMESTAMP_SECONDS(978307200 + $v) AS TIMESTAMP_NTZ)")
+      val dir = graft.runtime.TempDirs.create("graft_bounds_prop")
+      val path = s"$dir/t.parquet"
+      values.grouped(math.max(1, (values.size + files - 1) / files)).foreach { chunk =>
+        chunk.toDF("v").selectExpr(Seq("l", "d", "ntz").map(c => s"${typed("v")(c)} AS $c"): _*)
+          .write.mode("append").parquet(path)
+      }
+      val literal = typed(at.toString)(column)
+      val flip = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=", "=" -> "=")
+      val predicate = if (literalLeft) s"$literal ${flip(op)} $column" else s"$column $op $literal"
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.filter(org.apache.spark.sql.functions.expr(predicate)).collect().map(_.toString).sorted.toSeq
+      rows(Tables(spark, dir, "t")) == rows(spark.read.parquet(path))
+    }
 }

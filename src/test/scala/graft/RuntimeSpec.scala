@@ -982,6 +982,17 @@ class RuntimeSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(target.resolve("run_results.json")) == rrJson)
   }
 
+  test("a model failing with a message-less exception records the exception in run_results.json") {
+    val ctx = freshCtx()
+    val models = Seq(Model("m_bare", _ => throw new IllegalStateException()))
+    val results = new DagRunner(models).run(ctx)
+    val target = java.nio.file.Files.createTempDirectory("graft_target")
+    RunReport.write(target, results, ctx.vars, models)
+    val (parsed, _) = RunReport.readRunResults(
+      java.nio.file.Files.readString(target.resolve("run_results.json")))
+    assert(parsed("m_bare") == (("error", None, Some("java.lang.IllegalStateException"))))
+  }
+
   test("snapshot runTs requires deterministic vars (no wall-clock fallback)") {
     val ctx = freshCtx() // neither run_ts nor start_date_ymd
     val snap = Model("snap_strict", _ => Seq((1, "a")).toDF("_id", "v"),

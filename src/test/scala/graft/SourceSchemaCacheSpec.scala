@@ -102,4 +102,61 @@ class SourceSchemaCacheSpec extends SparkSpec {
     }
     assert(Tables.schemaCacheSize == before + 1)
   }
+
+  private def relationOf(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+    case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+  }.get
+
+  test("a hit reuses the held relation under a new LogicalRelation and starts no job") {
+    val dir = tmpDir()
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/orders.parquet")
+    val first = relationOf(Tables(spark, dir, "orders"))
+    var again: DataFrame = null
+    assert(jobsStartedBy { again = Tables(spark, dir, "orders") } == 0)
+    val second = relationOf(again)
+    assert(second.relation eq first.relation)
+    assert(second ne first)
+    assert(second.output.map(_.exprId).intersect(first.output.map(_.exprId)).isEmpty)
+    assert(again.as[(Int, String)].collect().sorted.toSeq == Seq((1, "a"), (2, "b")))
+  }
+
+  test("a self-join of one source in one query returns the right rows") {
+    val dir = tmpDir()
+    Seq((1, 2), (2, 3), (3, 1)).toDF("k", "next").write.parquet(s"$dir/orders.parquet")
+    Tables(spark, dir, "orders")
+    val a = Tables(spark, dir, "orders")
+    val b = Tables(spark, dir, "orders")
+    assert(relationOf(a).relation eq relationOf(b).relation)
+    val joined = a.as("a").join(b.as("b"), $"a.next" === $"b.k")
+      .select($"a.k", $"b.next").as[(Int, Int)].collect().sorted.toSeq
+    assert(joined == Seq((1, 3), (2, 1), (3, 2)))
+    a.createOrReplaceTempView("self_join_src")
+    assert(spark.sql("SELECT x.k, y.next FROM self_join_src x JOIN self_join_src y ON x.next = y.k")
+      .as[(Int, Int)].collect().sorted.toSeq == joined)
+  }
+
+  test("a new session with a flipped inference setting never gets the other session's relation") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // written without Spark's schema metadata, so the setting decides the type
+    val dir = tmpDir()
+    val schema = MessageTypeParser.parseMessageType(
+      "message orders { required int64 k; required int64 ts (TIMESTAMP(MICROS,false)); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/orders.parquet"))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("k", 1L).append("ts", 978404640000000L))
+    finally writer.close()
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val mine = Tables(spark, dir, "orders")
+    val other = spark.newSession()
+    other.conf.set(key, (!other.conf.get(key).toBoolean).toString)
+    val theirs = Tables(other, dir, "orders")
+    assert(relationOf(theirs).relation ne relationOf(mine).relation)
+    assert(theirs.schema("ts").dataType != mine.schema("ts").dataType)
+    assert(theirs.schema == other.read.parquet(s"$dir/orders.parquet").schema)
+    assert(relationOf(Tables(spark, dir, "orders")).relation eq relationOf(mine).relation)
+  }
 }
