@@ -839,9 +839,6 @@ object CorpusExecute {
     "null", "true", "false", "from", "with", "values", "distinct", "interval",
     "case", "between", "like", "rlike", "in", "exists", "all", "any", "by")
 
-  private def viewNameOf(schema: String, table: String): String =
-    s"${schema}__${table}".replaceAll("[^A-Za-z0-9_]", "_")
-
   /** alias → source mapping from the rendered text: every occurrence of a
     * relation name optionally followed by `[AS] alias`. The relation name
     * itself always maps too (lowercased keys). */
@@ -858,7 +855,7 @@ object CorpusExecute {
   }
 
   def aliasMap(rendered: String, sources: Seq[(String, String)]): Map[String, (String, String)] = {
-    val entries = sources.flatMap(st => aliasEntries(rendered, viewNameOf(st._1, st._2), st))
+    val entries = sources.flatMap(st => aliasEntries(rendered, SqlTemplater.sourceName(st._1, st._2), st))
     // an alias used for DIFFERENT relations in different scopes is ambiguous
     // evidence — attributing through it would pin columns onto the wrong
     // table; keep only single-target aliases (view-name identities always
@@ -4362,7 +4359,7 @@ object CorpusExecute {
     val aliasAlts = mutable.Map.empty[String, Seq[(String, String)]]
     Prof.timed("aliasalts") {
     for ((a, es) <- srcs.flatMap(st =>
-           aliasEntries(renderedSql, viewNameOf(st._1, st._2), st)).groupBy(_._1)
+           aliasEntries(renderedSql, SqlTemplater.sourceName(st._1, st._2), st)).groupBy(_._1)
          if es.map(_._2).distinct.size > 1)
       aliasAlts(a) = es.map(_._2).distinct
     }

@@ -1,6 +1,12 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction,
+  UnresolvedSubqueryColumnAliases}
+import org.apache.spark.sql.catalyst.expressions.{UnresolvedWindowExpression, WindowExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Join, LogicalPlan,
+  UnresolvedWith}
+import org.apache.spark.sql.graft.OfRows
 
 /** Hot-CTE materialization for SQL-text models (r17 optimization round).
   *
@@ -12,25 +18,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sessionization chain from 4 CTEs and its lag chain from 3 more; measured
   * plan: 66 Exchanges / 60 Window nodes for one 150k-row model run).
   *
-  * This pass rewrites the RENDERED model SQL before execution:
-  *   1. parse the top-level `WITH` list (comment- and literal-aware bracket
-  *      matching; bails out — returning the text unchanged — on RECURSIVE,
-  *      quoted CTE names, duplicate names, or any parse surprise);
-  *   2. a CTE is HOT when it is referenced >= 2 times downstream, contains an
-  *      expensive operator keyword (OVER / JOIN / GROUP BY / DISTINCT), and
-  *      is deterministic (no rand()/uuid()/current_timestamp()/… — those must
-  *      keep single-query evaluation semantics);
-  *   3. each hot CTE is executed once as its own statement (with all earlier
-  *      defs in scope) into a LAZY `localCheckpoint` — computed on first use
-  *      of the enclosing query, block-cached for the other references — and
-  *      its def body is replaced by a read of the checkpoint's temp view.
-  *      References are untouched: only the body text between the def's
-  *      parentheses changes, so resolution and column sets are identical.
+  * This pass rewrites a model's PARSED plan (inputs already bound in by
+  * [[SqlTemplater.runSql]]) before analysis:
+  *   1. only the top-level `WITH` is considered; `WITH RECURSIVE` is left
+  *      alone;
+  *   2. a definition is HOT when it is referenced >= 2 times as a relation
+  *      by later definitions and the final query (counted with Spark's CTE
+  *      scoping, subqueries included), contains an expensive operator (a
+  *      join, a grouped aggregate, a DISTINCT, a window, a DISTINCT call),
+  *      and is deterministic (no rand()/uuid()/current_timestamp()/… — those
+  *      must keep single-query evaluation semantics; non-determinism
+  *      propagates through the earlier definitions a body reads). The plans
+  *      bound in for inputs are not inspected: an upstream view's joins do
+  *      not make `SELECT * FROM {{ ref(x) }}` hot;
+  *   3. each hot definition's query is built once, with all earlier
+  *      definitions in scope, into a LAZY `localCheckpoint` — computed on
+  *      first use of the enclosing query, block-cached for the other
+  *      references — whose plan replaces the query inside the definition.
+  *      The definition's name and column-alias list stay, so resolution and
+  *      column sets are identical.
   *
   * Honesty note (bench contract): `localCheckpoint` persists the RDD of THIS
   * plan instance only — nothing registers with the CacheManager, so no later
   * query (and no later bench iteration) can silently match it by plan
-  * equality. Every run recomputes from the parquet inputs.
+  * equality. Every run recomputes from the parquet inputs. The checkpoint
+  * cuts lineage and keeps its blocks only on executors: losing one (e.g.
+  * under dynamic allocation) fails the query.
   *
   * Scale note: at 100 TB the trade is the standard cache-vs-recompute one
   * (guide §5): one materialization of the shared intermediate (spilling to
@@ -40,216 +53,77 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CteMaterializer {
 
-  final case class CteDef(name: String, bodyStart: Int, bodyEnd: Int)
-  final case class Parsed(defs: Seq[CteDef], tailStart: Int)
+  // functions whose per-query single evaluation a split into a separate
+  // statement would change, or that are plain non-deterministic
+  private val NonDet = Set("rand", "randn", "random", "uuid", "shuffle",
+    "monotonically_increasing_id", "current_timestamp", "now", "localtimestamp",
+    "current_date", "curdate", "unix_timestamp", "input_file_name", "spark_partition_id")
+  // the parenthesis-free forms, which parse as column references
+  private val NonDetBare = Set("current_timestamp", "current_date", "localtimestamp")
 
-  /** Blank out `--` line comments, bracketed `/* */` comments, and
-    * '…'/"…"/`…` literals (same length, spaces) so positional parsing and
-    * reference counting never trip on SQL inside strings or comments. */
-  private[runtime] def mask(sql: String): String = {
-    val b = new StringBuilder(sql)
-    var i = 0
-    def blank(from: Int, until: Int): Unit = {
-      var j = from
-      while (j < until && j < b.length) { if (b(j) != '\n') b(j) = ' '; j += 1 }
-    }
-    while (i < sql.length) {
-      val c = sql(i)
-      if (c == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        val end = sql.indexOf('\n', i) match { case -1 => sql.length; case e => e }
-        blank(i, end); i = end
-      } else if (c == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-        val close = sql.indexOf("*/", i + 2) match { case -1 => sql.length; case e => e + 2 }
-        blank(i, close); i = close
-      } else if (c == '\'' || c == '"' || c == '`') {
-        val start = i
-        i += 1
-        var open = true
-        while (i < sql.length && open) {
-          if (sql(i) == '\\' && i + 1 < sql.length) i += 2
-          else if (sql(i) == c) {
-            if (i + 1 < sql.length && sql(i + 1) == c) i += 2 // doubled quote
-            else { open = false; i += 1 }
-          } else i += 1
-        }
-        blank(start + 1, i - 1)
-      } else i += 1
-    }
-    b.toString
-  }
+  /** Every node of `p` (CTE definitions and subquery plans included) outside
+    * the already-analyzed plans bound in for inputs. */
+  private def nodes(p: LogicalPlan): Iterator[LogicalPlan] =
+    if (p.analyzed) Iterator.empty
+    else Iterator(p) ++ (p.children ++ p.innerChildren.collect { case q: LogicalPlan => q } ++
+      p.subqueries).iterator.flatMap(nodes)
 
-  private def skipWs(m: String, from: Int): Int = {
-    var i = from
-    while (i < m.length && m(i).isWhitespace) i += 1
-    i
-  }
-
-  private val IdentRe = """[A-Za-z_][A-Za-z0-9_]*""".r
-
-  /** Parse the top-level WITH list. None = leave the statement alone. */
-  private[graft] def parse(sql: String): Option[Parsed] = {
-    val m = mask(sql)
-    var i = skipWs(m, 0)
-    if (!m.regionMatches(true, i, "WITH", 0, 4)) return None
-    i += 4
-    if (i < m.length && !m(i).isWhitespace) return None
-    i = skipWs(m, i)
-    if (m.regionMatches(true, i, "RECURSIVE", 0, 9)) return None
-    val defs = scala.collection.mutable.ArrayBuffer.empty[CteDef]
-    var more = true
-    while (more) {
-      val nameM = IdentRe.findPrefixMatchOf(m.substring(i)).getOrElse(return None)
-      val name = nameM.matched
-      i = skipWs(m, i + name.length)
-      // column-alias list `name (c1, c2) AS (...)`: bail out entirely (like
-      // RECURSIVE/quoted names) — CteDef does not carry the alias list, so a
-      // rebuilt statement would silently drop it and expose the body's
-      // original column names (r17 ADVICE item)
-      if (i < m.length && m(i) == '(') return None
-      if (!m.regionMatches(true, i, "AS", 0, 2)) return None
-      i = skipWs(m, i + 2)
-      if (i >= m.length || m(i) != '(') return None
-      val close = matchParen(m, i).getOrElse(return None)
-      defs += CteDef(name, i + 1, close)
-      i = skipWs(m, close + 1)
-      if (i < m.length && m(i) == ',') { i = skipWs(m, i + 1) } else more = false
-    }
-    if (i >= m.length) return None // no final statement
-    if (defs.map(_.name.toLowerCase).distinct.size != defs.size) return None
-    Some(Parsed(defs.toSeq, i))
-  }
-
-  /** Index of the ')' matching the '(' at `open` in masked text. */
-  private def matchParen(m: String, open: Int): Option[Int] = {
-    var depth = 0
-    var i = open
-    while (i < m.length) {
-      m(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return Some(i)
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
-  private val ExpensiveRe =
-    """(?i)\b(OVER|JOIN|GROUP\s+BY|DISTINCT)\b""".r
-  // expressions whose per-query-single-evaluation semantics a split into a
-  // separate statement would change, or that are plain non-deterministic
-  private val NonDetRe =
-    ("""(?i)\b(RAND|RANDN|RANDOM|UUID|SHUFFLE|MONOTONICALLY_INCREASING_ID|""" +
-      """CURRENT_TIMESTAMP|NOW|LOCALTIMESTAMP|CURRENT_DATE|CURDATE|""" +
-      """UNIX_TIMESTAMP|INPUT_FILE_NAME|SPARK_PARTITION_ID)\s*\(""").r
-  private val NonDetBareRe =
-    """(?i)\bCURRENT_TIMESTAMP\b|\bCURRENT_DATE\b|\bLOCALTIMESTAMP\b""".r
-
-  private def refCount(masked: String, parsed: Parsed, idx: Int): Int = {
-    val name = parsed.defs(idx).name
-    // count only RELATION-position references (FROM x / JOIN x, plus entries
-    // of a bare comma-list `FROM a, b, c`): those are what Spark re-plans and
-    // re-executes per occurrence. Bare-identifier counting overcounts badly —
-    // `cte.column` qualifiers and columns NAMED like their CTE (q72's
-    // numbering CTEs) both flagged single-use CTEs hot, and needlessly
-    // checkpointing those regressed the write. Comma lists WITH aliases
-    // (`FROM a x, b y`) are still undercounted — conservative: only leaves a
-    // CTE inline (r18: plain comma lists now counted, VERDICT item 6).
-    val re = s"""(?i)\\b(?:FROM|JOIN)\\s+${java.util.regex.Pattern.quote(name)}\\b(?!\\s*\\.)""".r
-    // bare comma-list FROM: entries after the first (the first is counted by
-    // `re`); requires the list to be plain identifiers up to the match
-    val listRe =
-      """(?i)\bFROM\s+[A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)+""".r
-    def countIn(from: Int, until: Int): Int = {
-      val s = masked.substring(from, until)
-      val direct = re.findAllMatchIn(s).size
-      val commas = listRe.findAllMatchIn(s).map { m =>
-        m.matched.split(',').iterator.drop(1)
-          .count(_.trim.equalsIgnoreCase(name))
-      }.sum
-      direct + commas
-    }
-    val later = parsed.defs.drop(idx + 1)
-      .map(d => countIn(d.bodyStart, d.bodyEnd)).sum
-    later + countIn(parsed.tailStart, masked.length)
-  }
-
-  /** Per-(session, model) registry of temp views created by materialize —
-    * released (dropped) after the model's write completes. */
-  private val created =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[String]]
-
-  def release(spark: SparkSession, modelName: String): Unit =
-    created.remove((spark, modelName)).foreach(_.foreach { v =>
-      try spark.catalog.dropTempView(v)
-      catch { case scala.util.control.NonFatal(_) => }
+  private def expensive(p: LogicalPlan): Boolean = nodes(p).exists {
+    case _: Join | _: Distinct => true
+    case a: Aggregate if a.groupingExpressions.nonEmpty => true
+    case n => n.expressions.exists(_.exists {
+      case _: WindowExpression | _: UnresolvedWindowExpression => true
+      case f: UnresolvedFunction => f.isDistinct
+      case _ => false
     })
-
-  private def viewNameOf(modelName: String, cte: String): String = {
-    // include a hash of the model name: plain `${model}_$cte` is ambiguous
-    // (model "a" + cte "b_c" collides with model "a_b" + cte "c"), and a
-    // collision would let createOrReplaceTempView/release clobber another
-    // model's live checkpoint view (r17 ADVICE item)
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(modelName))
-    s"__graft_cte_${h}_${modelName}_$cte".replaceAll("[^A-Za-z0-9_]", "_")
   }
 
-  /** Rewrite `sql`, materializing hot CTEs as lazy local checkpoints.
-    * Returns the SQL to execute (unchanged when nothing qualifies). */
-  def materializeHot(spark: SparkSession, modelName: String, sql: String): String = {
-    val parsed = parse(sql) match { case Some(p) => p; case None => return sql }
-    val masked = mask(sql)
-    // non-determinism propagates TRANSITIVELY through upstream defs: a
-    // deterministic CTE built on a non-det upstream must not be split into a
-    // separate statement, or the upstream would be evaluated twice (r17
-    // ADVICE item). Reference detection is a conservative bare-identifier
-    // match — overcounting only leaves a CTE inline.
-    val nonDet = new Array[Boolean](parsed.defs.size)
-    for (k <- parsed.defs.indices) {
-      val body = masked.substring(parsed.defs(k).bodyStart, parsed.defs(k).bodyEnd)
-      val own = NonDetRe.findFirstIn(body).isDefined ||
-        NonDetBareRe.findFirstIn(body).isDefined
-      val inherited = (0 until k).exists { j =>
-        nonDet(j) &&
-          s"""(?i)\\b${java.util.regex.Pattern.quote(parsed.defs(j).name)}\\b""".r
-            .findFirstIn(body).isDefined
-      }
-      nonDet(k) = own || inherited
-    }
-    val hot = parsed.defs.indices.filter { k =>
-      val d = parsed.defs(k)
-      val body = masked.substring(d.bodyStart, d.bodyEnd)
-      refCount(masked, parsed, k) >= 2 &&
-        ExpensiveRe.findFirstIn(body).isDefined && !nonDet(k)
-    }.toSet
-    if (hot.isEmpty) return sql
+  private def nonDeterministic(p: LogicalPlan): Boolean =
+    nodes(p).exists(_.expressions.exists(_.exists {
+      case f: UnresolvedFunction => NonDet(f.nameParts.last.toLowerCase)
+      case UnresolvedAttribute(Seq(n)) => NonDetBare(n.toLowerCase)
+      case _ => false
+    }))
 
-    release(spark, modelName) // drop leftovers from a failed prior run
-    val bodies = scala.collection.mutable.ArrayBuffer(
-      parsed.defs.map(d => sql.substring(d.bodyStart, d.bodyEnd)): _*)
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (k <- parsed.defs.indices if hot(k)) {
-      val d = parsed.defs(k)
-      val prefix =
-        if (k == 0) ""
-        else "WITH " + (0 until k).map(j =>
-          s"${parsed.defs(j).name} AS (${bodies(j)})").mkString(", ") + "\n"
-      val stmt = s"$prefix SELECT * FROM (${bodies(k)}) __graft_cte_body"
-      // lazy checkpoint: nothing runs now; the first action over the final
-      // statement computes the subtree ONCE and block-caches it for the
-      // remaining references. No CacheManager entry — see scaladoc. The
-      // checkpoint cuts lineage and keeps its blocks only on executors:
-      // losing one (e.g. under dynamic allocation) fails the query.
-      val df = spark.sql(stmt).localCheckpoint(eager = false)
-      val v = viewNameOf(modelName, d.name)
-      df.createOrReplaceTempView(v)
-      views += v
-      bodies(k) = s"SELECT * FROM $v"
-    }
-    created.put((spark, modelName), views.toSeq)
-    val rebuilt = "WITH " + parsed.defs.indices.map(j =>
-      s"${parsed.defs(j).name} AS (${bodies(j)})").mkString(",\n") +
-      "\n" + sql.substring(parsed.tailStart)
-    rebuilt
+  /** The relation names `p` reads that no `WITH` inside `p` defines. */
+  private def relations(p: LogicalPlan): Seq[String] = {
+    val names = Seq.newBuilder[String]
+    SqlTemplater.mapRelations(p) { n => names += n.toLowerCase; None }
+    names.result()
+  }
+
+  /** Rewrite `plan`, materializing hot CTEs as lazy local checkpoints.
+    * Returns `plan` itself when nothing qualifies. */
+  def materializeHot(spark: SparkSession, plan: LogicalPlan): LogicalPlan = plan match {
+    case w: UnresolvedWith if !w.allowRecursion =>
+      val defs = w.cteRelations.toVector
+      val names = defs.map(_._1.toLowerCase)
+      // read(k): names body k (or, at defs.size, the final query) reads
+      val read = (defs.map(_._2) :+ w.child).map(relations)
+      // a name body k reads refers to definition j only when j < k
+      val nonDet = defs.indices.foldLeft(Vector.empty[Boolean]) { (acc, k) =>
+        acc :+ (nonDeterministic(defs(k)._2) || read(k).exists { n =>
+          val j = names.indexOf(n); j >= 0 && j < k && acc(j)
+        })
+      }
+      val hot = defs.indices.filter { k =>
+        read.drop(k + 1).map(_.count(_ == names(k))).sum >= 2 &&
+          expensive(defs(k)._2) && !nonDet(k)
+      }
+      if (hot.isEmpty) plan
+      else w.copy(cteRelations = hot.foldLeft(defs) { (cur, k) =>
+        val (name, alias, depth) = cur(k)
+        val (query, rewrap) = alias.child match {
+          case a: UnresolvedSubqueryColumnAliases => (a.child, (q: LogicalPlan) => a.copy(child = q))
+          case q => (q, identity[LogicalPlan] _)
+        }
+        val stmt = if (k == 0) query else w.copy(child = query, cteRelations = cur.take(k))
+        // lazy checkpoint: nothing runs now; the first action over the final
+        // statement computes the subtree ONCE and block-caches it for the
+        // remaining references. No CacheManager entry — see scaladoc.
+        val cp = OfRows(spark, stmt).localCheckpoint(eager = false)
+        cur.updated(k, (name, alias.copy(child = rewrap(cp.queryExecution.analyzed)), depth))
+      })
+    case _ => plan
   }
 }

@@ -3,7 +3,7 @@ package graft.runtime
 import java.sql.Timestamp
 import java.util.concurrent.{Executors, LinkedBlockingQueue}
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.functions.TimeFunctions
 
 /** Model-DAG runner — the engine-level equivalent of `dbt run`'s manifest
@@ -89,10 +89,9 @@ final class DagRunner(models: Seq[Model]) {
     *    commits) while the other branch waits on its jobs.
     *    The pool's threads start inside the run, so they inherit the
     *    caller's Spark local properties (job group, scheduler pool, tags).
-    *  - Model builds (templating plus analysis) take one lock per
-    *    `SparkSession`: they register session-global temp views and
-    *    functions. A built frame no longer depends on those views, so the
-    *    materializations (stages, writes, commits) overlap.
+    *  - Model builds (templating plus analysis) overlap too: a SQL-text
+    *    model binds its inputs into its own plan and registers no temp view,
+    *    and the engine's functions register once per session, atomically.
     *  - A model that throws an `Exception` is `Failed` and skips its
     *    downstream but not independent branches. An `Error` starts no
     *    further model, waits for the running ones, and propagates.
@@ -159,11 +158,6 @@ final class DagRunner(models: Seq[Model]) {
       // a message-less exception is recorded by its class name
       case e: Exception => Right(RunStatus.Failed(Option(e.getMessage).getOrElse(e.toString)))
       case e: Throwable => Left(e)
-    } finally {
-      // hot-CTE checkpoints are per-materialization scratch: the write
-      // above has already consumed them (or failed); release the temp
-      // views so the block-cached RDDs become collectable
-      CteMaterializer.release(ctx.spark, m.name)
     }
   }
 
@@ -181,19 +175,16 @@ final class DagRunner(models: Seq[Model]) {
     // the warehouse picks the table format (parquet or transaction log) from
     // file_format; every write below dispatches on it
     wh.routeFormat(m.name, m.fileFormat)
-    // builds register session-global temp views: one at a time per session
-    // (also when a View's builder re-derives at a later read)
-    def build(c: Ctx): DataFrame = DagRunner.buildLock(c.spark).synchronized(m.build(c))
     def rebuild: Boolean = fullRefresh || !wh.tableExists(m.name)
-    def full: DataFrame = build(ctx.copy(isIncremental = false))
-    def increment: DataFrame = build(ctx.copy(isIncremental = true))
+    def full: DataFrame = m.build(ctx.copy(isIncremental = false))
+    def increment: DataFrame = m.build(ctx.copy(isIncremental = true))
     m.materialization match {
     case Materialization.Table(partitionBy, orderBy) =>
-      wh.createTable(m.name, build(ctx), partitionBy, orderBy)
+      wh.createTable(m.name, m.build(ctx), partitionBy, orderBy)
     case Materialization.View =>
       // builder-backed: the view plan re-derives after upstream table
       // mutations (a captured DataFrame pins stale file listings)
-      wh.registerView(m.name, () => build(ctx))
+      wh.registerView(m.name, () => m.build(ctx))
     case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange) =>
       if (rebuild) wh.createTable(m.name, full, partitionBy)
       else wh.insertOverwritePartitions(m.name, increment, partitionBy, onSchemaChange)
@@ -206,19 +197,10 @@ final class DagRunner(models: Seq[Model]) {
     case Materialization.Snapshot(uniqueKey, strategy, invalidateHardDeletes) =>
       // a delta snapshot (all 54 reference snapshots are) advances as one
       // log commit with history, like Delta's snapshot MERGE
-      Scd2.snapshot(ctx, m.name, build(ctx), uniqueKey, strategy,
+      Scd2.snapshot(ctx, m.name, m.build(ctx), uniqueKey, strategy,
         invalidateHardDeletes, runTs(ctx))
     }
   }
-}
-
-object DagRunner {
-  private val buildLocks = new java.util.WeakHashMap[SparkSession, AnyRef]
-
-  /** The per-session lock [[DagRunner.materialize]] holds while a model
-    * builds. */
-  private def buildLock(spark: SparkSession): AnyRef =
-    buildLocks.synchronized(buildLocks.computeIfAbsent(spark, _ => new AnyRef))
 }
 
 sealed trait RunStatus

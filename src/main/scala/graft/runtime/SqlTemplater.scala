@@ -1,6 +1,10 @@
 package graft.runtime
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.OfRows
 import graft.functions.{ArgCode, TimeFunctions}
 
 /** Minimal dbt-Jinja surface over spark.sql — enough that the reference's
@@ -9,14 +13,18 @@ import graft.functions.{ArgCode, TimeFunctions}
   * `{% if is_incremental() %}` and `{{ this }}` need substitution).
   *
   * Supported:
-  *   - `{{ ref('model') }}` → temp view over the model's materialized output
-  *   - `{{ source('schema','table') }}` → temp view over the source registry
+  *   - `{{ ref('model') }}` → the model's materialized output
+  *   - `{{ source('schema','table') }}` → the source registry's table
   *   - `{{ var('k') }}` / `{{ var('k', 'default') }}` → raw text substitution
   *   - `{% if is_incremental() %} … {% endif %}` (with optional `{% else %}`)
-  *   - `{{ this }}` → temp view over the model's own current table
+  *   - `{{ this }}` → the model's own current table
   *   - `{% set %}` / `{% for %}` / general `{% if %}` / `{% do %}` control
   *     flow via [[Jinja]] (the reference's generate_alias_name /
   *     tblproperties_clause macro shapes)
+  *
+  * `ref`, `source` and `this` render to plain relation names; [[runSql]]
+  * parses the text and binds each of those names into the parsed plan, so a
+  * build registers nothing in the session catalog and builds may overlap.
   */
 object SqlTemplater {
 
@@ -240,13 +248,13 @@ object SqlTemplater {
 
     val sources = SourceRe.findAllMatchIn(text).toSeq.map(m => (m.group(1), m.group(2))).distinct
     text = SourceRe.replaceAllIn(text, m =>
-      scala.util.matching.Regex.quoteReplacement(viewName(s"${m.group(1)}__${m.group(2)}")))
+      scala.util.matching.Regex.quoteReplacement(sourceName(m.group(1), m.group(2))))
 
     // dbt renders ref()/source() to literal `schema.table` names, so corpus
     // models freely reference columns by FULL QUALIFICATION —
     // `pharmacy_landing.order.id`, `onfy.lndc_user_attribution.source_corrected`
     // (reference: models/spark/onfy/onfy_transactions_new.sql:21-35). The
-    // engine substitutes unqualified temp-view names, so rewrite 3-part
+    // engine substitutes unqualified relation names, so rewrite 3-part
     // references to rendered relations onto the same view names. The
     // `(?=\s*\.)` lookahead restricts the rewrite to column access
     // (`schema.table.column`), leaving raw catalog reads and everything
@@ -267,7 +275,7 @@ object SqlTemplater {
     for ((schema, table) <- sources) {
       val q = s"""(?i)(?<![\\w.`])${java.util.regex.Pattern.quote(schema)}\\s*\\.\\s*${java.util.regex.Pattern.quote(table)}\\b(?=\\s*\\.)""".r
       text = rewriteOutsideLiterals(text, q, _ => true,
-        viewName(s"${schema}__${table}"), s"source $schema.$table")
+        sourceName(schema, table), s"source $schema.$table")
     }
     // the qualifying schema of a rendered ref is the REFERENCED model's
     // schema, which the templater does not know — accept any single
@@ -278,13 +286,13 @@ object SqlTemplater {
     val defined = definedNames(text)
     // dbt's rendered `schema.table` relation also lets columns qualify by
     // the BARE table name (`FROM pharmacy.marketing_channel_price_fast_scd2
-    // … marketing_channel_price_fast_scd2.product_id`) — our renamed view
+    // … marketing_channel_price_fast_scd2.product_id`) — our renamed relation
     // breaks that, so rewrite bare-table qualifiers onto the view name,
     // unless the statement defines an alias/CTE of the same name
     for ((schema, table) <- sources if !defined.contains(table.toLowerCase)) {
       val q = s"""(?i)(?<![\\w.`])${java.util.regex.Pattern.quote(table)}\\b(?=\\s*\\.\\s*[A-Za-z_`])""".r
       text = rewriteOutsideLiterals(text, q, _ => true,
-        viewName(s"${schema}__${table}"), s"source-bare $schema.$table")
+        sourceName(schema, table), s"source-bare $schema.$table")
     }
     for (ref <- refs) {
       val q = s"""(?i)(?<![\\w.`])([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*${java.util.regex.Pattern.quote(ref)}\\b(?=\\s*\\.)""".r
@@ -299,7 +307,9 @@ object SqlTemplater {
     Rendered(text, refs, sources, usesThis, rewriteLog.toSeq)
   }
 
-  /** Render + execute a dbt-style SQL body in `ctx`.
+  /** Render + execute a dbt-style SQL body in `ctx`: render the text, parse
+    * it with the parser `spark.sql` uses, [[bind]] the refs, the sources and
+    * `this` (when its table exists) into the plan, and build the frame.
     *
     * @param materializeCtes when true (table-backed model runs), hot repeated
     *   CTEs are computed once per run via [[CteMaterializer]] instead of being
@@ -313,21 +323,55 @@ object SqlTemplater {
     ArgCode.register(ctx.spark)
 
     val r = renderText(modelName, sql, ctx.macros, ctx.vars, ctx.varOf, ctx.isIncremental)
+    val inputs: Map[String, DataFrame] =
+      r.refs.map(ref => viewName(ref) -> ctx.ref(ref)).toMap ++
+        r.sources.map { case (s, t) => sourceName(s, t) -> ctx.source(s, t) } ++
+        (if (r.usesThis && ctx.warehouse.tableExists(modelName))
+          Seq(r.thisView(modelName) -> ctx.warehouse.read(modelName))
+        else Nil)
+    val plan = bind(ctx.spark.sessionState.sqlParser.parsePlan(r.text), inputs)
+    OfRows(ctx.spark,
+      if (materializeCtes) CteMaterializer.materializeHot(ctx.spark, plan) else plan)
+  }
 
-    for (ref <- r.refs)
-      ctx.ref(ref).createOrReplaceTempView(viewName(ref))
-    for ((schema, table) <- r.sources)
-      ctx.source(schema, table).createOrReplaceTempView(viewName(s"${schema}__${table}"))
-    if (r.usesThis && ctx.warehouse.tableExists(modelName))
-      ctx.warehouse.read(modelName).createOrReplaceTempView(r.thisView(modelName))
+  /** Binds each relation of `plan` named like one of `inputs` (case
+    * insensitively, unqualified, and not shadowed by a CTE) to that input's
+    * analyzed plan. The relation keeps its name as the qualifier, so column
+    * resolution and its errors read as they would over a view of that name. */
+  private[graft] def bind(plan: LogicalPlan, inputs: Map[String, DataFrame]): LogicalPlan = {
+    val byName = inputs.map { case (n, df) => n.toLowerCase -> df }
+    mapRelations(plan)(n =>
+      byName.get(n.toLowerCase).map(df => SubqueryAlias(n, df.queryExecution.analyzed)))
+  }
 
-    val text =
-      if (materializeCtes) CteMaterializer.materializeHot(ctx.spark, modelName, r.text)
-      else r.text
-    ctx.spark.sql(text)
+  /** Rewrites each single-part relation name for which `f` gives a plan,
+    * following Spark's CTE scoping: a name an enclosing `WITH` defines is
+    * left alone, and a definition sees only the definitions before it (and
+    * itself under `WITH RECURSIVE`). Walks into the plans of subquery
+    * expressions, but not into already-analyzed subtrees. */
+  private[runtime] def mapRelations(plan: LogicalPlan, scope: Set[String] = Set.empty)(
+      f: String => Option[LogicalPlan]): LogicalPlan = plan match {
+    case p if p.analyzed => p
+    case w: UnresolvedWith =>
+      var seen = scope
+      val defs = w.cteRelations.map { case (name, body, depth) =>
+        val visible = if (w.allowRecursion) seen + name.toLowerCase else seen
+        seen += name.toLowerCase
+        (name, mapRelations(body, visible)(f).asInstanceOf[SubqueryAlias], depth)
+      }
+      w.copy(child = mapRelations(w.child, seen)(f), cteRelations = defs)
+    case r @ UnresolvedRelation(Seq(name), _, false) if !scope(name.toLowerCase) =>
+      f(name).getOrElse(r)
+    case p => p.mapChildren(mapRelations(_, scope)(f)).transformExpressions {
+      case s: SubqueryExpression => s.withNewPlan(mapRelations(s.plan, scope)(f))
+    }
   }
 
   private def viewName(n: String): String = n.replaceAll("[^A-Za-z0-9_]", "_")
+
+  /** The relation name a `{{ source(schema, table) }}` call renders to. */
+  private[runtime] def sourceName(schema: String, table: String): String =
+    viewName(s"${schema}__${table}")
 
   /** Build a DAG [[Model]] from a dbt-style SQL body; deps auto-extracted. */
   def sqlModel(name: String, sql: String,

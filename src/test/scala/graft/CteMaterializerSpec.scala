@@ -1,56 +1,79 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.OfRows
 import graft.runtime._
 
 /** r17 optimization: hot-CTE materialization must change PLANS, never rows.
-  * Covers the parser (comment/literal masking, column-alias lists, bail-outs),
-  * the hot heuristic (refs >= 2 + expensive op + determinism guard), and
-  * end-to-end equivalence on a q74-shaped repeated-window model.
+  * Covers reference counting over the parsed plan (comments and literals,
+  * comma lists, bail-outs, column-alias lists), the hot heuristic (refs >= 2
+  * + expensive op + determinism guard), bound inputs, and end-to-end
+  * equivalence on a q74-shaped repeated-window model.
   */
 class CteMaterializerSpec extends AnyFunSuite {
 
   private lazy val spark = Dialect.local(4).appName("cte-materializer-spec").getOrCreate()
 
-  test("parse: defs, bodies, tail — with comments, literals and nesting") {
-    val sql =
-      """-- leading comment with AS ( inside
-        |WITH a AS (SELECT 1 AS x, '(' AS s),  -- trailing note
-        |  b AS (SELECT x AS y FROM a WHERE s <> ') , c AS ('),
-        |  c AS (SELECT y FROM b JOIN a ON a.x = b.y)
-        |SELECT * FROM c""".stripMargin
-    val p = CteMaterializer.parse(sql).get
-    assert(p.defs.map(_.name) == Seq("a", "b", "c"))
-    assert(sql.substring(p.defs(0).bodyStart, p.defs(0).bodyEnd)
-      .contains("SELECT 1 AS x"))
-    assert(sql.substring(p.tailStart).trim == "SELECT * FROM c")
+  private def parse(sql: String): LogicalPlan = spark.sessionState.sqlParser.parsePlan(sql)
+
+  /** The definitions a rewritten plan reads from a checkpoint. */
+  private def hot(plan: LogicalPlan): Set[String] = plan match {
+    case w: UnresolvedWith => w.cteRelations.collect {
+      case (n, body, _) if body.exists(_.isInstanceOf[LogicalRDD]) => n
+    }.toSet
+    case _ => Set.empty
   }
 
-  test("parse bails on RECURSIVE, no-WITH, duplicate names, column-alias lists") {
-    assert(CteMaterializer.parse("SELECT 1").isEmpty)
-    assert(CteMaterializer.parse(
-      "WITH RECURSIVE r AS (SELECT 1) SELECT * FROM r").isEmpty)
-    assert(CteMaterializer.parse(
-      "WITH a AS (SELECT 1), a AS (SELECT 2) SELECT * FROM a").isEmpty)
-    // r18 (ADVICE): a rebuilt `name (c1, c2) AS (...)` would drop the alias
-    // list and expose the body's original column names — bail out instead
-    assert(CteMaterializer.parse(
-      "WITH a (y) AS (SELECT 1 AS x) SELECT * FROM a").isEmpty)
+  private def unchanged(sql: String): Boolean = {
+    val p = parse(sql)
+    CteMaterializer.materializeHot(spark, p) eq p
+  }
+
+  test("comments and literals are neither references nor expensive operators") {
+    // `a` is read once; the other "references" sit in comments and literals
+    assert(unchanged(
+      """-- leading comment: FROM a JOIN a
+        |WITH a AS (SELECT id % 2 AS k, COUNT(*) AS n FROM RANGE(10) GROUP BY id % 2), -- FROM a
+        |  b AS (SELECT 'FROM a JOIN a' AS s, k FROM a)
+        |SELECT * FROM b /* FROM a, a */""".stripMargin))
+    // read twice, but its only "operators" are inside a string literal
+    assert(unchanged(
+      """WITH c AS (SELECT 'GROUP BY x JOIN y OVER (z) DISTINCT' AS s)
+        |SELECT * FROM c UNION ALL SELECT * FROM c""".stripMargin))
+  }
+
+  test("RECURSIVE, no-WITH bail; duplicate names fail; alias lists materialize") {
+    assert(unchanged("SELECT 1"))
+    assert(unchanged(
+      """WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM r WHERE n < 3)
+        |SELECT a.n FROM r a JOIN r b ON a.n = b.n""".stripMargin))
+    intercept[ParseException](parse("WITH a AS (SELECT 1), a AS (SELECT 2) SELECT * FROM a"))
+    // a column-alias list stays around the checkpoint: the aliases, not the
+    // body's own names, are what the rest of the statement sees
+    val sql =
+      """WITH a (k, n) AS (SELECT id % 2 AS x, COUNT(*) AS c FROM RANGE(10) GROUP BY id % 2)
+        |SELECT k, n FROM a WHERE k = 0 UNION ALL SELECT k, n FROM a WHERE k = 1""".stripMargin
+    val out = CteMaterializer.materializeHot(spark, parse(sql))
+    assert(hot(out) == Set("a"))
+    val mat = OfRows(spark, out)
+    assert(mat.columns.toSeq == Seq("k", "n"))
+    assert(mat.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((0L, 5L), (1L, 5L)))
   }
 
   test("non-determinism: RANDOM alias and transitive upstream both block") {
-    // random() (the rand() alias NonDetRe previously missed)
-    val rnd =
+    // random() (the rand() alias)
+    assert(unchanged(
       """WITH a AS (SELECT random() AS r, 1 AS g GROUP BY 1, 2)
-        |SELECT * FROM a UNION ALL SELECT * FROM a""".stripMargin
-    assert(CteMaterializer.materializeHot(spark, "m_rnd", rnd) eq rnd)
+        |SELECT * FROM a UNION ALL SELECT * FROM a""".stripMargin))
     // deterministic hot CTE built ON a non-det upstream: splitting it into a
     // separate statement would evaluate the upstream twice — must stay inline
-    val trans =
+    assert(unchanged(
       """WITH src AS (SELECT rand() AS r FROM RANGE(10)),
         |  agg AS (SELECT COUNT(*) AS n FROM src GROUP BY r)
-        |SELECT * FROM agg UNION ALL SELECT * FROM agg""".stripMargin
-    assert(CteMaterializer.materializeHot(spark, "m_trans", trans) eq trans)
+        |SELECT * FROM agg UNION ALL SELECT * FROM agg""".stripMargin))
   }
 
   test("comma-list FROM references count toward hotness") {
@@ -63,24 +86,32 @@ class CteMaterializerSpec extends AnyFunSuite {
         |SELECT dims.k, agg.n FROM dims, agg WHERE dims.k = agg.k
         |UNION ALL
         |SELECT dims.k, agg.n FROM dims, agg WHERE dims.k = agg.k""".stripMargin
-    val out = CteMaterializer.materializeHot(spark, "m_comma", sql)
-    assert(out != sql, "comma-list entries must count as references")
-    assert(out.contains("dims AS (SELECT 0 AS k UNION ALL SELECT 1 AS k)"))
-    CteMaterializer.release(spark, "m_comma")
+    assert(hot(CteMaterializer.materializeHot(spark, parse(sql))) == Set("agg"))
+  }
+
+  test("aliased comma-list entries `FROM a x, b y` count too") {
+    val sql =
+      """WITH agg AS (SELECT id % 2 AS k, COUNT(*) AS n FROM RANGE(50) GROUP BY id % 2),
+        |  dims AS (SELECT 0 AS k UNION ALL SELECT 1 AS k)
+        |SELECT d.k, g.n FROM dims d, agg g WHERE d.k = g.k
+        |UNION ALL
+        |SELECT d.k, g.n FROM dims AS d, agg AS g WHERE d.k = g.k""".stripMargin
+    assert(hot(CteMaterializer.materializeHot(spark, parse(sql))) == Set("agg"))
   }
 
   test("materializeHot: unchanged when nothing qualifies") {
     // single-reference CTE: not hot
-    val sql = "WITH a AS (SELECT 1 AS x GROUP BY 1) SELECT * FROM a"
-    assert(CteMaterializer.materializeHot(spark, "m_none", sql) eq sql)
+    assert(unchanged("WITH a AS (SELECT 1 AS x GROUP BY 1) SELECT * FROM a"))
     // referenced twice but no expensive operator
-    val cheap = "WITH a AS (SELECT 1 AS x) SELECT * FROM a UNION ALL SELECT * FROM a"
-    assert(CteMaterializer.materializeHot(spark, "m_cheap", cheap) eq cheap)
+    assert(unchanged("WITH a AS (SELECT 1 AS x) SELECT * FROM a UNION ALL SELECT * FROM a"))
     // referenced twice + GROUP BY but non-deterministic -> left alone
-    val nondet =
+    assert(unchanged(
       """WITH a AS (SELECT current_timestamp() AS t, 1 AS g GROUP BY 1, 2)
-        |SELECT * FROM a UNION ALL SELECT * FROM a""".stripMargin
-    assert(CteMaterializer.materializeHot(spark, "m_nondet", nondet) eq nondet)
+        |SELECT * FROM a UNION ALL SELECT * FROM a""".stripMargin))
+    // the parenthesis-free form too
+    assert(unchanged(
+      """WITH a AS (SELECT current_date AS t, 1 AS g GROUP BY 1, 2)
+        |SELECT * FROM a UNION ALL SELECT * FROM a""".stripMargin))
   }
 
   test("materializeHot rewrites only hot bodies; references untouched") {
@@ -89,19 +120,19 @@ class CteMaterializerSpec extends AnyFunSuite {
         |  agg AS (SELECT k, COUNT(*) AS n FROM base GROUP BY k),
         |  single AS (SELECT n + 1 AS m FROM agg)
         |SELECT a.n, s.m FROM agg a CROSS JOIN single s""".stripMargin
-    val out = CteMaterializer.materializeHot(spark, "m_hot", sql)
-    assert(out != sql)
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val in = parse(sql).asInstanceOf[UnresolvedWith]
+    val out = CteMaterializer.materializeHot(spark, in).asInstanceOf[UnresolvedWith]
     // agg referenced by `single` + the tail = 2 refs + GROUP BY -> hot
-    // (view names carry a model-name hash since r18 — match by pattern)
-    assert("""agg AS \(SELECT \* FROM __graft_cte_[0-9a-f]+_m_hot_agg\)""".r
-      .findFirstIn(out).isDefined, out)
-    // base: 1 ref; single: 1 ref -> untouched
-    assert(out.contains("base AS (SELECT id, id % 3 AS k FROM RANGE(100))"))
-    assert(out.contains("single AS (SELECT n + 1 AS m FROM agg)"))
-    val view = """__graft_cte_[0-9a-f]+_m_hot_agg""".r.findFirstIn(out).get
-    assert(spark.catalog.tableExists(view))
-    CteMaterializer.release(spark, "m_hot")
-    assert(spark.catalog.tableExists(view) == false)
+    assert(hot(out) == Set("agg"))
+    // base: 1 ref; single: 1 ref -> untouched, as is the final query
+    assert(out.cteRelations(0)._2 eq in.cteRelations(0)._2)
+    assert(out.cteRelations(2)._2 eq in.cteRelations(2)._2)
+    assert(out.child eq in.child)
+    // the checkpoint lives in the plan: nothing is registered in the catalog
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+    val (mat, plain) = (OfRows(spark, out), spark.sql(sql))
+    assert(mat.count() == 9 && mat.exceptAll(plain).isEmpty && plain.exceptAll(mat).isEmpty)
   }
 
   test("end-to-end: q74-shaped repeated window chain — identical rows") {
@@ -135,31 +166,52 @@ class CteMaterializerSpec extends AnyFunSuite {
         |FROM pairs p LEFT JOIN buys b ON p.device_id = b.device_id
         |GROUP BY p.device_id""".stripMargin
     val plain = spark.sql(sql)
-    val rewritten = CteMaterializer.materializeHot(spark, "m_e2e", sql)
-    assert(rewritten != sql, "sessionized (3 refs) and lagged (2 refs) must be hot")
-    val mat = spark.sql(rewritten)
+    val rewritten = CteMaterializer.materializeHot(spark, parse(sql))
+    assert(hot(rewritten) == Set("sessionized"), "sessionized (3 refs) must be hot")
+    val mat = OfRows(spark, rewritten)
     assert(mat.schema == plain.schema)
     assert(mat.exceptAll(plain).isEmpty && plain.exceptAll(mat).isEmpty)
-    CteMaterializer.release(spark, "m_e2e")
   }
 
+  private def ctxOver(source: => org.apache.spark.sql.DataFrame): Ctx =
+    Ctx(spark, new Warehouse(spark, graft.runtime.TempDirs.create("graft_cte_spec")),
+      new SourceRegistry(Some((_, _) => source)))
+
+  private def checkpoints(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r }.size
+
   test("runSql via sqlModel materializes for tables, not for views") {
-    val ctx = Ctx(spark, new Warehouse(spark,
-      graft.runtime.TempDirs.create("graft_cte_spec")),
-      new SourceRegistry(Some((_, _) => spark.range(10).toDF("id"))))
+    val ctx = ctxOver(spark.range(10).toDF("id"))
     val sql =
       """WITH g AS (SELECT id % 2 AS k, COUNT(*) AS n
         |           FROM {{ source('s','t') }} GROUP BY id % 2)
         |SELECT a.k, a.n, b.n AS n2 FROM g a JOIN g b ON a.k = b.k""".stripMargin
-    val table = SqlTemplater.sqlModel("cte_tbl", sql)
-    val dag = new DagRunner(Seq(table))
-    val rs = dag.run(ctx)
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val rs = new DagRunner(Seq(SqlTemplater.sqlModel("cte_tbl", sql),
+      SqlTemplater.sqlModel("cte_view", sql, Materialization.View))).run(ctx)
     assert(rs.forall(_._2.isInstanceOf[RunStatus.Success]))
-    val rows = ctx.ref("cte_tbl").collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows == Set((0L, 5L, 5L), (1L, 5L, 5L)))
-    // release ran inside DagRunner: no scratch view for this model survives
-    assert(!spark.catalog.listTables().collect()
-      .exists(t => t.name.startsWith("__graft_cte_") && t.name.endsWith("_cte_tbl_g")))
+    for (m <- Seq("cte_tbl", "cte_view")) {
+      val rows = ctx.ref(m).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows == Set((0L, 5L, 5L), (1L, 5L, 5L)), m)
+    }
+    assert(checkpoints(SqlTemplater.runSql(ctx, "cte_tbl", sql, materializeCtes = true)) == 1)
+    assert(checkpoints(ctx.ref("cte_view")) == 0)
+    // no scratch view for either model: the catalog is as it was
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+  }
+
+  test("a bound input's own joins do not make a CTE hot") {
+    val joined = spark.range(10).toDF("id").join(spark.range(10).toDF("id"), "id")
+    val ctx = ctxOver(joined)
+    val passThrough =
+      """WITH s AS (SELECT * FROM {{ source('s','t') }})
+        |SELECT a.id FROM s a JOIN s b ON a.id = b.id""".stripMargin
+    assert(checkpoints(SqlTemplater.runSql(ctx, "m", passThrough, materializeCtes = true)) == 0)
+    // the same reads with the join written in the definition are hot
+    val ownJoin =
+      """WITH s AS (SELECT x.id FROM {{ source('s','t') }} x JOIN {{ source('s','t') }} y
+        |           ON x.id = y.id)
+        |SELECT a.id FROM s a JOIN s b ON a.id = b.id""".stripMargin
+    assert(checkpoints(SqlTemplater.runSql(ctx, "m", ownJoin, materializeCtes = true)) == 1)
   }
 }

@@ -1,15 +1,14 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
 import graft.runtime._
 
-/** Latches the UDFs of [[DagConcurrencySpec]] reach from executor tasks:
-  * a closure over a latch would be serialized into the task, so the UDFs
-  * look them up here by name. */
+/** Latches the models of [[DagConcurrencySpec]] meet on, from their builds
+  * or from executor tasks: a UDF's closure over a latch would be serialized
+  * into the task, so every meeting looks its latches up here by name. */
 object DagConcurrencyLatches {
   val latches = scala.collection.concurrent.TrieMap.empty[String, CountDownLatch]
 
@@ -23,7 +22,7 @@ object DagConcurrencyLatches {
 }
 
 /** [[DagRunner.run]]'s concurrency contract: independent models overlap,
-  * builds do not, a model starts only after all its dependencies finished,
+  * builds included, a model starts only after all its dependencies finished,
   * failures skip only their downstream, and jobs carry the caller's local
   * properties. */
 class DagConcurrencySpec extends SparkSpec {
@@ -50,18 +49,49 @@ class DagConcurrencySpec extends SparkSpec {
     assert(c.ref("right").as[Long].collect().toSeq == Seq(1L))
   }
 
-  test("builds never overlap: at most one builder runs at a time") {
-    val active = new AtomicInteger(0)
-    val maxActive = new AtomicInteger(0)
-    val models = (1 to 4).map(i => Model(s"m$i", _ => {
-      maxActive.accumulateAndGet(active.incrementAndGet(), math.max)
-      Thread.sleep(100)
-      active.decrementAndGet()
-      one
-    }))
+  test("builds overlap: two model builds meet on latches inside build") {
+    import DagConcurrencyLatches._
+    latches.put("build_left", new CountDownLatch(1))
+    latches.put("build_right", new CountDownLatch(1))
+    val models = Seq(
+      Model("build_left", _ => { meet("build_left", "build_right"); one }),
+      Model("build_right", _ => { meet("build_right", "build_left"); one }))
     val res = new DagRunner(models).run(ctx())
     assert(res.forall(_._2.isInstanceOf[RunStatus.Success]), res)
-    assert(maxActive.get == 1)
+  }
+
+  test("two SQL-text models built concurrently give the same frames as serial builds") {
+    // each model's source read happens inside its build and waits for the
+    // other's, so the two builds (binding, CTE checkpoints, analysis) overlap
+    import DagConcurrencyLatches._
+    latches.put("source_a", new CountDownLatch(1))
+    latches.put("source_b", new CountDownLatch(1))
+    val c = Ctx(spark, new Warehouse(spark, TempDirs.create("graft_dagconc")),
+      new SourceRegistry(Some { (_, t) =>
+        meet(s"source_$t", if (t == "a") "source_b" else "source_a")
+        spark.range(0, 300, 1, 2).toDF("id")
+      }))
+    val sqlA =
+      """WITH g AS (SELECT id % 7 AS k, COUNT(*) AS n
+        |           FROM {{ ref('base') }} JOIN {{ source('s','a') }} USING (id) GROUP BY id % 7)
+        |SELECT x.k, x.n, y.n AS n2 FROM g x JOIN g y ON x.k = y.k""".stripMargin
+    val sqlB =
+      """WITH base AS (SELECT * FROM {{ ref('base') }}
+        |              WHERE id IN (SELECT id * 2 FROM {{ source('s','b') }}))
+        |SELECT id % 5 AS k, SUM(v) AS s FROM base GROUP BY id % 5""".stripMargin
+    val models = Seq(
+      Model("base", _ => spark.range(0, 200, 1, 2).selectExpr("id", "id * 3 AS v")),
+      SqlTemplater.sqlModel("model_a", sqlA), SqlTemplater.sqlModel("model_b", sqlB))
+    val res = new DagRunner(models).run(c)
+    assert(res.forall(_._2.isInstanceOf[RunStatus.Success]), res)
+    for ((m, sql) <- Seq("model_a" -> sqlA, "model_b" -> sqlB)) {
+      val serial = SqlTemplater.runSql(c, m, sql, materializeCtes = true)
+      // the written table reads back nullable: compare names and types
+      assert(c.ref(m).schema.map(f => f.name -> f.dataType) ==
+        serial.schema.map(f => f.name -> f.dataType), m)
+      assert(c.ref(m).collect().map(_.toSeq).toSet == serial.collect().map(_.toSeq).toSet, m)
+    }
+    assert(c.ref("model_a").count() == 7 && c.ref("model_b").count() == 5)
   }
 
   test("diamond a -> {b, c} -> d: d builds only after b and c have both finished") {
