@@ -44,8 +44,7 @@ object CorpusExec {
     val lines = report.items.map(i =>
       f"${i.status}%s\t${i.name}%s\t${i.kind}%s\t${i.iterations}%d\t${i.detail}%s\t${i.secs}%.1f")
     val suffix = (if (only.isDefined) "_subset" else "") +
-      (if (sys.env.get("GRAFT_CHANGED_ONLY").contains("1")) "_changedonly" else "") +
-      (if (sys.env.get("GRAFT_CORPUS_LOGFMT").contains("1")) "_logfmt" else "")
+      (if (sys.env.get("GRAFT_CHANGED_ONLY").contains("1")) "_changedonly" else "")
     val out = s"target/corpus_exec_report$suffix.tsv"
     java.nio.file.Files.writeString(Paths.get(out), lines.mkString("\n") + "\n")
     spark.stop()

@@ -345,15 +345,18 @@ object ScaleProbe {
     // merge probe: cost must track the INCREMENT (one month's partitions),
     // not the table. Build a month-partitioned orders fact at 1× and ×factor,
     // then merge the same single-month increment into each.
-    //  - pruned=true (incrementPartitionsOnly): no whole-table access at all;
-    //    time should be ~flat as the table grows ×factor
-    //  - pruned=false: adds the matched-key probe, a key-column-only scan of
-    //    the target — grows with table size but only on the key column bytes
+    //  - pruned=true (incrementPartitionsOnly): the log manifest prunes the
+    //    candidate files to the increment's month, so no data outside it is
+    //    read; time should be ~flat as the table grows ×factor
+    //  - pruned=false: the matched-key probe scans every live file, key
+    //    columns only — grows with table size but only on the key bytes
     locally {
       import graft.runtime._
       def mergeProbe(dir: String, tag: String, pruned: Boolean): Unit = {
         val wh = new Warehouse(spark,
           graft.runtime.TempDirs.create(s"graft_mergeprobe"))
+        // a keyed merge writes the log, so the table it merges into is a log table
+        wh.routeFormat("fact", "parquet", keyedMerge = true)
         // replicas land in DISTINCT month partitions (suffix = replica id from
         // the shifted key range): the ×factor table models a longer history —
         // factor× as many partitions of the same size — while the increment

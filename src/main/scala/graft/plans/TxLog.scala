@@ -375,10 +375,13 @@ object TxLog {
       Meta(partitionBy) +: (removePaths.map(Remove(_, now)) ++ adds))
   }
 
-  /** Physically delete tombstoned files older than `retentionMs`, and prune
-    * fully-covered log history. Never touches COMMITTED live files; a reader
-    * holding a snapshot newer than the retention window is unaffected — this
-    * is Delta's VACUUM contract. Caveat (also Delta's): every pass that
+  /** Physically delete tombstoned files older than `retentionMs`, and the
+    * leftovers no commit references: orphan files under `data/`, unclaimed
+    * `.tmp` commit files and `_staging_*` directories. The log itself (commit
+    * and checkpoint files) is never pruned, so every version stays
+    * replayable; a version whose files were deleted no longer reads. Never
+    * touches COMMITTED live files; a reader holding a snapshot newer than the
+    * retention window is unaffected — this is Delta's VACUUM contract. Caveat (also Delta's): every pass that
     * reclaims possibly-in-flight artifacts — unreferenced files under
     * `data/` (stage() moves them there BEFORE the commit references them),
     * unclaimed `.tmp` commit files under `_txlog`, and `_staging_*` dirs —

@@ -8,8 +8,8 @@ import graft.runtime._
   * behind the reference's 197 delta-format models (reference:
   * macros/spark_adapter_patch/create_table.sql:29-34 delta `create or
   * replace`; dbt-spark emits `MERGE INTO … WHEN MATCHED UPDATE SET * WHEN NOT
-  * MATCHED INSERT *` for delta + unique_key), served parquet-native by
-  * [[graft.runtime.Warehouse.mergeUpsert]]'s partition-pruned rewrite.
+  * MATCHED INSERT *` for delta + unique_key), served on the transaction log
+  * by [[graft.runtime.Warehouse.mergeUpsert]]'s file-level rewrite.
   *
   * Scenario (the standard late-arriving-facts shape): run 1 materializes
   * per-customer order profiles from history before a cutoff; run 2 recomputes

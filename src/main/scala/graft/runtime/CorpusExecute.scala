@@ -3908,11 +3908,6 @@ object CorpusExecute {
     // attribute the log-format tax: TxLog wall time shows up in Prof.summary
     // alongside materialize/incremental (parquet runs record ~nothing here)
     graft.plans.TxLog.profiler = (k, s) => Prof.add(k, s)
-    // GRAFT_CORPUS_LOGFMT=1 runs the whole EXECUTE phase on the
-    // transaction-log warehouse: the corpus's 197 `file_format='delta'`
-    // models (incl. the 54 snapshots' merge patterns) then exercise
-    // log-backed create / dynamic-partition overwrite / append / merge
-    // (reference: macros/spark_adapter_patch/create_table.sql:29-34)
     // a PERSISTENT warehouse root (changed-only dev loop: the previous
     // deploy's tables back the nodes this run does not re-execute); default
     // stays a throwaway temp dir (full-corpus validation runs)
@@ -3920,8 +3915,10 @@ object CorpusExecute {
       case Some(p) => Files.createDirectories(p); p.toAbsolutePath.toString
       case None => TempDirs.create("graft_corpus_exec")
     }
-    val wh = new Warehouse(spark, whRoot,
-      logFormatEnabled = sys.env.get("GRAFT_CORPUS_LOGFMT").contains("1"))
+    // the corpus's 197 `file_format='delta'` models (incl. the 54 snapshots)
+    // and every keyed merge write the transaction log, the rest parquet
+    // (reference: macros/spark_adapter_patch/create_table.sql:29-34)
+    val wh = new Warehouse(spark, whRoot)
     val ctx = Ctx(spark, wh, synth.registry, vars, macros = macros)
     graft.functions.TimeFunctions.register(spark)
 
@@ -4109,22 +4106,16 @@ object CorpusExecute {
     // GRAFT_CORPUS_COLD=1. `cacheOverride` forces an explicit path (and
     // bypasses the subset guard) — the sbt-gated warm-start test uses it
     // to pin the cold→warm protocol end-to-end on a small closure.
-    // execution mode is part of the key: a TxLog run and a parquet run
-    // negotiate the same schemas but must not share (and overwrite) one
-    // cache file — tombstones stick by design, so cross-mode seeding
-    // would silently warm-start the second mode measured from the
-    // first mode's state and bias every cold/warm comparison
-    val modeVars = vars + ("__graft_mode_logfmt" -> wh.logFormatEnabled.toString)
     val cacheFile: Option[Path] = cacheOverride.orElse {
       if (only.isDefined || sys.env.get("GRAFT_CORPUS_COLD").contains("1")) None
       else Some(cachePath(stableCacheKey(
-        Seq(modelsDir, macrosDir, snapshotsDir, seedsDir), modeVars)))
+        Seq(modelsDir, macrosDir, snapshotsDir, seedsDir), vars)))
     }
     // per-node content hashes + env hash: the incremental warm start's
     // change detector (see loadCacheIncremental — a one-model edit pays only
     // its downstream closure's re-negotiation, not the full cold run)
     val nodeHashes: Map[String, String] = nodes.map(n => n.name -> sha16(n.rawSql)).toMap
-    val envHash = envHashOf(seedsDir, modeVars)
+    val envHash = envHashOf(seedsDir, vars)
     val macroHashes = macroHashesOf(macros)
     def downstreamOf(changedNodes: Set[String]): Set[String] =
       descendantClosure(nodes, changedNodes)

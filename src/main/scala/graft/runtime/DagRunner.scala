@@ -173,8 +173,12 @@ final class DagRunner(models: Seq[Model]) {
   def materialize(ctx: Ctx, m: Model, fullRefresh: Boolean = false): Unit = {
     val wh = ctx.warehouse
     // the warehouse picks the table format (parquet or transaction log) from
-    // file_format; every write below dispatches on it
-    wh.routeFormat(m.name, m.fileFormat)
+    // file_format and, for a keyed merge, the strategy; every write below
+    // dispatches on it
+    wh.routeFormat(m.name, m.fileFormat, m.materialization match {
+      case Materialization.IncrementalMerge(uniqueKey, _, _, _) => uniqueKey.nonEmpty
+      case _ => false
+    })
     def rebuild: Boolean = fullRefresh || !wh.tableExists(m.name)
     def full: DataFrame = m.build(ctx.copy(isIncremental = false))
     def increment: DataFrame = m.build(ctx.copy(isIncremental = true))

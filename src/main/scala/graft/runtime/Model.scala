@@ -35,7 +35,8 @@ object Materialization {
     * reference's 197 delta-format models (reference:
     * macros/spark_adapter_patch/create_table.sql:29-34; dbt-spark
     * incremental_strategy='merge' + unique_key on delta relations).
-    * Partition-pruned rewrite semantics in [[Warehouse.mergeUpsert]]. */
+    * A keyed merge always writes the transaction log, at file granularity
+    * ([[Warehouse.mergeUpsert]]). */
   /** @param incrementPartitionsOnly dbt incremental_predicates analogue:
     *   skip the whole-table matched-key probe and rewrite only the
     *   increment's partitions (valid when keys never change partition). */
@@ -84,6 +85,6 @@ final case class Model(
     meta: Map[String, String] = Map.empty,
     /** reference: `file_format` config — [[DagRunner.materialize]] hands
       * it to [[Warehouse.routeFormat]]: 'delta' (197 models) writes through
-      * the [[graft.plans.TxLog]] transaction log when the warehouse has
-      * `logFormatEnabled`; anything else is plain parquet. */
+      * the [[graft.plans.TxLog]] transaction log; anything else is plain
+      * parquet, except a keyed merge, which writes the log too. */
     fileFormat: String = "parquet")

@@ -23,8 +23,11 @@ import org.json4s.{JObject, JString}
   * `DISTRIBUTE BY` sites (SURVEY.md §4) — so each output partition is
   * written by few tasks and small-file explosion is avoided.
   */
-final class Warehouse(val spark: SparkSession, val root: String,
-                      val logFormatEnabled: Boolean = false) {
+final class Warehouse(val spark: SparkSession, val root: String) {
+
+  /** The earlier signature, kept only for the benchmark harness: the flag
+    * chose whether 'delta' models wrote the log, which they now always do. */
+  def this(spark: SparkSession, root: String, logFormatEnabled: Boolean) = this(spark, root)
 
   // Every model execution reads/writes through a Warehouse, so this is the
   // runtime chokepoint for the reference's non-ANSI dialect (see [[Dialect]]).
@@ -153,18 +156,21 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * via [[isLogBacked]]. */
   private val logRouted = scala.collection.concurrent.TrieMap.empty[String, Unit]
 
-  /** Pick the table format of `name`'s writes from its model's file_format:
-    * 'delta' (197 reference models, all 54 snapshots) goes to the
-    * [[graft.plans.TxLog]] log when `logFormatEnabled`; any other format
-    * clears a route left by an earlier materialization of the same name. */
-  def routeFormat(name: String, fileFormat: String): Unit =
-    if (logFormatEnabled && fileFormat == "delta") logRouted.put(name, ())
+  /** Pick the table format of `name`'s writes from its model: a
+    * `file_format='delta'` model (197 reference models, all 54 snapshots)
+    * and every keyed merge write the [[graft.plans.TxLog]] log, whatever a
+    * merge declares (dbt-spark runs merge on delta tables only); anything
+    * else clears a route left by an earlier materialization of the same
+    * name and writes parquet. */
+  def routeFormat(name: String, fileFormat: String, keyedMerge: Boolean = false): Unit =
+    if (fileFormat == "delta" || keyedMerge) logRouted.put(name, ())
     else logRouted.remove(name)
 
   /** Full-rebuild CTAS (reference: materialized='table'), also every other
     * full replace: an incremental model's first run, an unpartitioned
-    * insert_overwrite or merge, an SCD2 advance. A parquet table is replaced
-    * whole by [[stagedWrite]].
+    * insert_overwrite, an SCD2 advance. A parquet table is replaced whole by
+    * [[stagedWrite]]; on either format the docs keep only the columns (and
+    * the table comment) that survive the replace.
     *
     * @param orderBy global ORDER BY sink (reference: ~690 cosmetic trailing
     *   `ORDER BY` sites): range-partition + per-partition sort, so part files
@@ -179,36 +185,33 @@ final class Warehouse(val spark: SparkSession, val root: String,
       // in one commit), with history/time-travel kept
       graft.plans.TxLog.overwrite(logPath(name), out, partitionBy)
       writeSchema(name, df.schema)
-      return
-    }
-    stagedWrite(name, out, partitionBy, partitions = None)
+      pruneDocs(name, df.schema)
+    } else stagedWrite(name, out, partitionBy, partitioned = false)
   } finally noteMutation()
 
   /** The one way a parquet table's data is replaced: `out` is written once to
     * a hidden `.staging_<table>` directory beside the table (a failed write
     * leaves the table untouched, and the write may read it), then published.
-    * `partitions` None: `out`'s schema and the docs that still name a column
-    * ship inside the staged directory, which replaces the table by delete and
-    * rename. `Some(emptied)`: each leaf partition directory written replaces
-    * its live one the same way, one at a time (a crash in between leaves some
-    * partitions new), and each `emptied` path not written is deleted. Renames
-    * are atomic on local disk and HDFS only; object stores need the log. */
+    * Not `partitioned`: `out`'s schema and its [[survivingDocs]] ship inside
+    * the staged directory, which replaces the table by delete and rename.
+    * `partitioned`: each leaf partition directory written replaces its live
+    * one the same way, one at a time (a crash in between leaves some
+    * partitions new). Renames are atomic on local disk and HDFS only; object
+    * stores need the log. */
   private def stagedWrite(name: String, out: DataFrame, partitionBy: Seq[String],
-                          partitions: Option[Seq[String]]): Unit = {
+                          partitioned: Boolean): Unit = {
     val target = Paths.get(tablePath(name))
     val staged = target.resolveSibling(s".staging_${target.getFileName}")
     try {
       val w = out.write.mode(SaveMode.Overwrite)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staged.toString)
-      if (partitions.isEmpty) {
+      if (!partitioned) {
         // sidecars ship INSIDE the staged directory, so the rename publishes a
         // complete table; underscore-prefixed files are invisible to Spark's
         // listing, so the staged dir stays a valid parquet directory
         Files.writeString(staged.resolve("_schema.json"), out.schema.json)
-        val survivingDocs = docs(name).filter { case (k, _) =>
-          k == "__table__" || out.schema.fieldNames.contains(k) }
-        if (survivingDocs.nonEmpty)
-          Files.writeString(staged.resolve("_docs.json"), serializeDocs(survivingDocs))
+        val kept = survivingDocs(name, out.schema)
+        if (kept.nonEmpty) Files.writeString(staged.resolve("_docs.json"), serializeDocs(kept))
       }
     } catch { case e: Throwable =>
       if (Files.exists(staged)) TempDirs.deleteTree(staged)
@@ -216,7 +219,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
     // the commit point; a failure from here on keeps the staged copy. The
     // whole table is the one leaf "", partitions a listing (no Spark job)
-    val leaves = partitions.fold(Seq("")) { _ =>
+    val leaves = if (!partitioned) Seq("") else {
       val walk = Files.walk(staged, partitionBy.size)
       try walk.iterator().asScala.map(staged.relativize(_)).filter(r =>
         r.getNameCount == partitionBy.size && r.getFileName.toString.contains("=") &&
@@ -229,11 +232,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       Files.createDirectories(live.getParent)
       Files.move(staged.resolve(rel), live, StandardCopyOption.ATOMIC_MOVE)
     }
-    partitions.foreach { emptied =>
-      emptied.filterNot(leaves.contains).map(target.resolve(_)).filter(Files.exists(_))
-        .foreach(TempDirs.deleteTree)
-      TempDirs.deleteTree(staged)
-    }
+    if (partitioned) TempDirs.deleteTree(staged)
     // Spark's write re-cached the staging path, not the table: a frame
     // cached over the old files re-caches over the new ones here
     spark.catalog.refreshByPath(target.toString)
@@ -254,7 +253,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
         val out = distributeForWrite(aligned, partitionBy)
         if (logRouted.contains(name))
           graft.plans.TxLog.overwritePartitions(logPath(name), out, partitionBy)
-        else stagedWrite(name, out, partitionBy, partitions = Some(Nil))
+        else stagedWrite(name, out, partitionBy, partitioned = true)
       }
     }
   }
@@ -275,33 +274,15 @@ final class Warehouse(val spark: SparkSession, val root: String,
     if (!empty) try write finally noteMutation()
   }
 
-  /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
-    * INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
-    * that backs the reference's 197 delta-format models (reference:
-    * macros/spark_adapter_patch/create_table.sql:29-34 `create or replace
-    * table … using delta`; dbt-spark's incremental_strategy='merge' emits the
-    * MERGE above for delta relations).
-    *
-    * Rewrite granularity is the partition directory — one level coarser than
-    * Delta's file-level rewrite, the best parquet-over-FS can do:
-    *  1. probe which partitions are affected: partitions carrying incoming
-    *     rows, plus partitions holding an existing row whose key is being
-    *     replaced (covers a key MOVING partitions — Delta's matched-update
-    *     also relocates the row);
-    *  2. scan ONLY those partition directories (the `isin`-style literal
-    *     predicate below prunes at listing time), anti-join out replaced keys;
-    *  3. write survivors ∪ increment ONCE beside the table and publish the
-    *     partition directories it produced, deleting every affected
-    *     directory it left with zero rows (a fully-replaced partition absent
-    *     from the output would otherwise be left stale) — [[stagedWrite]].
-    *
-    * Scale shape: the key probe is a key-only semi-join (broadcast when the
-    * increment is small, AQE otherwise); the collected affected-partition list
-    * is bounded by partition count, the same driver-side bookkeeping Spark's
-    * own dynamic partition overwrite does. Unpartitioned tables fall back to
-    * a full rewrite — documented cost, same as Delta MERGE with no pruning
-    * predicate matching every file. A log-routed table merges at file
-    * granularity instead ([[mergeUpsertLog]]).
+  /** Key-based upsert: the Delta `MERGE INTO … WHEN MATCHED THEN UPDATE SET *
+    * WHEN NOT MATCHED THEN INSERT *` that dbt-spark emits for
+    * incremental_strategy='merge' with a unique_key, which it runs on delta
+    * relations only (reference: macros/spark_adapter_patch/create_table.sql:29-34
+    * `create or replace table … using delta`). [[routeFormat]] puts every
+    * keyed merge on the log, so an existing table must be log-backed: a
+    * parquet table from an earlier materialization of the name fails,
+    * naming it (a full refresh rebuilds it on the log). The merge itself is
+    * [[mergeUpsertLog]].
     *
     * Contract (same as dbt merge): the increment must be unique on
     * `uniqueKey`; reference models guarantee this with their ROW_NUMBER dedup
@@ -311,33 +292,25 @@ final class Warehouse(val spark: SparkSession, val root: String,
                   onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
                   incrementPartitionsOnly: Boolean = false): Unit =
     if (!tableExists(name)) createTable(name, df, partitionBy)
-    else alignSchema(name, df, onSchemaChange) { aligned =>
+    else if (uniqueKey.isEmpty)
       // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
       // INSERT): nothing can match, so it degrades to append (reference
       // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
-      if (uniqueKey.isEmpty) append(name, aligned, partitionBy)
-      else unlessEmpty(existed = true, aligned) {
-        if (logRouted.contains(name))
+      alignSchema(name, df, onSchemaChange)(append(name, _, partitionBy))
+    else {
+      if (!isLogBacked(name)) throw new IllegalStateException(
+        s"mergeUpsert($name): $name at ${tablePath(name)} is not a transaction-log " +
+          "table; a keyed merge writes the log only, so rebuild it with a full refresh")
+      alignSchema(name, df, onSchemaChange) { aligned =>
+        unlessEmpty(existed = true, aligned) {
           mergeUpsertLog(name, aligned, uniqueKey, partitionBy, incrementPartitionsOnly)
-        else if (partitionBy.isEmpty) {
-          // read(name) is constructed only on the paths that scan the whole
-          // table: building the DataFrame lists every file eagerly, which the
-          // 100× probe measured as the dominant merge term at 7,700 partitions
-          val keys = aligned.select(uniqueKey.map(col): _*).distinct()
-          val survivors = read(name).join(keys, uniqueKey, "left_anti")
-          createTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
-        } else {
-          val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
-            incrementPartitionsOnly)
-          // staged beside the partitions it reads, in canonical column order and types
-          alignSchema(name, out, OnSchemaChange.Ignore)(o => stagedWrite(name,
-            distributeForWrite(o, partitionBy), partitionBy,
-            Some(affected.map(partitionDir(partitionBy, _)).toSeq)))
         }
       }
     }
 
-  /** `col=value/...` relative path of one partition, hive-escaped.
+  /** `col=value/...` relative path of one partition, hive-escaped: the
+    * directory Spark's writer names it by, whose segments a log table's
+    * manifest keeps as the partition values ([[graft.plans.TxLog.partitionValues]]).
     *
     * Value rendering MUST match what Spark's dynamic-partition writer put on
     * disk: `Cast(col, StringType, sessionLocalTimeZone)` fed through
@@ -345,7 +318,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * `FileFormatDataWriter.partitionPathExpression`). `Row.get(i).toString`
     * diverges for typed columns — `java.sql.Timestamp.toString` appends
     * ".0" for whole seconds, so a timestamp-partitioned merge would compute
-    * directory names that don't exist and silently drop survivors. */
+    * values no manifest entry has and prune every candidate file away. */
   private def partitionDir(partitionBy: Seq[String],
                            r: org.apache.spark.sql.Row): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -360,95 +333,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
           .map(_.toString).orNull
       ExternalCatalogUtils.getPartitionPathString(c, str)
     }.mkString("/")
-  }
-
-  /** Read ONLY the given partition directories of a table. At a large
-    * partition count this skips the full-table file listing that a plain
-    * `read(name).filter(partition predicate)` pays before pruning — the
-    * 100× merge probe measured that listing, not data, as the dominant
-    * term (SCALE.md). Missing directories (brand-new partitions) are
-    * skipped; with none on disk the result is an empty slice. */
-  private def readPartitionDirs(name: String, partitionBy: Seq[String],
-                                parts: Seq[org.apache.spark.sql.Row]): DataFrame = {
-    val base = tablePath(name)
-    val dirs = parts.map(r => s"$base/${partitionDir(partitionBy, r)}")
-      .filter(p => Files.exists(Paths.get(p)))
-    val schema = canonicalSchema(name)
-    (dirs, schema) match {
-      case (Nil, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case (Nil, None) => read(name).limit(0)
-      case (ds, Some(s)) =>
-        spark.read.option("basePath", base).schema(s).parquet(ds: _*)
-          .select(s.fieldNames.toSeq.map(col): _*)
-      case (ds, None) => spark.read.option("basePath", base).parquet(ds: _*)
-    }
-  }
-
-  /** The merged slice — increment ∪ surviving rows of affected partitions —
-    * plus the affected partition-value rows. `df` must already match the
-    * table's canonical column set.
-    *
-    * The matched-key probe scans the target's key columns across ALL
-    * partitions (column-pruned: a few % of table bytes at 100 TB — the same
-    * cost a Delta MERGE without a pruning predicate pays to find matched
-    * files). When the caller knows a key can never change partition (the
-    * usual case: the partition column derives from immutable attributes),
-    * `incrementPartitionsOnly` skips the probe entirely — dbt's
-    * incremental_predicates contract — and merge cost depends only on the
-    * increment's partitions, independent of table size. Trade-off under
-    * that flag: a matched key living in a non-increment partition is NOT
-    * updated (it is out of the pruned scan), same as dbt's.
-    *
-    * Exposed for plan assertions: the survivors side must scan only the
-    * affected partition directories (read directly by directory, so even the
-    * file LISTING is O(affected)), which ScaleSpec pins via the
-    * FileSourceScan's selected partition count. */
-  private[graft] def mergeSlice(name: String, df: DataFrame, uniqueKey: Seq[String],
-                                partitionBy: Seq[String], incrementPartitionsOnly: Boolean)
-      : (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    // Partition values are compared driver-side via Row equality in
-    // (incParts ++ matched).distinct, which has no Spark set-op type
-    // coercion: an increment whose partition column drifted (int vs long
-    // under append_new_columns/sync, which alignSchema does not cast) would
-    // make equal values unequal and duplicate survivor reads. Normalize the
-    // increment's partition columns to the canonical types once, up front,
-    // so `matched` (from read(), canonical-typed) and the union agree.
-    val canonTypes: Map[String, DataType] = canonicalSchema(name)
-      .map(_.fields.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
-    val dfN = df.select(df.columns.toSeq.map { c =>
-      if (partitionBy.contains(c))
-        canonTypes.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))
-      else col(c)
-    }: _*)
-    val keys = dfN.select(uniqueKey.map(col): _*).distinct()
-    val incParts = dfN.select(partitionBy.map(col): _*).distinct()
-    val affected =
-      if (incrementPartitionsOnly) incParts.collect()
-      else {
-        // the probe is the only whole-table access (key columns only);
-        // read(name) is constructed here, not at the top, so pruned mode
-        // never pays the full file listing
-        val matched = read(name).join(keys, uniqueKey, "left_semi")
-          .select(partitionBy.map(col): _*).distinct().collect()
-        // matched partitions were just read off disk, so their directories
-        // MUST resolve; a miss means partitionDir's encoding diverged from
-        // the writer's and survivors would silently vanish — fail loudly
-        val missing = matched.map(r => partitionDir(partitionBy, r))
-          .filterNot(d => Files.exists(Paths.get(tablePath(name), d)))
-        if (missing.nonEmpty) throw new IllegalStateException(
-          s"mergeUpsert($name): matched partition directories not found under " +
-            s"${tablePath(name)}: ${missing.mkString(", ")} — partition-path " +
-            "encoding mismatch would silently drop surviving rows")
-        (incParts.collect() ++ matched).distinct
-      }
-    // survivors come from a directory-scoped read of ONLY the affected
-    // partitions: the affected set is already collected, so listing cost is
-    // O(affected dirs), not O(table dirs) — at 7,700 partitions the full
-    // listing was the dominant merge term (100× probe, SCALE.md)
-    val survivors = readPartitionDirs(name, partitionBy, affected.toSeq)
-      .join(keys, uniqueKey, "left_anti")
-    (dfN.unionByName(survivors.select(dfN.columns.map(col).toSeq: _*)), affected)
   }
 
   /** Row append (reference: incremental_strategy='append'). */
@@ -471,11 +355,24 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * metadata (`comment`) on read. Replaced by rename, so a crash never
     * leaves a half-written sidecar for [[docs]] to fail on. */
   def setDocs(name: String, tableComment: String,
-              columnComments: Map[String, String]): Unit = {
-    val tmp = Files.writeString(Paths.get(tablePath(name), "_docs.json.tmp"),
-      serializeDocs(Map("__table__" -> tableComment) ++ columnComments))
+              columnComments: Map[String, String]): Unit =
+    writeDocs(name, Map("__table__" -> tableComment) ++ columnComments)
+
+  private def writeDocs(name: String, m: Map[String, String]): Unit = {
+    val tmp = Files.writeString(Paths.get(tablePath(name), "_docs.json.tmp"), serializeDocs(m))
     Files.move(tmp, tmp.resolveSibling("_docs.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `name`'s docs that a full replace by `schema` keeps: the table comment
+    * and the comments of columns `schema` still has. */
+  private def survivingDocs(name: String, schema: StructType): Map[String, String] =
+    docs(name).filter { case (k, _) => k == "__table__" || schema.fieldNames.contains(k) }
+
+  /** Drop from `name`'s docs sidecar every column `schema` no longer has. */
+  private def pruneDocs(name: String, schema: StructType): Unit = {
+    val kept = survivingDocs(name, schema)
+    if (kept != docs(name)) writeDocs(name, kept)
   }
 
   private def serializeDocs(m: Map[String, String]): String =
@@ -608,17 +505,16 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   // ---- transaction-log table format (reference: file_format='delta') ----
   //
-  // The reference declares 197 models `file_format='delta'`; when
-  // `logFormatEnabled`, [[routeFormat]] sends those models' writes through
-  // the [[graft.plans.TxLog]] log instead of plain parquet directories. Same
-  // model contract (on_schema_change, dynamic-partition overwrite, merge
-  // semantics), different storage guarantees: atomic multi-partition
-  // commits, snapshot isolation via tombstones, time travel, and — for
-  // merge — FILE-level rewrite granularity (the actual Delta MERGE shape),
-  // finer than the parquet path's partition-directory rewrite. SCD2
-  // snapshots write through [[createTable]], so a delta snapshot's advance
-  // is one log overwrite commit. Reads take the file list and partition
-  // values from the manifest, never from a directory listing.
+  // The reference declares 197 models `file_format='delta'`; [[routeFormat]]
+  // sends those models' writes, and every keyed merge, through the
+  // [[graft.plans.TxLog]] log instead of plain parquet directories. Same
+  // model contract (on_schema_change, dynamic-partition overwrite), other
+  // storage guarantees: atomic multi-partition commits, snapshot isolation
+  // via tombstones, time travel, and FILE-level merge rewrites (the actual
+  // Delta MERGE shape). SCD2 snapshots write through [[createTable]], so a
+  // delta snapshot's advance is one log overwrite commit. Reads take the
+  // file list and partition values from the manifest, never from a
+  // directory listing.
 
   def isLogBacked(name: String): Boolean =
     graft.plans.TxLog.exists(Paths.get(tablePath(name)))
@@ -644,12 +540,17 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** Delta-shaped merge: probe which FILES hold matched keys (key columns
     * only — column-pruned), tombstone exactly those, re-add their surviving
-    * rows together with the increment, one atomic commit. Rewrite
-    * granularity is the file, not the partition directory — candidate files
-    * are still manifest-pruned to the increment's partitions under
-    * `incrementPartitionsOnly` (dbt incremental_predicates analogue). On a
-    * concurrency conflict the probe re-runs against the fresh snapshot.
-    * `aligned` already matches the table's canonical column set. */
+    * rows together with the increment, clustered by partition so each
+    * partition the commit touches gets one new file, in one atomic commit.
+    * The probe scans every live file: a key may have moved partition, and
+    * Delta's matched update relocates the row. When the caller knows keys
+    * never change partition, `incrementPartitionsOnly` (dbt's
+    * incremental_predicates contract) manifest-prunes the candidates to the
+    * increment's partitions, so merge cost follows the increment, not the
+    * table; a matched key living in another partition then is NOT updated,
+    * as in dbt. On a concurrency conflict the probe re-runs against the
+    * fresh snapshot. `aligned` already matches the table's canonical column
+    * set. */
   private def mergeUpsertLog(name: String, aligned: DataFrame, uniqueKey: Seq[String],
                              partitionBy: Seq[String],
                              incrementPartitionsOnly: Boolean): Unit = {
@@ -689,7 +590,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
         case Some(s) => aligned.unionByName(s.select(aligned.columns.toSeq.map(col): _*))
         case None => aligned
       }
-      try { TxLog.replaceFiles(p, snap.version, removes.map(_.path), out, partitionBy); return }
+      try {
+        TxLog.replaceFiles(p, snap.version, removes.map(_.path),
+          distributeForWrite(out, partitionBy), partitionBy)
+        return
+      }
       catch { case _: TxLog.TxConflict if attempts < 5 => () }
     }
   }
@@ -700,7 +605,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * itself, so a view over the table re-derives also when `write` skips an
     * empty increment. If `write` throws, the previous sidecar, or its
     * absence, is put back; a process kill before the commit still leaves
-    * the old files read under the new schema. */
+    * the old files read under the new schema. Once `write` returns, the docs
+    * of columns a changed sidecar dropped (sync_all_columns) go too. */
   private def alignSchema(name: String, df: DataFrame, policy: OnSchemaChange)
                          (write: DataFrame => Unit): Unit = {
     val before = Some(schemaPath(name)).filter(Files.exists(_)).map(Files.readAllBytes)
@@ -732,5 +638,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
       }
       throw e
     }
+    sidecar.foreach(pruneDocs(name, _))
   }
 }

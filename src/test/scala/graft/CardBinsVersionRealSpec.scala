@@ -2,8 +2,8 @@ package graft
 
 import graft.runtime._
 
-/** The payments snapshot dir's single file, executed VERBATIM on a
-  * LOG-ENABLED warehouse (its config pins `file_format='delta'`, so the
+/** The payments snapshot dir's single file, executed VERBATIM on the
+  * transaction log (its config pins `file_format='delta'`, so the
   * SCD2 full-replace lands as TxLog overwrite commits and history is read
   * back through the manifest): `snapshots/spark/payments/card_bins_version
   * .sql` — timestamp strategy over a card-BIN reference feed,
@@ -33,8 +33,7 @@ class CardBinsVersionRealSpec extends SparkSpec {
       "card_bin", Scd2Strategy.Timestamp("updated_ts"),
       invalidateHardDeletes = false))
 
-    val wh = new Warehouse(spark, TempDirs.create("graft_wh_cardbins"),
-      logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create("graft_wh_cardbins"))
     wh.routeFormat(snap.name, "delta")
     val ctx = Ctx(spark, wh,
       SourceRegistry.overDir(spark, "/root/testdata/sf0.001"),

@@ -11,22 +11,23 @@ import graft.runtime.{Ctx, OnSchemaChange, Scd2, Scd2Strategy, SourceRegistry, T
 /** An incremental write into an existing table skips an increment whose
   * optimized plan is provably empty, on both table formats: no job, no file,
   * no log commit, no mutation. A 0-row increment that cannot be proven empty
-  * and every full replace still write. */
+  * and every full replace still write. A keyed merge writes the log whatever
+  * its declared format, so both merge cases run on a log table. */
 class EmptyIncrementSpec extends SparkSpec {
   import spark.implicits._
 
   /** A source of keys 1..6 over partitions p0/p1, a warehouse holding it as
-    * table `t` in `format` with docs, and a view over `t` counting its
-    * derivations. */
-  private final class Fixture(format: String) {
+    * table `t` declared `format` (and written by a keyed merge when
+    * `keyedMerge`) with docs, and a view over `t` counting its derivations. */
+  private final class Fixture(format: String, keyedMerge: Boolean = false) {
     private val dir = TempDirs.create("graft_empty_src")
     (1 to 6).map(k => (k, s"v$k", s"p${k % 2}")).toDF("k", "v", "p").write.parquet(s"$dir/src.parquet")
     val src: DataFrame = Tables(spark, dir, "src")
     val root: String = TempDirs.create("graft_empty_wh")
-    val wh = new Warehouse(spark, root, logFormatEnabled = true)
+    val wh = new Warehouse(spark, root)
     var derivations = 0
     def create(name: String, df: DataFrame, partitionBy: Seq[String]): Unit = {
-      wh.routeFormat(name, format)
+      wh.routeFormat(name, format, keyedMerge)
       wh.createTable(name, df, partitionBy)
     }
     create("t", src, Seq("p"))
@@ -61,7 +62,7 @@ class EmptyIncrementSpec extends SparkSpec {
 
   for (format <- formats; (kind, write) <- writes) {
     test(s"$format $kind: a provably empty increment starts no job and changes no file") {
-      val f = new Fixture(format)
+      val f = new Fixture(format, kind == "merge")
       val (files, rows) = (f.files(), f.rows())
       f.rederives()
       assert(jobsStartedBy(write(f.wh, f.src.filter($"k" > 100), OnSchemaChange.Ignore)) == 0)
@@ -71,7 +72,7 @@ class EmptyIncrementSpec extends SparkSpec {
     }
 
     test(s"$format $kind: a 0-row increment that cannot be proven empty still writes") {
-      val f = new Fixture(format)
+      val f = new Fixture(format, kind == "merge")
       val rows = f.rows()
       val increment = f.src.filter($"v" > "zzz")
       assert(increment.isEmpty)
@@ -84,7 +85,7 @@ class EmptyIncrementSpec extends SparkSpec {
 
   for (format <- formats; (kind, write) <- writes if kind != "append") {
     test(s"$format $kind: append_new_columns adds the column to the sidecar on a provably empty increment") {
-      val f = new Fixture(format)
+      val f = new Fixture(format, kind == "merge")
       val data = f.files().filter { case (p, _) => p.getFileName.toString != "_schema.json" }
       f.rederives()
       assert(jobsStartedBy(write(f.wh, f.src.filter($"k" > 100).withColumn("extra", lit(1)),

@@ -15,7 +15,9 @@ class OnfySessionsRealSpec extends SparkSpec {
   /** Plant the device stream + transactions + sources, run the real file,
     * return the materialized output. Shared by the parquet and the
     * transaction-log (file_format='delta') runs. */
-  private def plantAndRun(ctx: Ctx): org.apache.spark.sql.DataFrame = {
+  /** Plants the inputs and runs the real model, re-declared
+    * `file_format='parquet'` when `asParquet`. */
+  private def plantAndRun(ctx: Ctx, asParquet: Boolean = false): org.apache.spark.sql.DataFrame = {
     val sql = java.nio.file.Files.readString(java.nio.file.Paths.get(
       "/root/reference/models/spark/onfy/onfy_sessions.sql"))
     ctx.sources.register("onfy_mart", "device_events")(s => {
@@ -44,7 +46,8 @@ class OnfySessionsRealSpec extends SparkSpec {
         "CAST(nsdt AS TIMESTAMP) AS next_source_dt", "type",
         "source_corrected", "campaign_corrected", "utm_medium"))
 
-    val model = SqlTemplater.sqlModelAuto("onfy_sessions", sql)
+    val declared = SqlTemplater.sqlModelAuto("onfy_sessions", sql)
+    val model = if (asParquet) declared.copy(fileFormat = "parquet") else declared
     assert(model.materialization == Materialization.IncrementalInsertOverwrite(
       Seq("session_start_date"), OnSchemaChange.Ignore))
     assert(model.deps.toSet == Set("sources", "transactions"))
@@ -86,11 +89,12 @@ class OnfySessionsRealSpec extends SparkSpec {
 
   test("REAL onfy_sessions.sql materializes onto the transaction log " +
     "(its own file_format='delta') with identical output") {
-    // the model's config declares file_format='delta'; with a log-enabled
-    // warehouse DagRunner routes the insert_overwrite through TxLog
-    val pq = plantAndRun(freshCtx())
+    // the model's config declares file_format='delta', so DagRunner routes
+    // the insert_overwrite through TxLog; the same model re-declared
+    // parquet is the reference run
+    val pq = plantAndRun(freshCtx(), asParquet = true)
     val lgCtx = Ctx(spark,
-      new Warehouse(spark, TempDirs.create("graft_wh_onfy_lg"), logFormatEnabled = true),
+      new Warehouse(spark, TempDirs.create("graft_wh_onfy_lg")),
       SourceRegistry.overDir(spark, "/root/testdata/sf0.001"))
     val lg = plantAndRun(lgCtx)
     assert(lgCtx.warehouse.isLogBacked("onfy_sessions"),

@@ -125,10 +125,10 @@ class RuntimeSpec extends SparkSpec {
   }
 
   test("incremental merge: hive path escaping round-trips hostile partition values") {
-    // the survivors side reads affected partitions DIRECTLY by directory
-    // (Warehouse.readPartitionDirs), so partition values containing spaces,
-    // colons, slashes, unicode, '=' and NULL must escape to exactly the dir
-    // names Spark writes — a mismatch silently drops survivors
+    // the log keeps each file's partition values as the escaped directory
+    // segments Spark's writer names them by, so partition values containing
+    // spaces, colons, slashes, '=' and NULL must read back and match exactly
+    // — a mismatch drops or duplicates rows
     val ctx = freshCtx()
     // no unicode value here: this container's JVM runs an ASCII
     // sun.jnu.encoding, so Spark's OWN parquet write fails on non-ASCII
@@ -156,8 +156,8 @@ class RuntimeSpec extends SparkSpec {
   test("incremental merge: timestamp partition values round-trip (no survivor loss)") {
     // java.sql.Timestamp.toString renders "2024-01-05 10:30:00.0" while
     // Spark's partition writer renders "2024-01-05 10:30:00" (cast-to-string
-    // semantics) — partitionDir must use the writer's encoding or the
-    // survivors read misses every timestamp partition silently
+    // semantics) — the merge must key partitions by the writer's encoding or
+    // it loses the survivors of every timestamp partition silently
     val ctx = freshCtx()
     import java.sql.Timestamp
     val t1 = Timestamp.valueOf("2024-01-05 10:30:00")     // whole second: .0 trap
@@ -180,25 +180,15 @@ class RuntimeSpec extends SparkSpec {
       (5L, t3, 55), (6L, t3, 60)), out.toSeq.sortBy(_._1).mkString("\n"))
   }
 
-  test("incremental merge: missing matched partition dir fails loudly") {
-    // sabotage the on-disk escaping (rename "a%3Ab" to raw "a:b"): Spark's
-    // partition discovery still reads the value as a:b, but the computed
-    // survivor directory no longer exists — the merge must throw, not
-    // silently drop the partition's surviving rows
-    val ctx = freshCtx()
-    val wh = ctx.warehouse
-    wh.createTable("mrg_loud",
-      Seq((1L, "a:b", 10), (2L, "a:b", 20)).toDF("id", "part_col", "v"),
-      partitionBy = Seq("part_col"))
-    val tp = ctx.warehouse.tablePath("mrg_loud")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(tp, "part_col=a%3Ab"),
-      java.nio.file.Paths.get(tp, "part_col=a:b"))
+  test("incremental merge: a keyed merge into a parquet table fails, naming it") {
+    val wh = freshCtx().warehouse
+    wh.createTable("mrg_pq", Seq((1L, "a", 10)).toDF("id", "part_col", "v"), Seq("part_col"))
     val ex = intercept[IllegalStateException] {
-      wh.mergeUpsert("mrg_loud", Seq((1L, "a:b", 11)).toDF("id", "part_col", "v"),
+      wh.mergeUpsert("mrg_pq", Seq((1L, "a", 11)).toDF("id", "part_col", "v"),
         Seq("id"), Seq("part_col"))
     }
-    assert(ex.getMessage.contains("partition"))
+    assert(ex.getMessage.contains("mrg_pq") && ex.getMessage.contains("transaction-log"), ex)
+    assert(wh.read("mrg_pq").as[(Long, String, Int)].collect().toSeq == Seq((1L, "a", 10)))
   }
 
   test("incremental merge: partition-column type drift (int vs long) neither dups survivors nor drops partitions") {
@@ -209,12 +199,13 @@ class RuntimeSpec extends SparkSpec {
     // the just-written partition as dropped and deleted its directory
     val ctx = freshCtx()
     val wh = ctx.warehouse
+    wh.routeFormat("mrg_drift", "parquet", keyedMerge = true)
     wh.createTable("mrg_drift",
       Seq((1L, 5, 10), (2L, 5, 20), (3L, 7, 30)).toDF("id", "p", "v"),
       partitionBy = Seq("p"))
     // AppendNewColumns is the policy whose alignSchema does NOT cast the
     // increment (Ignore casts to canonical, Sync adopts the drifted schema),
-    // so it is the only route on which the drifted type reaches mergeSlice
+    // so it is the only route on which the drifted type reaches the merge
     wh.mergeUpsert("mrg_drift",
       Seq((1L, 5L, 11)).toDF("id", "p", "v"), // p drifted to long
       Seq("id"), Seq("p"), OnSchemaChange.AppendNewColumns)
@@ -236,10 +227,12 @@ class RuntimeSpec extends SparkSpec {
     }, mat)
     val dag = new DagRunner(Seq(model))
     dag.run(ctx)
-    val p3Files = {
-      val d = java.nio.file.Paths.get(ctx.warehouse.tablePath("mrg"), "part_col=p3")
-      java.nio.file.Files.list(d).toArray.map(_.toString).toSet
-    }
+    // live files of one partition, as the table's log lists them
+    def liveFiles(part: String): Set[String] =
+      graft.plans.TxLog.snapshot(java.nio.file.Paths.get(ctx.warehouse.tablePath("mrg")))
+        .files.filter(_.partitionValues.get("part_col").contains(part)).map(_.path).toSet
+    val p3Files = liveFiles("p3")
+    assert(p3Files.nonEmpty)
     // matched update (id=1 stays in p1), a key MOVING partition (id=3
     // p2->p1), and an insert landing in p2 (id=5) so p2 survives non-empty;
     // p3 is untouched and must keep its exact files
@@ -249,20 +242,15 @@ class RuntimeSpec extends SparkSpec {
     assert(out == Set((1L, "p1", 11), (2L, "p1", 20), (3L, "p1", 33),
       (4L, "p3", 40), (5L, "p2", 50)))
     // untouched partition was not rewritten (same physical files)
-    val p3After = {
-      val d = java.nio.file.Paths.get(ctx.warehouse.tablePath("mrg"), "part_col=p3")
-      java.nio.file.Files.list(d).toArray.map(_.toString).toSet
-    }
-    assert(p3After == p3Files, "untouched partition must not be rewritten")
-    // a fully-vacated partition directory is dropped: id=5 (p2's only row) moves to p1
+    assert(liveFiles("p3") == p3Files, "untouched partition must not be rewritten")
+    // a fully-vacated partition keeps no live file: id=5 (p2's only row) moves to p1
     increment = Seq((5L, "p1", 55))
     dag.run(ctx)
     val out2 = ctx.ref("mrg").as[(Long, String, Int)].collect().toSet
     assert(out2 == Set((1L, "p1", 11), (2L, "p1", 20), (3L, "p1", 33),
       (4L, "p3", 40), (5L, "p1", 55)))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ctx.warehouse.tablePath("mrg"), "part_col=p2")),
-      "vacated partition dir must be deleted")
+    assert(liveFiles("p2").isEmpty, "vacated partition must have no live file")
+    assert(liveFiles("p3") == p3Files)
   }
 
   test("incremental merge: incrementPartitionsOnly skips out-of-partition matches") {
@@ -286,7 +274,7 @@ class RuntimeSpec extends SparkSpec {
     assert(out == Set((1L, "p1", 11), (2L, "p1", 22), (2L, "p2", 20)))
   }
 
-  test("incremental merge: unpartitioned upsert falls back to full replace") {
+  test("incremental merge: unpartitioned upsert") {
     val ctx = freshCtx()
     var inc = false
     val model = Model("mrg_flat", c => {
@@ -295,6 +283,7 @@ class RuntimeSpec extends SparkSpec {
     }, Materialization.IncrementalMerge(Seq("id")))
     val dag = new DagRunner(Seq(model))
     dag.run(ctx); inc = true; dag.run(ctx)
+    assert(ctx.warehouse.isLogBacked("mrg_flat"), "a keyed merge writes the log")
     assert(ctx.ref("mrg_flat").as[(Long, Int)].collect().toSet ==
       Set((1L, 10), (2L, 22), (3L, 30)))
   }
@@ -1079,29 +1068,36 @@ class RuntimeSpec extends SparkSpec {
       invalidateHardDeletes = false, ts)
 
   test("docs survive a rebuild filtered to surviving columns") {
-    val ctx = freshCtx()
-    val wh = ctx.warehouse
-    // (table, first build, full replace that does not carry gone_col)
-    val cases: Seq[(String, () => Unit, () => Unit)] = Seq(
-      ("doc_t", () => wh.createTable("doc_t", Seq((1, "x")).toDF("v", "gone_col")),
-        () => wh.createTable("doc_t", Seq(2).toDF("v"))),
-      ("doc_scd2", () => snapshot(ctx, "doc_scd2", Seq((1, "a")).toDF("v", "p"), scd2Ts1),
-        () => snapshot(ctx, "doc_scd2", Seq((1, "b")).toDF("v", "p"), scd2Ts2)), // SCD2 advance
-      ("doc_merge", () => wh.createTable("doc_merge", Seq((1, "a")).toDF("v", "p")),
-        () => wh.mergeUpsert("doc_merge", Seq((1, "b"), (2, "c")).toDF("v", "p"),
-          Seq("v"), partitionBy = Nil))) // unpartitioned merge
-    for ((name, create, replace) <- cases) {
-      create()
-      wh.setDocs(name, "the table", Map("v" -> "kept", "gone_col" -> "dropped"))
-      val before = wh.read(name).collect().toSet
-      replace()
-      assert(wh.read(name).collect().toSet != before, s"$name was not rewritten")
-      assert(wh.docs(name) == Map("__table__" -> "the table", "v" -> "kept"), name)
+    for (format <- Seq("parquet", "delta")) {
+      val ctx = freshCtx()
+      val wh = ctx.warehouse
+      Seq("doc_t", "doc_scd2").foreach(wh.routeFormat(_, format))
+      // a keyed merge writes the log whatever its file_format
+      wh.routeFormat("doc_merge", format, keyedMerge = true)
+      // (table, first build, replace that does not carry gone_col)
+      val cases: Seq[(String, () => Unit, () => Unit)] = Seq(
+        ("doc_t", () => wh.createTable("doc_t", Seq((1, "x")).toDF("v", "gone_col")),
+          () => wh.createTable("doc_t", Seq(2).toDF("v"))),
+        ("doc_scd2", () => snapshot(ctx, "doc_scd2", Seq((1, "a")).toDF("v", "p"), scd2Ts1),
+          () => snapshot(ctx, "doc_scd2", Seq((1, "b")).toDF("v", "p"), scd2Ts2)), // SCD2 advance
+        ("doc_merge", () => wh.createTable("doc_merge", Seq((1, "a", "x")).toDF("v", "p", "gone_col")),
+          () => wh.mergeUpsert("doc_merge", Seq((1, "b"), (2, "c")).toDF("v", "p"),
+            Seq("v"), partitionBy = Nil, OnSchemaChange.SyncAllColumns))) // sync drops gone_col
+      for ((name, create, replace) <- cases) {
+        create()
+        wh.setDocs(name, "the table", Map("v" -> "kept", "gone_col" -> "dropped"))
+        val before = wh.read(name).collect().toSet
+        replace()
+        assert(wh.isLogBacked(name) == (format == "delta" || name == "doc_merge"), s"$format $name")
+        assert(wh.read(name).collect().toSet != before, s"$format $name was not rewritten")
+        assert(wh.docs(name) == Map("__table__" -> "the table", "v" -> "kept"), s"$format $name")
+      }
     }
   }
 
   test("a rebuild re-caches a cached read of the table") {
     val wh = freshCtx().warehouse
+    wh.routeFormat("cached_m", "parquet", keyedMerge = true)
     val rebuild = Seq((3, "a")).toDF("v", "p")
     // (table, partition columns, rebuild, rows after it)
     val cases: Seq[(String, Seq[String], String => Unit, Set[(Int, String)])] = Seq(
@@ -1175,7 +1171,7 @@ class RuntimeSpec extends SparkSpec {
 
   /** A (v, p) table partitioned by `p`, on the log when `log` is set. */
   private def partitionedCrashTable(log: Boolean, name: String): (Warehouse, () => Unit) = {
-    val wh = new Warehouse(spark, runtime.TempDirs.create("graft_wh"), logFormatEnabled = log)
+    val wh = new Warehouse(spark, runtime.TempDirs.create("graft_wh"))
     wh.routeFormat(name, if (log) "delta" else "parquet")
     (wh, () => wh.createTable(name, Seq((1L, "a"), (2L, "b")).toDF("v", "p"), Seq("p")))
   }
@@ -1193,8 +1189,9 @@ class RuntimeSpec extends SparkSpec {
   test("crash safety: a failed partitioned merge adding a column keeps the old schema " +
        "and leaves nothing beside its table") {
     // the pruned merge collects the increment's partitions without running the
-    // failing column, so the task fails in the slice's write
-    val (wh, create) = partitionedCrashTable(log = false, "crash_ms")
+    // failing column and finds no candidate file in them, so the task fails
+    // in the increment's write
+    val (wh, create) = partitionedCrashTable(log = true, "crash_ms")
     assertCrashSafe(wh, "crash_ms", create,
       fail => wh.mergeUpsert("crash_ms", taskFrame(fail, 5, 8).withColumn("added", lit(1)),
         Seq("v"), Seq("p"), OnSchemaChange.SyncAllColumns, incrementPartitionsOnly = true))
@@ -1205,6 +1202,7 @@ class RuntimeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
     val wh = freshCtx().warehouse
+    wh.routeFormat("once_m", "parquet", keyedMerge = true)
     wh.createTable("once_m", Seq((1, "a"), (2, "b")).toDF("v", "p"), Seq("p"))
     val writes = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new QueryExecutionListener {
@@ -1222,7 +1220,8 @@ class RuntimeSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     assert(writes.get == 1)
     assert(wh.read("once_m").as[(Int, String)].collect().toSet == Set((1, "a"), (2, "a"), (3, "a")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(wh.tablePath("once_m"), "p=b")))
+    val live = graft.plans.TxLog.snapshot(java.nio.file.Paths.get(wh.tablePath("once_m"))).files
+    assert(live.map(_.partitionValues("p")).toSet == Set("a"), live)
   }
 
   test("docs are metastore-visible: DESCRIBE surfaces column + table comments") {

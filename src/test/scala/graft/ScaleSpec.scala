@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.ops.SkewJoin
@@ -12,34 +13,41 @@ import graft.runtime._
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
-  test("merge slice scan is partition-pruned (plan-asserted)") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val ctx = freshCtx()
-    // 4 partitions on disk; the increment touches only p2
-    ctx.warehouse.createTable("mrg_plan",
-      Seq((1L, "p1", 1), (2L, "p2", 2), (3L, "p3", 3), (4L, "p4", 4))
-        .toDF("id", "part_col", "v"),
-      Seq("part_col"))
-    val inc = Seq((2L, "p2", 22)).toDF("id", "part_col", "v")
+  test("a pruned log merge scans only the increment's partition files") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // files each query the merge runs reads, from its scans' numFiles metric
+    def scansOf(merge: => Unit): Seq[Long] = {
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+            case f: FileSourceScanExec => f.metrics("numFiles").value
+          }.foreach(scans.add)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try { merge; org.apache.spark.graft.ListenerDrain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(listener)
+      scans.asScala.toSeq
+    }
     for (pruned <- Seq(true, false)) {
-      val (out, affected) = ctx.warehouse.mergeSlice("mrg_plan", inc,
-        Seq("id"), Seq("part_col"), incrementPartitionsOnly = pruned)
-      assert(affected.map(_.getString(0)).toSet == Set("p2"))
-      // the survivors side reads ONLY the affected directory — at 100 TB this
-      // is the difference between rewriting one partition and scanning the
-      // table. (The unpruned mode's extra key PROBE scans all partitions by
-      // design, but the rewrite slice below must stay pruned either way.)
-      val plan = out.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val scans = plan.collect {
-        case f: FileSourceScanExec if f.relation.partitionSchema.nonEmpty => f
-      }
-      assert(scans.nonEmpty, s"expected a partitioned file scan:\n${out.queryExecution.executedPlan}")
-      assert(scans.forall(_.selectedPartitions.partitionCount == 1),
-        s"survivors scan not pruned (pruned=$pruned): " +
-          scans.map(_.selectedPartitions.partitionCount).mkString(","))
+      val wh = freshCtx().warehouse
+      wh.routeFormat("mrg_plan", "parquet", keyedMerge = true)
+      // 4 partitions on the log, one file each; the increment touches only p2
+      wh.createTable("mrg_plan",
+        Seq((1L, "p1", 1), (2L, "p2", 2), (3L, "p3", 3), (4L, "p4", 4))
+          .toDF("id", "part_col", "v"),
+        Seq("part_col"))
+      val scans = scansOf(wh.mergeUpsert("mrg_plan", Seq((2L, "p2", 22)).toDF("id", "part_col", "v"),
+        Seq("id"), Seq("part_col"), incrementPartitionsOnly = pruned))
+      assert(wh.read("mrg_plan").filter($"id" === 2L).select($"v").as[Int].collect().toSeq == Seq(22))
+      // the key probe and the survivors read each scan p2's one file; the
+      // unpruned probe scans all 4, which shows the metric sees the probe
+      if (pruned) assert(scans.nonEmpty && scans.forall(_ == 1), scans)
+      else assert(scans.max == 4, scans)
     }
   }
 

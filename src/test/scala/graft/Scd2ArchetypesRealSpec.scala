@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions.col
   *    TIMESTAMP strategy WITH invalidate_hard_deletes (the combination;
   *    prior roster rows covered timestamp-only and check+hard-deletes):
   *    an update closes the old row at the NEW row's updated_at, a
-  *    disappearance closes it at the RUN timestamp. `file_format='delta'`
-  *    — this spec runs it on a LOG-ENABLED warehouse, so the SCD2
-  *    full-replace lands as TxLog overwrite commits (routeFormat) and the
-  *    history is read back through the manifest.
+  *    disappearance closes it at the RUN timestamp. `file_format='delta'`,
+  *    so the SCD2 full-replace lands as TxLog overwrite commits
+  *    (routeFormat) and the history is read back through the manifest.
   *  - snapshots/spark/b2b_mart/scd2_rfq_media_uploads_snapshot.sql —
   *    CHECK strategy on a single column that is ITSELF part of the
   *    SYNTHESIZED unique key (`imageId||rfqId||createdTimeMs AS _id`): a
@@ -37,8 +36,7 @@ class Scd2ArchetypesRealSpec extends SparkSpec {
       Scd2Strategy.Timestamp("update_ts_msk"), invalidateHardDeletes = true))
     assert(snap.fileFormat == "delta")
 
-    val wh = new Warehouse(spark, TempDirs.create("graft_wh_scd2log"),
-      logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create("graft_wh_scd2log"))
     val ctx = Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"),
       Map("run_ts" -> "2024-06-02 00:00:00"))
 
@@ -55,7 +53,7 @@ class Scd2ArchetypesRealSpec extends SparkSpec {
               ("f2", "sent", msOf("2024-06-01 11:00:00"))))
     run("2024-06-02 00:00:00")
     assert(wh.isLogBacked("scd2_form_with_status_snapshot"),
-      "a delta-format snapshot on a log-enabled warehouse must be TxLog-backed")
+      "a delta-format snapshot must be TxLog-backed")
     assert(ctx.ref("scd2_form_with_status_snapshot").count() == 2)
 
     // run 2: f1 updated (closes at the NEW updated_at), f2 hard-deleted

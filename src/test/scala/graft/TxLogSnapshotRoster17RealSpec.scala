@@ -4,7 +4,7 @@ import graft.runtime._
 
 /** Grows the hand-verified snapshot roster 21 → 28 (r17). Every file below
   * is read VERBATIM from /root/reference at test runtime, runs on a
-  * LOG-ENABLED warehouse (all pin `file_format='delta'`), and carries a
+  * transaction-log table (all pin `file_format='delta'`), and carries a
   * `VERSION AS OF 0` pre-advance read-back. New config/body shapes:
   *
   *  - snapshots/spark/b2b_mart/scd2_interactions_snapshot.sql — the
@@ -50,7 +50,7 @@ class TxLogSnapshotRoster17RealSpec extends SparkSpec {
       graft.functions.TimeFunctions.MskOffsetMillis
 
   private def logCtx(tag: String): (Ctx, Warehouse) = {
-    val wh = new Warehouse(spark, TempDirs.create(tag), logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create(tag))
     (Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"),
       Map("run_ts" -> "2024-03-02 00:00:00")), wh)
   }

@@ -3,7 +3,7 @@ package graft
 import graft.runtime._
 
 /** Grows the hand-verified snapshot roster to 21 distinct files — more reference
-  * snapshot files executed VERBATIM, each on a LOG-ENABLED warehouse (all
+  * snapshot files executed VERBATIM, each on the transaction log (all
   * seven pin `file_format='delta'`, so every SCD2 advance lands as TxLog
   * commits) and each with a time-travel `VERSION AS OF 0` read-back pinning
   * the pre-advance state. Shapes covered beyond the prior 13:
@@ -58,7 +58,7 @@ class TxLogSnapshotRosterRealSpec extends SparkSpec {
     java.time.Instant.parse(utcWall.replace(' ', 'T') + "Z").toEpochMilli
 
   private def logCtx(tag: String): (Ctx, Warehouse) = {
-    val wh = new Warehouse(spark, TempDirs.create(tag), logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create(tag))
     (Ctx(spark, wh, SourceRegistry.overDir(spark, "/root/testdata/sf0.001"),
       Map("run_ts" -> "2024-03-02 00:00:00")), wh)
   }

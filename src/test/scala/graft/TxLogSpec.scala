@@ -304,7 +304,7 @@ class TxLogSpec extends SparkSpec {
 
   test("a log table with `}`, `]`, `{}` and quote/backslash partition values " +
        "survives insert_overwrite, append and keyed merges, and reads back exactly") {
-    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_codec"), logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_codec"))
     wh.routeFormat("t", "delta")
     def rows(xs: (Int, String, String)*) = xs.toDF("id", "v", "p")
     wh.createTable("t", rows((0, "v0", "a}b"), (1, "v0", "x]y"), (2, "v0", "{}"),
@@ -322,7 +322,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("a log table partitioned on a column whose name Spark escapes reads its values back") {
-    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_pq"), logFormatEnabled = true)
+    val wh = new Warehouse(spark, TempDirs.create("graft_txlog_pq"))
     wh.routeFormat("t", "delta")
     wh.createTable("t", Seq((1, "a", "x"), (2, "b", "y")).toDF("id", "p:q", "v"), Seq("p:q"))
     wh.mergeUpsert("t", Seq((2, "b", "z")).toDF("id", "p:q", "v"), Seq("id"), Seq("p:q"),

@@ -8,19 +8,20 @@ import org.apache.spark.sql.functions._
 import graft.plans.TxLog
 import graft.runtime._
 
-/** file_format='delta' routing: the SAME model DAG materialized on a plain
-  * parquet warehouse and on a log-format warehouse must produce identical
-  * tables through every incremental strategy — while the log side
-  * additionally gets commit history and time travel. The warehouse picks
-  * the format from the model's file_format ([[Warehouse.routeFormat]]). */
+/** file_format='delta' routing: the SAME model DAG declared
+  * `file_format='parquet'` and `'delta'` must produce identical tables
+  * through every incremental strategy but the keyed merge — while the log
+  * side additionally gets commit history and time travel. A keyed merge
+  * writes the log whatever its file_format, so its cases check the log's
+  * rows against their closed form. The warehouse picks the format from the
+  * model ([[Warehouse.routeFormat]]). */
 class TxLogWarehouseSpec extends SparkSpec {
   import spark.implicits._
 
   private def ctxPair(): (Ctx, Ctx) = {
     val pq = Ctx(spark, new Warehouse(spark, runtime.TempDirs.create("graft_wh_pq")),
       SourceRegistry.overDir(spark, "/root/testdata/sf0.001"))
-    val lg = Ctx(spark, new Warehouse(spark, runtime.TempDirs.create("graft_wh_lg"),
-      logFormatEnabled = true),
+    val lg = Ctx(spark, new Warehouse(spark, runtime.TempDirs.create("graft_wh_lg")),
       SourceRegistry.overDir(spark, "/root/testdata/sf0.001"))
     (pq, lg)
   }
@@ -28,9 +29,12 @@ class TxLogWarehouseSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  private def materialize(ctx: Ctx, m: Model): Unit = new DagRunner(Seq(m)).materialize(ctx, m)
+
+  /** `m` declared parquet on `pq`, as declared (delta) on `lg`. */
   private def runBoth(pq: Ctx, lg: Ctx, m: Model): Unit = {
-    new DagRunner(Seq(m)).materialize(pq, m)
-    new DagRunner(Seq(m)).materialize(lg, m)
+    materialize(pq, m.copy(fileFormat = "parquet"))
+    materialize(lg, m)
   }
 
   private def assertParity(pq: Ctx, lg: Ctx, name: String): Unit = {
@@ -80,7 +84,7 @@ class TxLogWarehouseSpec extends SparkSpec {
       c => c.spark.range(0, 600).select($"id", ($"id" % 300).as("p")),
       Materialization.IncrementalInsertOverwrite(Seq("p")), fileFormat = "delta")
     for (m <- Seq(few, many)) {
-      new DagRunner(Seq(m)).materialize(lg, m)
+      materialize(lg, m)
       val first = lg.warehouse.read(m.name)
       var second: DataFrame = null
       assert(jobsStartedBy { second = lg.warehouse.read(m.name) } == 0, m.name)
@@ -125,13 +129,15 @@ class TxLogWarehouseSpec extends SparkSpec {
   }
 
   test("merge on an escaped partition value replaces the matched key") {
-    val (pq, lg) = ctxPair()
+    val (_, lg) = ctxPair()
     def model(v: String) = Model("t_mesc",
       _ => Seq((1, "a:b", v)).toDF("id", "p", "v"),
       Materialization.IncrementalMerge(Seq("id"), Seq("p")), fileFormat = "delta")
-    runBoth(pq, lg, model("one"))
-    runBoth(pq, lg, model("two"))
-    assertParity(pq, lg, "t_mesc")
+    materialize(lg, model("one"))
+    materialize(lg, model("two"))
+    assert(lg.warehouse.isLogBacked("t_mesc"))
+    assert(lg.warehouse.read("t_mesc").as[(Int, String, String)].collect().toSeq ==
+      Seq((1, "a:b", "two")))
   }
 
   test("a log table whose snapshot has no files reads as an empty frame with its schema") {
@@ -158,21 +164,45 @@ class TxLogWarehouseSpec extends SparkSpec {
   }
 
   test("merge upserts identically, at file granularity on the log side") {
-    val (pq, lg) = ctxPair()
+    val (_, lg) = ctxPair()
+    def orders = lg.source("default", "orders")
+      .withColumn("om", date_format($"o_orderdate", "yyyy-MM"))
     def model(filterExpr: String, priceBump: Double) = Model("t_mg",
-      c => c.source("default", "orders")
-        .withColumn("om", date_format($"o_orderdate", "yyyy-MM"))
-        .filter(filterExpr)
+      _ => orders.filter(filterExpr)
         .select($"o_orderkey", ($"o_totalprice" + priceBump).as("price"), $"om"),
       Materialization.IncrementalMerge(Seq("o_orderkey"), Seq("om")),
       fileFormat = "delta")
-    runBoth(pq, lg, model("om < '1999-01'", 0.0))
+    materialize(lg, model("om < '1999-01'", 0.0))
     // second run updates a slice of existing keys (price bump) + inserts new
-    runBoth(pq, lg, model("om >= '1998-06' AND om < '2000-01'", 1.0))
-    assertParity(pq, lg, "t_mg")
+    materialize(lg, model("om >= '1998-06' AND om < '2000-01'", 1.0))
+    assert(lg.warehouse.isLogBacked("t_mg"))
+    // closed form: every order before 2000-01, bumped from 1998-06 on
+    val expected = orders.filter("om < '2000-01'").select($"o_orderkey",
+      ($"o_totalprice" + when($"om" >= "1998-06", 1.0).otherwise(0.0)).as("price"), $"om")
+    assert(sortedRows(lg.warehouse.read("t_mg")) == sortedRows(expected))
     // the merge commit removed only the files holding matched keys
     val hist = TxLog.history(Paths.get(lg.warehouse.tablePath("t_mg")))
     assert(hist.size == 2 && hist.last._3 > 0, s"merge should tombstone matched files: $hist")
+  }
+
+  test("a merge clusters rows by partition: one live file per touched partition") {
+    val wh = new Warehouse(spark, runtime.TempDirs.create("graft_wh_cluster"))
+    wh.routeFormat("t_cl", "parquet", keyedMerge = true)
+    val table = spark.range(4000).select($"id", ($"id" % 4).as("p"), lit(1).as("v"))
+    wh.createTable("t_cl", table, Seq("p"))
+    def live = TxLog.snapshot(Paths.get(wh.tablePath("t_cl"))).files
+      .groupBy(_.partitionValues("p")).map { case (p, fs) => p -> fs.map(_.path).toSet }
+    val before = live
+    assert(before.keySet == Set("0", "1", "2", "3") && before.values.forall(_.size == 1))
+    // every key of partitions 0 and 1, spread over 8 Spark partitions
+    val increment = table.filter($"p" < 2).withColumn("v", lit(2)).repartition(8)
+    assert(increment.count() == 2000)
+    wh.mergeUpsert("t_cl", increment, Seq("id"), Seq("p"))
+    val after = live
+    assert(after.keySet == before.keySet && after.values.forall(_.size == 1), after)
+    assert(after("2") == before("2") && after("3") == before("3"), "untouched partitions keep their file")
+    assert(wh.read("t_cl").groupBy($"v").count().as[(Int, Long)].collect().toSet ==
+      Set((1, 2000L), (2, 2000L)))
   }
 
   test("on_schema_change sync_all_columns applies on the log path") {
@@ -216,11 +246,11 @@ class TxLogWarehouseSpec extends SparkSpec {
       Materialization.Snapshot("rk", Scd2Strategy.Timestamp("upd"),
         invalidateHardDeletes = false),
       fileFormat = "delta")
-    def run(ctx: Ctx, m: Model) = new DagRunner(Seq(m))
-      .materialize(ctx.copy(vars = ctx.vars + ("run_ts" -> "2025-01-01 00:00:00")), m)
-    run(pq, model(3, "")); run(lg, model(3, ""))
+    def run(ctx: Ctx, m: Model) =
+      materialize(ctx.copy(vars = ctx.vars + ("run_ts" -> "2025-01-01 00:00:00")), m)
+    run(pq, model(3, "").copy(fileFormat = "parquet")); run(lg, model(3, ""))
     // second advance: changed payloads close old rows and open new ones
-    run(pq, model(4, "!")); run(lg, model(4, "!"))
+    run(pq, model(4, "!").copy(fileFormat = "parquet")); run(lg, model(4, "!"))
     assertParity(pq, lg, "t_snap")
     val t = Paths.get(lg.warehouse.tablePath("t_snap"))
     val hist = TxLog.history(t)
@@ -231,13 +261,20 @@ class TxLogWarehouseSpec extends SparkSpec {
     assert(lg.warehouse.read("t_snap").filter($"dbt_valid_to".isNotNull).count() > 0)
   }
 
-  test("parquet-declared models never touch the log even when enabled") {
-    val (_, lg) = ctxPair()
-    val m = Model("t_pq",
-      c => c.source("default", "region").select($"r_regionkey"),
-      Materialization.Table(), fileFormat = "parquet")
-    new DagRunner(Seq(m)).materialize(lg, m)
-    assert(!lg.warehouse.isLogBacked("t_pq"))
-    assert(sortedRows(lg.warehouse.read("t_pq")).size == 5)
+  test("a model's file_format and keyed merge pick its table format") {
+    val (_, ctx) = ctxPair() // each model's declaration alone picks its format
+    def region = ctx.source("default", "region").select($"r_regionkey", $"r_name")
+    val models = Seq(
+      Model("t_pq", _ => region, Materialization.Table(), fileFormat = "parquet"),
+      Model("t_delta_ap", _ => region, Materialization.IncrementalAppend(), fileFormat = "delta"),
+      Model("t_pq_merge", _ => region,
+        Materialization.IncrementalMerge(Seq("r_regionkey")), fileFormat = "parquet"),
+      Model("t_pq_io", _ => region,
+        Materialization.IncrementalInsertOverwrite(Nil), fileFormat = "parquet"))
+    // twice: the first run builds each table, the second writes its increment
+    for (_ <- 1 to 2; m <- models) materialize(ctx, m)
+    assert(models.map(m => m.name -> ctx.warehouse.isLogBacked(m.name)) == Seq(
+      "t_pq" -> false, "t_delta_ap" -> true, "t_pq_merge" -> true, "t_pq_io" -> false))
+    assert(models.map(m => sortedRows(ctx.warehouse.read(m.name)).size) == Seq(5, 10, 5, 5))
   }
 }

@@ -1,8 +1,10 @@
 #!/bin/bash
-# Run graft.CorpusExec with plain java (no sbt lock): lets the parquet and
-# logfmt full-corpus runs execute concurrently. Usage:
+# Run graft.CorpusExec with plain java (no sbt lock): a full-corpus run
+# then goes on while sbt compiles or tests in the same checkout. Usage:
 #   tools/corpus_run.sh [model names...]
-# Env: GRAFT_CORPUS_LOGFMT, GRAFT_CORPUS_DEBUG, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM
+# Env: GRAFT_CORPUS_DIR, GRAFT_CORPUS_DEBUG, GRAFT_CORPUS_COLD,
+#      GRAFT_CORPUS_CACHE_DIR, GRAFT_CORPUS_WAREHOUSE, GRAFT_CHANGED_ONLY,
+#      SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM
 set -eu
 cd "$(dirname "$0")/.."
 if [ ! -d target/scala-2.13/classes ]; then
