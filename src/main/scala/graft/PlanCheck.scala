@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.queries.{CampaignFunnels, GoldOrdersWide, MergeQueries, PipelineQueries, Scd2Queries}
+import graft.queries.{CampaignFunnels, GoldOrdersWide, MergeQueries, PipelineQueries, Scd2Queries,
+  Scratch}
 import graft.runtime._
 
 /** Plan inspector: prints `explain("formatted")` for each named declared
@@ -24,8 +25,7 @@ object PlanCheck {
     val dir = "/root/testdata/sf0.01"
 
     def ctx(vars: Map[String, String], inc: Boolean): Ctx =
-      Ctx(spark, new Warehouse(spark, TempDirs.create("graft_plancheck")),
-        SourceRegistry.overDir(spark, dir), vars = vars, isIncremental = inc)
+      Scratch.ctx(spark, dir, vars).copy(isIncremental = inc)
     // materializeCtes mirrors sqlModel's table-backed path. The incremental
     // body references the existing table via the lookback var only (no
     // {{ this }}), so rendering it against fresh sources is exactly the

@@ -19,12 +19,6 @@ object ScaleProbe {
     val src = "/root/testdata/sf0.1"
     val big = "/tmp/graft_scale"
 
-    def timedEarly(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"SCALE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
-
     // `asof` arg: run ONLY the as-of skew probe. The union+window as-of
     // (ops/AsOfJoin.scala) serializes each key's timeline through one
     // window partition — this measures the partition-skew envelope at

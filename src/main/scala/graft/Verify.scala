@@ -1,5 +1,7 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.json4s.{JObject, JString}
+import graft.runtime.{Json, TempDirs}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,16 +14,13 @@ object Verify {
     val spark = graft.runtime.Dialect.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    def rmDir(d: Path): Unit = if (Files.exists(d)) TempDirs.deleteTree(d)
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         // delete any stale output so a failed query can't pass on old files
-        val dir = java.nio.file.Paths.get(s"$outDir/$name")
-        if (java.nio.file.Files.exists(dir))
-          java.nio.file.Files.walk(dir)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => java.nio.file.Files.delete(p))
+        rmDir(Paths.get(s"$outDir/$name"))
         System.err.println(s"[verify] $name failed: $e")
         e.getStackTrace.take(8).foreach(f => System.err.println(s"[verify]   at $f"))
       }
@@ -30,10 +29,6 @@ object Verify {
     // through its composable formulation, persist it for the driver, and on
     // ANY divergence delete the primary output so the driver's check fails —
     // these queries are machine-checkable even without a DuckDB oracle.
-    def rmDir(d: java.nio.file.Path): Unit =
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.delete(p))
     AltFormulations.alt.filter(q => selected(q._1)).foreach { case (name, fn) =>
       val primaryDir = s"$outDir/$name"
       try {
@@ -53,18 +48,6 @@ object Verify {
       }
     }
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // the `__alt` dual-formulation outputs get the PRIMARY query's genuine
     // DuckDB oracle (not a read-back of our own primary parquet): Verify has
     // already enforced alt == primary in-JVM (exceptAll, primary deleted on
@@ -84,9 +67,9 @@ object Verify {
     // queries: unselected q33/q34/q39/q56 entries would otherwise point the
     // driver at a default-sf stage path never written this JVM while their
     // parquet outputs from a prior full run still exist
-    val json = (SparkEntry.oracleSql.filter(q => selected(q._1)) ++ altOracles)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = (SparkEntry.oracleSql.filter(q => selected(q._1)) ++ altOracles).toList
+      .map { case (k, v) => k -> JString(v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(JObject(json)))
     spark.stop()
   }
 }

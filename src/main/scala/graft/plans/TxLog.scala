@@ -247,9 +247,9 @@ object TxLog {
     // NOTE (guide §6 file layout): stage writes `df` with whatever
     // distribution the caller chose. Unclustered input to a partitioned
     // write means every task writes a sliver into every partition directory
-    // it holds (tasks × partitions files per commit) — the Warehouse write
-    // paths repartition via distributeForWrite; direct TxLog callers must
-    // cluster by the partition columns themselves.
+    // it holds (tasks × partitions files per commit). Every Warehouse write
+    // path but `append` repartitions via distributeForWrite; `append` and
+    // direct TxLog callers write the distribution their caller chose.
     val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
     writer.mode("overwrite").parquet(staging.toString)
     Files.createDirectories(dataDir(table))

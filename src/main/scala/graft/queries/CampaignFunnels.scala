@@ -433,22 +433,15 @@ object CampaignFunnels {
       |FROM pre_final_agg_table""".stripMargin
 
   def q74CampaignFunnels(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_funnels")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("start_date_ymd" -> "2024-01-25"))
-    // materialization read from the model's own {{ config(...) }} block
-    val model = SqlTemplater.sqlModelAuto("campaign_funnels", modelSql)
-    val dag = new DagRunner(Seq(model))
-    val r1 = dag.run(ctx)
-    val r2 = dag.run(ctx) // incremental: 10-day lookback partitions overwritten
-    (r1 ++ r2).collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    val dup = SingularTests.run(ctx, Seq(SingularTest("funnels_dup", c =>
+    val dup = SingularTest("funnels_dup", c =>
       c.ref("campaign_funnels")
         .groupBy(col("event_date"), col("platform"), col("funnel_name"))
-        .agg(count(lit(1)).as("n")).where(col("n") > 1)))).filterNot(_.passed)
-    if (dup.nonEmpty) throw new RuntimeException(s"dup test failed: $dup")
-    ctx.ref("campaign_funnels")
+        .agg(count(lit(1)).as("n")).where(col("n") > 1))
+    // materialization read from the model's own {{ config(...) }} block;
+    // run 2 is incremental: 10-day lookback partitions overwritten
+    Scratch.run(Scratch.ctx(spark, dir, vars = Map("start_date_ymd" -> "2024-01-25")),
+      Seq(SqlTemplater.sqlModelAuto("campaign_funnels", modelSql)), runs = 2,
+      tests = Seq(dup)).ref("campaign_funnels")
   }
 
   val q74Oracle: String =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TimeFunctions
-import graft.runtime.{Ctx, SourceRegistry, SqlTemplater, Warehouse}
+import graft.runtime.SqlTemplater
 
 /** Remaining SURVEY.md §2 inventory items: predicate forms (§2.2), RIGHT
   * JOIN (§2.3), INLINE / *_OUTER generators / EXPLODE(MAP_VALUES) (§2.6),
@@ -231,9 +231,6 @@ object CoverageQueries {
     * near-verbatim surface a reference user would port (SURVEY.md §7
     * `sqlfront`). Full run then incremental run, like production. */
   def q47SqlTextModel(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_sqlmodel")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("min_value" -> "10.0"))
     val sql =
       """SELECT user_id,
         |  to_date(millis_to_ts_msk(ts_ns div 1000000)) AS msk_date,
@@ -248,9 +245,8 @@ object CoverageQueries {
     val model = SqlTemplater.sqlModel("daily_last_event",
       s"SELECT user_id, msk_date, event_type, value FROM ($sql) WHERE qualify_rn = 1",
       graft.runtime.Materialization.IncrementalInsertOverwrite(Seq("msk_date")))
-    val dag = new graft.runtime.DagRunner(Seq(model))
-    dag.run(ctx); dag.run(ctx)
-    ctx.ref("daily_last_event")
+    Scratch.run(Scratch.ctx(spark, dir, vars = Map("min_value" -> "10.0")), Seq(model), runs = 2)
+      .ref("daily_last_event")
       .select(col("user_id"), date_format(col("msk_date"), "yyyy-MM-dd").as("msk_date"),
         col("event_type"), col("value"))
   }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
 import graft.runtime._
 
 /** The largest-model port: a ~230-line multi-CTE SQL-text model in the exact
@@ -343,22 +342,13 @@ object GoldOrdersWide {
       |FROM orders_ext7""".stripMargin
 
   def q72OrdersWide(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_goldwide")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("start_date_ymd" -> "2001-06-01"))
     // materialization (incremental insert_overwrite by order_month,
-    // sync_all_columns) read from the model's own {{ config(...) }} block
-    val model = SqlTemplater.sqlModelAuto("gold_orders_wide", modelSql)
-    val dag = new DagRunner(Seq(model))
-    val r1 = dag.run(ctx)
-    val r2 = dag.run(ctx) // incremental: 200-day lookback months overwritten in place
-    (r1 ++ r2).collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    val dup = SingularTests.run(ctx, Seq(SingularTest("orders_wide_dup", c =>
-      c.ref("gold_orders_wide").groupBy(col("order_id")).agg(count(lit(1)).as("n"))
-        .where(col("n") > 1)))).filterNot(_.passed)
-    if (dup.nonEmpty) throw new RuntimeException(s"dup test failed: $dup")
-    ctx.ref("gold_orders_wide")
+    // sync_all_columns) read from the model's own {{ config(...) }} block;
+    // run 2 is incremental: 200-day lookback months overwritten in place
+    Scratch.run(Scratch.ctx(spark, dir, vars = Map("start_date_ymd" -> "2001-06-01")),
+      Seq(SqlTemplater.sqlModelAuto("gold_orders_wide", modelSql)), runs = 2,
+      tests = Seq(GenericTests.unique("gold_orders_wide", "order_id")))
+      .ref("gold_orders_wide")
   }
 
   val q72Oracle: String =

@@ -254,8 +254,7 @@ object JoinQueries {
     * ScaleSpec; the reference's hand-bucketed theta joins, SURVEY.md §4) and
     * the result must equal the plain SQL join. */
   def q67BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_bucket")
-    val wh = new graft.runtime.Warehouse(spark, whDir)
+    val wh = Scratch.ctx(spark, dir).warehouse
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"))
     val li = Tables(spark, dir, "lineitem")

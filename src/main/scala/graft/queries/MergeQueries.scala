@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.runtime._
 
 /** incremental_strategy='merge' on the oracle gate — the upsert semantics
@@ -63,15 +62,9 @@ object MergeQueries {
       |GROUP BY 1, 2""".stripMargin
 
   def q76IncrementalMerge(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_merge")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("cutoff_ymd" -> "1998-01-01"))
-    val model = SqlTemplater.sqlModelAuto("customer_profile_merge", modelSql)
-    val dag = new DagRunner(Seq(model))
-    val rs = dag.run(ctx) ++ dag.run(ctx)
-    rs.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("customer_profile_merge")
+    Scratch.run(Scratch.ctx(spark, dir, vars = Map("cutoff_ymd" -> "1998-01-01")),
+      Seq(SqlTemplater.sqlModelAuto("customer_profile_merge", modelSql)), runs = 2)
+      .ref("customer_profile_merge")
   }
 
   val q76Oracle: String =

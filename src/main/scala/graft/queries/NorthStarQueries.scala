@@ -16,6 +16,31 @@ import graft.ops.{Dedup, Similarity}
   */
 object NorthStarQueries {
 
+  /** The parquet stage through which an oracle-gated sketch query (q33, q34,
+    * q39, q56) hands its Spark-side intermediate to its DuckDB replay. The
+    * path is keyed by the DATA DIR, so runs at different scale factors never
+    * race on it, and [[write]] records it in the sys prop `graft.<query>.stage`,
+    * so the oracle (dumped by Verify AFTER the query ran, same JVM) names
+    * exactly the stage this run wrote: a stale or clobbered stage cannot be
+    * silently verified. With no run in this JVM the oracle reads sf0.01's. */
+  private[graft] final class OracleStage(query: String, what: String) {
+    private val prop = s"graft.$query.stage"
+
+    def path(dir: String): String =
+      s"/tmp/graft_oracle_stage/${query}_${what}_" +
+        dir.replaceAll("[^A-Za-z0-9]+", "_") + ".parquet"
+
+    /** Stage `df` for data dir `dir` and read it back. */
+    def write(df: DataFrame, dir: String): DataFrame = {
+      val stage = path(dir)
+      sys.props(prop) = stage
+      df.write.mode("overwrite").parquet(stage)
+      df.sparkSession.read.parquet(stage)
+    }
+
+    def oraclePath: String = sys.props.getOrElse(prop, path("/root/testdata/sf0.01"))
+  }
+
   /** Exact dedup verdict per document: keep_id = min doc_id sharing the same
     * content; is_dup marks members of multi-doc groups (non-representative). */
   def q31DedupExact(spark: SparkSession, dir: String): DataFrame = {
@@ -104,19 +129,14 @@ object NorthStarQueries {
     * the exact-Jaccard verification recomputed from raw text. Only the
     * signature hash itself stays un-oracled (it keeps the dual-formulation
     * gate: AltFormulations runs the composable aggregate signature). */
-  def q33StagePath(dir: String): String =
-    "/tmp/graft_oracle_stage/q33_minhash_" +
-      dir.replaceAll("[^A-Za-z0-9]+", "_") + ".parquet"
+  private[graft] val q33Stage = new OracleStage("q33", "minhash")
 
   def q33MinhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir, "documents")
     graft.functions.TextExpressions.register(spark)
     val sig = docs.select(col("doc_id").as("id"),
       graft.functions.TextExpressions.minhashSig(col("text"), 3, 32).as("sig"))
-    val stage = q33StagePath(dir)
-    sys.props("graft.q33.stage") = stage
-    sig.write.mode("overwrite").parquet(stage)
-    Dedup.minhashLshFromSigs(docs, spark.read.parquet(stage), "doc_id", "text",
+    Dedup.minhashLshFromSigs(docs, q33Stage.write(sig, dir), "doc_id", "text",
       shingleSize = 3, numHashes = 32, bands = 8, threshold = 0.5)
   }
 
@@ -125,8 +145,7 @@ object NorthStarQueries {
     * groups by the slice values; verification recomputes exact Jaccard from
     * raw text with the q32 oracle's shingle CTEs. */
   def q33Oracle: String = {
-    val stage = sys.props.getOrElse("graft.q33.stage",
-      q33StagePath("/root/testdata/sf0.01"))
+    val stage = q33Stage.oraclePath
     s"""WITH sig AS (
       |  SELECT s.id, s.sig
       |  FROM read_parquet('$stage/*.parquet') AS s
@@ -162,34 +181,22 @@ object NorthStarQueries {
   /** SimHash chunk-banded near-dup pairs, ORACLE-GATED: the Spark-side
     * signatures are staged as parquet and [[q34Oracle]] replays the whole
     * band→join→xor→popcount→radius stage in DuckDB over them — everything
-    * but the signature hash itself is hash-compared. The stage path is
-    * keyed by the DATA DIR, so runs at different scale factors never race
-    * on the stage, and the oracle (dumped by Verify AFTER the query ran,
-    * same JVM) names exactly the stage this run wrote via a sys prop —
-    * a stale or clobbered stage cannot be silently verified. */
-  def q34StagePath(dir: String): String =
-    "/tmp/graft_oracle_stage/q34_simhash_" +
-      dir.replaceAll("[^A-Za-z0-9]+", "_") + ".parquet"
+    * but the signature hash itself is hash-compared (see [[OracleStage]]). */
+  private[graft] val q34Stage = new OracleStage("q34", "simhash")
 
   def q34SimhashNearDup(spark: SparkSession, dir: String): DataFrame = {
     val sig = Dedup.simhash(Tables(spark, dir, "documents"), "doc_id", "text")
-    val stage = q34StagePath(dir)
-    sys.props("graft.q34.stage") = stage
-    sig.write.mode("overwrite").parquet(stage)
-    Dedup.simhashNearDupFromSigs(spark.read.parquet(stage), maxHamming = 6)
+    Dedup.simhashNearDupFromSigs(q34Stage.write(sig, dir), maxHamming = 6)
   }
 
   /** DuckDB replay of the banding from the STAGED Spark signatures. The
     * chunk extraction ((simhash >> o) & m) is shift-flavor-proof: the mask
     * never reaches the sign-extended bits, so DuckDB's arithmetic shift and
     * Spark's shiftrightunsigned agree. Offsets/masks = maxHamming 6 →
-    * 7 chunks of widths 9×6+10 (k*64/7 boundaries). The stage path is the
-    * one [[q34SimhashNearDup]] recorded when IT ran (per-data-dir, threaded
-    * through a sys prop): a concurrent run at another scale factor writes a
-    * different path, and the documents join additionally pins the id set. */
+    * 7 chunks of widths 9×6+10 (k*64/7 boundaries). The documents join
+    * additionally pins the id set. */
   def q34Oracle: String = {
-    val stage = sys.props.getOrElse("graft.q34.stage",
-      q34StagePath("/root/testdata/sf0.01"))
+    val stage = q34Stage.oraclePath
     s"""WITH sig AS (
       |  SELECT s.id, s.simhash
       |  FROM read_parquet('$stage/*.parquet') AS s
@@ -338,19 +345,14 @@ object NorthStarQueries {
     * sort), 2-probe query assignment, cell-join scoring, and the
     * (cos DESC, neighbor_id) top-k — so only the k-means TRAINING stays
     * un-oracled (it keeps the composable-dot dual gate + recall floors). */
-  def q39StagePath(dir: String): String =
-    "/tmp/graft_oracle_stage/q39_centroids_" +
-      dir.replaceAll("[^A-Za-z0-9]+", "_") + ".parquet"
+  private[graft] val q39Stage = new OracleStage("q39", "centroids")
 
   def q39AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val cents = Similarity.kmeansOnSample(e,
       e.filter(col("vec_id") % 31 === 0).limit(16), sampleSize = 1024, iters = 25)
-    val stage = q39StagePath(dir)
-    sys.props("graft.q39.stage") = stage
-    cents.write.mode("overwrite").parquet(stage)
     Similarity.ivfTopK(e, e.filter(col("vec_id") < 10),
-      spark.read.parquet(stage), k = 5, nProbe = 2)
+      q39Stage.write(cents, dir), k = 5, nProbe = 2)
   }
 
   /** MARGIN ASSUMPTION: this replay recomputes cosines with DuckDB's
@@ -362,8 +364,7 @@ object NorthStarQueries {
     * fails below 1e-9, so a testdata regeneration that created a near-tie
     * turns up as a named spec failure, not an oracle flake. */
   def q39Oracle: String = {
-    val stage = sys.props.getOrElse("graft.q39.stage",
-      q39StagePath("/root/testdata/sf0.01"))
+    val stage = q39Stage.oraclePath
     s"""WITH cents AS (
       |  SELECT vec_id AS cent_id, embedding AS cv
       |  FROM read_parquet('$stage/*.parquet')),
@@ -417,22 +418,16 @@ object NorthStarQueries {
     * sign buckets are staged (per-data-dir path) and [[q56Oracle]] replays
     * the bucket self-join, pair dedup, and cosine verify in DuckDB — only
     * the hyperplane projection stays un-oracled (composable-dot dual gate). */
-  def q56StagePath(dir: String): String =
-    "/tmp/graft_oracle_stage/q56_signbuckets_" +
-      dir.replaceAll("[^A-Za-z0-9]+", "_") + ".parquet"
+  private[graft] val q56Stage = new OracleStage("q56", "signbuckets")
 
   def q56AnnLshNearDup(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     val sigs = Similarity.signBuckets(e, nBits = 4, tables = 8)
-    val stage = q56StagePath(dir)
-    sys.props("graft.q56.stage") = stage
-    sigs.write.mode("overwrite").parquet(stage)
-    Similarity.signBucketNearDupFromBuckets(e, spark.read.parquet(stage), 0.35)
+    Similarity.signBucketNearDupFromBuckets(e, q56Stage.write(sigs, dir), 0.35)
   }
 
   def q56Oracle: String = {
-    val stage = sys.props.getOrElse("graft.q56.stage",
-      q56StagePath("/root/testdata/sf0.01"))
+    val stage = q56Stage.oraclePath
     s"""WITH bk AS (
       |  SELECT s.id, s.t, s.b
       |  FROM read_parquet('$stage/*.parquet') AS s

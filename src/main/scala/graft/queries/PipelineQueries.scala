@@ -68,29 +68,14 @@ object PipelineQueries {
   }
 
   def q30GoldOrdersPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_pipeline")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("start_date_ymd" -> "2001-06-01"))
-
     val stg = Model("stg_orders", q30StgBody, Materialization.View)
-
     val gold = Model("gold_orders", q30GoldBody,
       Materialization.IncrementalInsertOverwrite(Seq("order_month")),
       deps = Seq("stg_orders"))
-
-    val dag = new DagRunner(Seq(stg, gold))
-    val r1 = dag.run(ctx)
-    val r2 = dag.run(ctx) // incremental: 6-month lookback, dynamic overwrite
-    (r1 ++ r2).collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"pipeline model $n failed: $e") }
-
-    val dupTest = SingularTest("gold_orders_dup_check", c =>
-      c.ref("gold_orders").groupBy(col("o_orderkey")).agg(count(lit(1)).as("n"))
-        .where(col("n") > 1))
-    val failures = SingularTests.run(ctx, Seq(dupTest)).filterNot(_.passed)
-    if (failures.nonEmpty) throw new RuntimeException(s"singular tests failed: $failures")
-
-    ctx.ref("gold_orders")
+    // run 2 is incremental: 6-month lookback, dynamic overwrite
+    Scratch.run(Scratch.ctx(spark, dir, vars = Map("start_date_ymd" -> "2001-06-01")),
+      Seq(stg, gold), runs = 2, tests = Seq(GenericTests.unique("gold_orders", "o_orderkey")))
+      .ref("gold_orders")
       .select("o_orderkey", "order_month", "c_mktsegment", "n_name", "n_items", "revenue")
   }
 
@@ -147,8 +132,6 @@ object PipelineQueries {
   }
 
   def q62AppendOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_append")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
     val cutoff = q62Cutoff
     def monthCol = q62MonthCol
 
@@ -166,12 +149,7 @@ object PipelineQueries {
     val factCells = Model("fact_cells", q62CellsBody,
       Materialization.IncrementalInsertOverwrite(Seq("table_name", "partition_date")))
 
-    val dag = new DagRunner(Seq(factUpdates, factCells))
-    val r1 = dag.run(ctx)
-    val r2 = dag.run(ctx)
-    (r1 ++ r2).collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"pipeline model $n failed: $e") }
-
+    val ctx = Scratch.run(Scratch.ctx(spark, dir), Seq(factUpdates, factCells), runs = 2)
     ctx.ref("fact_cells")
       .join(ctx.ref("fact_updates"), Seq("table_name", "partition_date"), "left")
       .select(col("table_name"), col("partition_date"), col("metric"),
@@ -208,8 +186,7 @@ object PipelineQueries {
     * into the warehouse, then joined to nation/customer; the oracle inlines
     * the same static rows as VALUES — a seed IS literal config data. */
   def q65SeedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_seed")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
+    val ctx = Scratch.ctx(spark, dir)
     val schema = org.apache.spark.sql.types.StructType(
       Seq("country_code", "country_name", "region_name", "nation_name").map(n =>
         org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
@@ -245,8 +222,6 @@ object PipelineQueries {
     * grows, and partitions written before the change read NULL revenue —
     * which is exactly the closed form the oracle states. */
   def q66SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_evolve")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
     val cutoff = "1997-01"
     val model = Model("orders_monthly",
       c => {
@@ -262,11 +237,8 @@ object PipelineQueries {
       },
       Materialization.IncrementalInsertOverwrite(Seq("order_month"),
         OnSchemaChange.AppendNewColumns))
-    val dag = new DagRunner(Seq(model))
-    val rs = dag.run(ctx) ++ dag.run(ctx)
-    rs.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("orders_monthly").select(col("order_month"), col("n_orders"), col("revenue"))
+    Scratch.run(Scratch.ctx(spark, dir), Seq(model), runs = 2).ref("orders_monthly")
+      .select(col("order_month"), col("n_orders"), col("revenue"))
   }
 
   val q66Oracle: String =

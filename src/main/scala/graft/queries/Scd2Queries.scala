@@ -38,8 +38,7 @@ object Scd2Queries {
   }
 
   def q53Scd2Pipeline(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_scd2")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
+    val ctx = Scratch.ctx(spark, dir)
     val orders = Tables(spark, dir, "orders")
     val strat = Scd2Strategy.Timestamp("updated_at")
     Scd2.snapshot(ctx, "cust_scd2", stateAsOf(orders, Some("1998-01-01")),
@@ -65,8 +64,7 @@ object Scd2Queries {
     * valid_from/to are the run timestamps (not data timestamps), which is the
     * strategy's defining difference from `timestamp`. */
   def q60Scd2Check(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_scd2chk")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
+    val ctx = Scratch.ctx(spark, dir)
     val orders = Tables(spark, dir, "orders")
     val building = Tables(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
@@ -105,8 +103,7 @@ object Scd2Queries {
     * is what the closed-form DuckDB oracle reconstructs; only buckets holding
     * changed/new/deleted keys were rewritten along the way. */
   def q73Scd2Bucketed(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_scd2bkt")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
+    val ctx = Scratch.ctx(spark, dir)
     val orders = Tables(spark, dir, "orders")
     val building = Tables(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
@@ -207,26 +204,18 @@ object Scd2Queries {
       |{% endsnapshot %}""".stripMargin
 
   def q80SnapshotFile(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_scd2file")
-    val wh = new Warehouse(spark, whDir)
     val model = SqlTemplater.snapshotModel(snapshotFileSql)
     require(model.materialization == Materialization.Snapshot(
       "_id", Scd2Strategy.Timestamp("updated_at")), model.materialization.toString)
-    def run(cutoff: String, runTs: String): Ctx = {
-      val ctx = Ctx(spark, wh, SourceRegistry.overDir(spark, dir),
-        vars = Map("cutoff_ymd" -> cutoff, "run_ts" -> runTs))
-      val res = new DagRunner(Seq(model)).run(ctx)
-      res.collect { case (n, RunStatus.Failed(e)) =>
-        throw new RuntimeException(s"snapshot $n failed: $e") }
-      ctx
-    }
-    run("1998-01-01", "1998-01-02 00:00:00")
-    val ctx = run("9999-12-31", "2002-01-01 00:00:00")
-    ctx.ref("cust_scd2_file").select(
-      col("_id"), col("status"), col("last_price"),
-      date_format(col("updated_at"), "yyyy-MM-dd").as("updated_at"),
-      date_format(col("dbt_valid_from"), "yyyy-MM-dd").as("valid_from"),
-      coalesce(date_format(col("dbt_valid_to"), "yyyy-MM-dd"), lit("open")).as("valid_to"))
+    def vars(cutoff: String, runTs: String) = Map("cutoff_ymd" -> cutoff, "run_ts" -> runTs)
+    val day1 = Scratch.run(
+      Scratch.ctx(spark, dir, vars("1998-01-01", "1998-01-02 00:00:00")), Seq(model))
+    Scratch.run(day1.copy(vars = vars("9999-12-31", "2002-01-01 00:00:00")), Seq(model))
+      .ref("cust_scd2_file").select(
+        col("_id"), col("status"), col("last_price"),
+        date_format(col("updated_at"), "yyyy-MM-dd").as("updated_at"),
+        date_format(col("dbt_valid_from"), "yyyy-MM-dd").as("valid_from"),
+        coalesce(date_format(col("dbt_valid_to"), "yyyy-MM-dd"), lit("open")).as("valid_to"))
   }
 
   val q53Oracle: String =

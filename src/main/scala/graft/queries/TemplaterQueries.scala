@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.runtime._
+import graft.runtime.SqlTemplater
 
 /** A real reference model body run near-verbatim through the SQL templater —
   * the session CTE chain of models/spark/onfy/onfy_sessions.sql:120-199
@@ -114,14 +114,9 @@ object TemplaterQueries {
       |DISTRIBUTE BY session_start_date""".stripMargin
 
   def q59OnfySessions(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_templater")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      macros = SqlTemplater.parseMacros(macroDefs))
-    val model = SqlTemplater.sqlModel("onfy_sessions", modelSql)
-    val statuses = new DagRunner(Seq(model)).run(ctx)
-    statuses.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("onfy_sessions")
+    val ctx = Scratch.ctx(spark, dir, macros = SqlTemplater.parseMacros(macroDefs))
+    Scratch.run(ctx, Seq(SqlTemplater.sqlModel("onfy_sessions", modelSql)))
+      .ref("onfy_sessions")
   }
 
   /** The reference's single most load-bearing aggregate idiom — a block of
@@ -199,13 +194,8 @@ object TemplaterQueries {
       |DISTRIBUTE BY payment_dt""".stripMargin
 
   def q68FunnelRank(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_templater3")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
-    val model = SqlTemplater.sqlModel("funnel_rank", funnelRankSql)
-    val statuses = new DagRunner(Seq(model)).run(ctx)
-    statuses.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("funnel_rank")
+    Scratch.run(Scratch.ctx(spark, dir),
+      Seq(SqlTemplater.sqlModel("funnel_rank", funnelRankSql))).ref("funnel_rank")
   }
 
   val q68Oracle: String =
@@ -220,13 +210,8 @@ object TemplaterQueries {
       |QUALIFY rnk_session_payment = 1""".stripMargin
 
   def q63ActiveDevices(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_templater2")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
-    val model = SqlTemplater.sqlModel("active_devices", activeDevicesSql)
-    val statuses = new DagRunner(Seq(model)).run(ctx)
-    statuses.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("active_devices")
+    Scratch.run(Scratch.ctx(spark, dir),
+      Seq(SqlTemplater.sqlModel("active_devices", activeDevicesSql))).ref("active_devices")
   }
 
   val q63Oracle: String =
@@ -268,13 +253,8 @@ object TemplaterQueries {
       |GROUP BY o_orderpriority""".stripMargin
 
   def q71StatusMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_templater4")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir))
-    val model = SqlTemplater.sqlModel("status_matrix", statusMatrixSql)
-    val statuses = new DagRunner(Seq(model)).run(ctx)
-    statuses.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("status_matrix")
+    Scratch.run(Scratch.ctx(spark, dir),
+      Seq(SqlTemplater.sqlModel("status_matrix", statusMatrixSql))).ref("status_matrix")
   }
 
   val q71Oracle: String =
@@ -350,14 +330,9 @@ object TemplaterQueries {
       |GROUP BY user_id""".stripMargin
 
   def q78EventMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val whDir = graft.runtime.TempDirs.create("graft_templater5")
-    val ctx = Ctx(spark, new Warehouse(spark, whDir), SourceRegistry.overDir(spark, dir),
-      vars = Map("event_types" -> "view,click,purchase"))
-    val model = SqlTemplater.sqlModelAuto("event_matrix", eventMatrixSql)
-    val statuses = new DagRunner(Seq(model)).run(ctx)
-    statuses.collect { case (n, RunStatus.Failed(e)) =>
-      throw new RuntimeException(s"model $n failed: $e") }
-    ctx.ref("event_matrix")
+    val ctx = Scratch.ctx(spark, dir, vars = Map("event_types" -> "view,click,purchase"))
+    Scratch.run(ctx, Seq(SqlTemplater.sqlModelAuto("event_matrix", eventMatrixSql)))
+      .ref("event_matrix")
   }
 
   val q78Oracle: String =

@@ -640,45 +640,6 @@ object CorpusExecute {
       .coalesce(1).write.mode("overwrite").parquet(path.toString)
   }
 
-  /** Seed a fresh Synth from a saved cache; returns false (and leaves the
-    * Synth cold) on any read problem. The cache is a HEAD START, never a
-    * correctness input: a stale or partial seed is simply re-negotiated by
-    * the same error-driven loop that built it. */
-  def loadCache(synth: Synth, path: Path): Boolean = try {
-    val rows = synth.spark.read.parquet(path.toString)
-      .collect().sortBy(_.getAs[Long]("seq"))
-    for (r <- rows) {
-      val key = (r.getAs[String]("db"), r.getAs[String]("tbl"))
-      val name = r.getAs[String]("name")
-      r.getAs[String]("kind") match {
-        case "schema" => DataType.fromJson(r.getAs[String]("dt")) match {
-          case st: StructType => synth.schemas(key) = st
-          case _ =>
-        }
-        case "tombstone" =>
-          synth.tombstones += ((key, name))
-          val owner = r.getAs[String]("node")
-          if (owner != null && owner.nonEmpty) synth.tombstoneOwner((key, name)) = owner
-        case "pinned" =>
-          synth.pinned((key, name)) = r.getAs[String]("node")
-          val po = r.getAs[String]("dt")
-          if (po != null && po.nonEmpty) synth.pinOwner((key, name)) = po
-        case "rawkey" => synth.rawCatalogKeys += key; synth.dirtyCatalog += key
-        case "overlay" =>
-          val m = synth.overlays.getOrElseUpdate(
-            (r.getAs[String]("node"), key), mutable.LinkedHashMap.empty)
-          m(name.split(overlaySep).toSeq) = DataType.fromJson(r.getAs[String]("dt"))
-        case _ =>
-      }
-    }
-    synth.flushCatalog() // raw-catalog tables exist before the first analysis
-    true
-  } catch { case scala.util.control.NonFatal(e) =>
-    System.err.println(s"[corpus] warm-start load failed (running cold): " +
-      String.valueOf(e.getMessage).take(160))
-    false
-  }
-
   /** Incremental warm start: seed `synth` from a cache written for a PRIOR
     * VERSION of the corpus, invalidating only the negotiation state owned by
     * changed nodes and their downstream closure. This is the reference's own
@@ -716,9 +677,10 @@ object CorpusExecute {
     * Returns Some((changedNodes, invalidatedClosure)) when the cache was
     * usable (possibly with zero changes = plain full warm start); None when
     * the caller must run cold (missing/legacy cache, env change — macros,
-    * seeds, vars or mode — or any read problem). Like loadCache, the seed is
-    * a head start, never a correctness input: over-invalidation only costs
-    * re-discovery iterations.
+    * seeds, vars or mode — or any read problem). The seed is a head start,
+    * never a correctness input: a stale or partial seed is re-negotiated by
+    * the same error-driven loop that built it, and over-invalidation only
+    * costs re-discovery iterations.
     */
   def loadCacheIncremental(synth: Synth, path: Path,
                            currentNodeHashes: Map[String, String],

@@ -31,7 +31,6 @@ final case class Ctx(
   def varOr(k: String, default: String): String = vars.getOrElse(k, default)
 
   def startDate: String = varOr("start_date_ymd", "1970-01-01")
-  def endDate: String = varOr("end_date_ymd", "2999-12-31")
 }
 
 /** External-source resolution (reference: ~276 source tables declared in 3

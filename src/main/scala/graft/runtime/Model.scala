@@ -36,8 +36,9 @@ object Materialization {
     * macros/spark_adapter_patch/create_table.sql:29-34; dbt-spark
     * incremental_strategy='merge' + unique_key on delta relations).
     * A keyed merge always writes the transaction log, at file granularity
-    * ([[Warehouse.mergeUpsert]]). */
-  /** @param incrementPartitionsOnly dbt incremental_predicates analogue:
+    * ([[Warehouse.mergeUpsert]]).
+    *
+    * @param incrementPartitionsOnly dbt incremental_predicates analogue:
     *   skip the whole-table matched-key probe and rewrite only the
     *   increment's partitions (valid when keys never change partition). */
   final case class IncrementalMerge(

@@ -477,7 +477,9 @@ object SqlTemplater {
 
   /** dbt config → engine [[Materialization]] (default 'view', like dbt).
     * `incremental_strategy` defaults to 'merge' for delta relations in
-    * dbt-spark; file_format is irrelevant here (everything is parquet). */
+    * dbt-spark. `file_format` is not read here: it rides on the [[Model]],
+    * and [[Warehouse.routeFormat]] writes a 'delta' model to the
+    * transaction log. */
   def materializationFromConfig(cfg: Map[String, Jinja.V]): Materialization = {
     def str(k: String): Option[String] = cfg.get(k).map(_.render)
     def strList(k: String): Seq[String] = cfg.get(k).map {

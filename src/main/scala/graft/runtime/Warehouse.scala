@@ -18,10 +18,12 @@ import org.json4s.{JObject, JString}
   * `on_schema_change` policies (sync/append/ignore) work over immutable
   * parquet files: reads apply it, null-filling dropped/added columns.
   *
-  * Scale note: all writes `repartition` on the partition columns first —
-  * the automatic equivalent of the reference's 28 hand-written
-  * `DISTRIBUTE BY` sites (SURVEY.md §4) — so each output partition is
-  * written by few tasks and small-file explosion is avoided.
+  * Scale note: every partitioned write but [[append]] `repartition`s on the
+  * partition columns first — the automatic equivalent of the reference's 28
+  * hand-written `DISTRIBUTE BY` sites (SURVEY.md §4) — so each output
+  * partition is written by few tasks and small-file explosion is avoided.
+  * `append` writes its frame with the distribution the caller gave it, and
+  * a table build with `orderBy` range-partitions on its sort keys instead.
   */
 final class Warehouse(val spark: SparkSession, val root: String) {
 
@@ -37,12 +39,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * derived. A built DataFrame captures its upstream tables' file listings
     * (InMemoryFileIndex snapshots at plan-build time), so after ANY table
     * mutation the cached plan may chase deleted part files — re-derive from
-    * the builder instead (true lazy-view semantics). Builder-less entries
-    * (tests registering a literal frame) keep the frame as-is. The plan and
-    * the mutation epoch read BEFORE its builder ran are published together:
-    * a write that ends while the builder runs leaves the entry behind the
+    * the builder instead (true lazy-view semantics). The plan and the
+    * mutation epoch read BEFORE its builder ran are published together: a
+    * write that ends while the builder runs leaves the entry behind the
     * epoch, so the next read re-derives. */
-  private final class ViewEntry(val build: Option[() => DataFrame],
+  private final class ViewEntry(val build: () => DataFrame,
                                 @volatile var derived: (DataFrame, Long))
   private val views = scala.collection.concurrent.TrieMap.empty[String, ViewEntry]
   // AtomicLong, not a @volatile var: DagRunner materializes models in
@@ -64,13 +65,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def tableExists(name: String): Boolean =
     views.contains(name) || Files.exists(Paths.get(tablePath(name)))
 
-  def registerView(name: String, df: DataFrame): Unit =
-    views.put(name, new ViewEntry(None, (df, mutationEpoch)))
-
   /** Register a view with its builder so the plan re-derives after table
     * mutations instead of serving a stale captured file listing. */
   def registerView(name: String, build: () => DataFrame): Unit =
-    views.put(name, new ViewEntry(Some(build), derive(build)))
+    views.put(name, new ViewEntry(build, derive(build)))
 
   private def derive(build: () => DataFrame): (DataFrame, Long) = {
     val epoch = mutationEpoch
@@ -109,7 +107,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * projection, so its partition predicates prune files too. */
   def read(name: String): DataFrame = views.get(name) match {
     case Some(v) =>
-      if (v.derived._2 != mutationEpoch) v.build.foreach(b => v.derived = derive(b))
+      if (v.derived._2 != mutationEpoch) v.derived = derive(v.build)
       v.derived._1
     case None if isLogBacked(name) => readLogCanonical(name)
     case None =>

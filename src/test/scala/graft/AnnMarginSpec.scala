@@ -45,8 +45,8 @@ class AnnMarginSpec extends SparkSpec {
   // change in q39AnnIvf can never leave this spec measuring stale geometry
   // while the oracle uses the new one)
   private lazy val cents: DataFrame = {
-    NorthStarQueries.q39AnnIvf(spark, sfDir) // writes q39StagePath(sfDir)
-    spark.read.parquet(NorthStarQueries.q39StagePath(sfDir))
+    NorthStarQueries.q39AnnIvf(spark, sfDir) // writes q39Stage.path(sfDir)
+    spark.read.parquet(NorthStarQueries.q39Stage.path(sfDir))
       .select(col("vec_id").as("cent_id"), col("embedding").cast("array<double>").as("cv"))
   }
 

@@ -118,10 +118,13 @@ class CorpusExecuteSpec extends SparkSpec {
     assert(a.overlayPatch(k1, Seq("payload", "amount"), DecimalType(18, 2)))
     assert(a.overlayPatch(k1, Seq("payload"), StringType)) // order matters
     val p = java.nio.file.Paths.get("/tmp/graft_cache_spec/synth_test.parquet")
-    CorpusExecute.saveCache(a, p)
+    val hashes = Map("node_x" -> "h1", "some_model" -> "h2")
+    CorpusExecute.saveCache(a, p, hashes, envHash = "env1")
 
+    // the same node hashes and env hash: nothing changed, every row applies
     val b = new CorpusExecute.Synth(spark)
-    assert(CorpusExecute.loadCache(b, p))
+    assert(CorpusExecute.loadCacheIncremental(b, p, hashes, "env1", identity)
+      .contains((Set.empty[String], Set.empty[String])))
     assert(b.schemas.toMap == a.schemas.toMap, "schemas diverged")
     assert(b.tombstones == a.tombstones, "tombstones diverged")
     assert(b.pinned.toMap == a.pinned.toMap, "pinned diverged")
@@ -132,10 +135,11 @@ class CorpusExecuteSpec extends SparkSpec {
     // the raw-catalog table must exist after load (flushCatalog ran)
     assert(spark.catalog.tableExists("`platform`.`events`"),
       "raw-catalog table not re-created on warm load")
-    // corrupted cache => cold start, not a crash
+    // missing cache => cold start, not a crash
     val c = new CorpusExecute.Synth(spark)
-    assert(!CorpusExecute.loadCache(c,
-      java.nio.file.Paths.get("/tmp/graft_cache_spec/nope.parquet")))
+    assert(CorpusExecute.loadCacheIncremental(c,
+      java.nio.file.Paths.get("/tmp/graft_cache_spec/nope.parquet"), hashes, "env1", identity)
+      .isEmpty)
     assert(c.schemas.isEmpty)
   }
 

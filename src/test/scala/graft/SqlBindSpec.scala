@@ -14,7 +14,7 @@ class SqlBindSpec extends SparkSpec {
   private def ctx(views: (String, DataFrame)*): Ctx = {
     val c = Ctx(spark, new Warehouse(spark, TempDirs.create("graft_bind")),
       new SourceRegistry(Some((_, t) => spark.range(0, 10).toDF("id").withColumn("t", lit(t)))))
-    views.foreach { case (n, df) => c.warehouse.registerView(n, df) }
+    views.foreach { case (n, df) => c.warehouse.registerView(n, () => df) }
     c
   }
 
